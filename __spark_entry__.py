@@ -4486,20 +4486,27 @@ WHERE hits > 0 ORDER BY hits DESC, "collation" LIMIT 5
         FROM events WHERE event_id < 500 ORDER BY event_id"""
     from solr_spark.functions.valuesources import geohash_sql, ghhsin_sql
 
+    # the geohashes are bound once as columns and ghhsin decodes the
+    # column references: inlining geohash_sql into ghhsin_sql repeats
+    # it per decoded bit (a 13.8 MB statement DuckDB needs minutes to
+    # bind); the values are the same
     o["func_parsed_v5"] = f"""
         WITH pts AS (
           SELECT c_custkey,
                  (c_custkey * 7919 % 17000) / 100.0 - 85.0 AS lat,
                  (c_custkey * 104729 % 36000) / 100.0 - 180.0 AS lon
-          FROM customer WHERE c_custkey <= 400)
-        SELECT c_custkey,
-               {geohash_sql('lat', 'lon')} AS gh,
-               round({ghhsin_sql(6371.0087714, geohash_sql('lat', 'lon'),
-                                 geohash_sql('40.7', '-74.0'))}, 4)
+          FROM customer WHERE c_custkey <= 400),
+        ghs AS (
+          SELECT c_custkey, lat, lon,
+                 {geohash_sql('lat', 'lon')} AS gh,
+                 {geohash_sql('40.7', '-74.0')} AS gh_ref
+          FROM pts)
+        SELECT c_custkey, gh,
+               round({ghhsin_sql(6371.0087714, 'gh', 'gh_ref')}, 4)
                  AS gh_dist_km,
                round(lon, 4) AS vec_lon,
                round(lat + lon, 4) AS top_sum
-        FROM pts ORDER BY c_custkey"""
+        FROM ghs ORDER BY c_custkey"""
     o["agg_funcs_lineitem"] = """
         SELECT l_returnflag,
                count(*) AS n,

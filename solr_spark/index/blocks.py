@@ -8,7 +8,7 @@ parquet row carrying delta+varint docids, varint tfs, and block-max
 metadata (`max_tf`, `max_tf_part`) for block-max WAND pruning.
 
 Everything here is NumPy-vectorized (no per-value Python in either
-direction); the encoder runs inside `mapInPandas` over partition-sorted
+direction); the encoder runs inside `mapInArrow` over partition-sorted
 postings, the decoder inside the query path.
 """
 
@@ -142,31 +142,28 @@ def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 def make_block_encoder(
     avgdl,
     block_size: int = BLOCK_SIZE,
-    salt_threshold: int | None = None,
-    num_salts: int = 1,
+    *,
+    salt_threshold: int,
+    num_salts: int,
 ):
-    """Returns a mapInArrow function that streams partition-sorted
-    postings (tid, salt, docid, tf, dl_q, bucket; sorted by tid, salt,
-    docid within the partition) into block rows.
+    """Returns a mapInArrow function that streams postings (tid, docid,
+    tf, dl_q, bucket [, fid]) into block rows. Every tid's postings must
+    sit wholly inside one partition, sorted by (tid, docid).
 
-    With `salt_threshold` set, the input needs NO salt column and only
-    (tid, docid) sort order: the encoder derives the head-term salt
-    itself. The builder's layout exchange keys on pure functions of tid,
-    so every tid's postings sit wholly inside one partition and the
-    in-partition group length IS the term's exact df — groups longer
-    than salt_threshold are re-sorted (in numpy, per head group only) to
-    (docid % num_salts, docid) order, reproducing byte-for-byte the
-    blocks the old pre-sorted path emitted. This removes a broadcast
-    join against the head-tid list AND a second full sortWithinPartitions
-    over the postings from the build (guide §2.4: remove shuffles/passes
-    outright; the re-sort touches only the handful of head terms).
+    The encoder derives the head-term salt itself, and this is the one
+    salt rule of the index: a tid run longer than `salt_threshold` is a
+    head term and is salted by `docid % num_salts`. Because a tid never
+    spans partitions, the in-partition run length IS the term's exact
+    (live) df. A head run is re-sorted in numpy to (salt, docid) order;
+    the re-sort touches only the handful of head terms, so the input
+    needs no salt column and no sort beyond (tid, docid).
 
     `avgdl` is a float on single-field indexes. On MULTI-FIELD indexes
     pass a sequence indexed by field ordinal and include a `fid` column
     in the input: tf_part (and hence the block-max metadata) must use
     the posting's FIELD's average length (per-field norms — the Lucene
     per-field similarity). A tid belongs to exactly one (field, term),
-    so fid is constant within every (tid, salt) group.
+    so fid is constant within every tid run.
 
     Fully vectorized across groups AND blocks (round-6): the previous
     per-(tid, salt) Python loop paid ~40 interpreter ops per vocabulary
@@ -178,17 +175,16 @@ def make_block_encoder(
     built zero-copy from the single encode buffer + an offsets array
     (`pa.Array.from_buffers`), never one Python bytes object per block.
 
-    Carries the trailing incomplete (tid, salt) group across Arrow batch
-    boundaries; group keys never span partitions because the input is
-    repartitioned on (tid, salt).
+    Carries the trailing incomplete tid run across Arrow batch
+    boundaries (a head tid must be salted as one unit); runs never span
+    partitions because the input is clustered by tid.
     """
     import pyarrow as pa
 
     avgdl_arr = None if isinstance(avgdl, float) else np.asarray(avgdl, dtype=np.float64)
-    derive_salt = salt_threshold is not None
     in_cols = ["tid", "docid", "tf", "dl_q", "bucket"] + (
-        [] if derive_salt else ["salt"]
-    ) + (["fid"] if avgdl_arr is not None else [])
+        ["fid"] if avgdl_arr is not None else []
+    )
     pa_schema = pa.schema(
         [
             ("tid", pa.int64()), ("salt", pa.int32()),
@@ -204,28 +200,23 @@ def make_block_encoder(
     def emit(cols: dict) -> pa.RecordBatch:
         tids = cols["tid"]
         nrow = tids.size
-        if derive_salt:
-            # tid runs; a run longer than salt_threshold is a head term
-            # (exact df: the layout keys on functions of tid, so a tid
-            # never spans partitions) — reorder its rows to the
-            # (docid % num_salts, docid) order the old pre-sorted path
-            # delivered, then proceed identically.
-            tb = np.concatenate(
-                ([0], np.nonzero(tids[1:] != tids[:-1])[0] + 1, [nrow])
-            )
-            heads = np.nonzero(np.diff(tb) > salt_threshold)[0]
-            salts = np.zeros(nrow, dtype=np.int32)
-            if heads.size:
-                cols = {c: cols[c].copy() for c in in_cols}
-                for gi in heads:
-                    lo, hi = int(tb[gi]), int(tb[gi + 1])
-                    s = (cols["docid"][lo:hi] % num_salts).astype(np.int32)
-                    order = np.lexsort((cols["docid"][lo:hi], s))
-                    for c in in_cols:
-                        cols[c][lo:hi] = cols[c][lo:hi][order]
-                    salts[lo:hi] = s[order]
-        else:
-            salts = cols["salt"]
+        # tid runs; a run longer than salt_threshold is a head term —
+        # reorder its rows to (docid % num_salts, docid) order, then
+        # every (tid, salt) group is a contiguous docid-sorted run
+        tb = np.concatenate(
+            ([0], np.nonzero(tids[1:] != tids[:-1])[0] + 1, [nrow])
+        )
+        heads = np.nonzero(np.diff(tb) > salt_threshold)[0]
+        salts = np.zeros(nrow, dtype=np.int32)
+        if heads.size:
+            cols = {c: cols[c].copy() for c in in_cols}
+            for gi in heads:
+                lo, hi = int(tb[gi]), int(tb[gi + 1])
+                s = (cols["docid"][lo:hi] % num_salts).astype(np.int32)
+                order = np.lexsort((cols["docid"][lo:hi], s))
+                for c in in_cols:
+                    cols[c][lo:hi] = cols[c][lo:hi][order]
+                salts[lo:hi] = s[order]
         change = np.nonzero(
             (tids[1:] != tids[:-1]) | (salts[1:] != salts[:-1])
         )[0] + 1
@@ -303,17 +294,9 @@ def make_block_encoder(
             nrow = cols["tid"].size
             if nrow == 0:
                 continue
-            # hold back the trailing group — it may continue in the next
-            # batch; the input is sorted so it is a suffix (whole tid
-            # when the encoder derives salts itself: a head tid must be
-            # salted as one unit)
-            if derive_salt:
-                last_same = cols["tid"] == cols["tid"][-1]
-            else:
-                last_same = (cols["tid"] == cols["tid"][-1]) & (
-                    cols["salt"] == cols["salt"][-1]
-                )
-            nz = np.nonzero(~last_same)[0]
+            # hold back the trailing tid run — it may continue in the
+            # next batch; the input is sorted so it is a suffix
+            nz = np.nonzero(cols["tid"] != cols["tid"][-1])[0]
             cut = int(nz[-1] + 1) if nz.size else 0
             carry = {c: cols[c][cut:] for c in in_cols}
             if cut > 0:

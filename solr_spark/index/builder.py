@@ -7,7 +7,7 @@ DirectUpdateHandler2.addDoc -> analyzer -> IndexWriter inversion):
     corpus --tokenize (JVM regexp)--> docs(docid, doclen, dl_q, sha256)
            --explode + groupBy------> postings(term, docid, tf, dl_q)
            --groupBy(term)----------> term_stats(term, df, cttf)
-           --sort + mapInPandas-----> blocks (delta+varint, block-max)
+           --sort + mapInArrow------> blocks (delta+varint, block-max)
 
 Scale design points:
 - docid assignment = global sort rank over the unique key
@@ -20,7 +20,9 @@ Scale design points:
 - head terms (df > salt_threshold) are salted into num_salts sub-lists
   (salt = docid % num_salts) so no single task encodes/scans a whole
   head-term posting list (precedent: the "big terms" special case in
-  solr/core/src/java/org/apache/solr/search/facet/UnInvertedField.java:109).
+  solr/core/src/java/org/apache/solr/search/facet/UnInvertedField.java:109);
+  build, expunge and merge all encode through `_encode_blocks`, so this
+  is the index's only salt rule.
 - resumable: with num_chunks > 1 the tokenize+invert phase runs per
   chunk, each committing a staged parquet + a JSON manifest; a restart
   skips finished chunks (analogue of tlog replay,
@@ -49,7 +51,7 @@ from solr_spark.analysis.analyzer import (
 )
 from solr_spark.analysis.porter import porter_stem_col
 from solr_spark.functions.smallfloat import quantize_col
-from solr_spark.index.blocks import BLOCKS_SCHEMA, make_block_encoder
+from solr_spark.index.blocks import BLOCK_SIZE, BLOCKS_SCHEMA, make_block_encoder
 
 DOC_KEY = ("repo", "path", "commit")
 
@@ -138,14 +140,15 @@ def assign_docids(
     """Add a deterministic dense `docid` = global sort rank over `keys`.
 
     Scale-aware two-phase rank over the NARROW key projection only (the
-    wide `content` column never enters the rank shuffle or the Arrow
-    round-trip): range-partition + sort the keys, persist so the counting
-    job and the id job see identical partition boundaries, collect one
-    count per partition, add offset + local index via Arrow-batched
-    mapInPandas, then hash-join the ids back onto the full rows. No
-    single-partition bottleneck anywhere — survives a 1000-executor
-    scale-up. Keys must be unique (enforced upstream) so the rank is
-    run-independent even though range boundaries are sampled.
+    wide `content` column never enters the rank shuffle): range-partition
+    + sort the keys, persist so the counting job and the id job see
+    identical partition boundaries, collect one count per partition, add
+    the partition's offset to its local row index (the low 33 bits of
+    `monotonically_increasing_id`, a pure-JVM expression), then
+    hash-join the ids back onto the full rows. No single-partition
+    bottleneck anywhere — survives a 1000-executor scale-up. Keys must
+    be unique (enforced upstream) so the rank is run-independent even
+    though range boundaries are sampled.
 
     The key sort MUST stay persisted until the caller has materialized
     every consumer of the returned frame (the counting job and the id
@@ -869,7 +872,8 @@ def _postings_from_docs(
     INSIDE the 64-bit key — postings/positions keep the exact single-
     field schema and shuffle width except a 4-byte `fid` ordinal the
     block encoder needs for per-field avgdl (dropped at the parquet
-    write); dl_q carries the FIELD's quantized length (per-field norms).
+    write; `_tid_clustered` re-derives it from the dictionary); dl_q
+    carries the FIELD's quantized length (per-field norms).
     """
     if not fields:
         return (
@@ -969,6 +973,157 @@ def _term_dict_from_docs(
     return tall.distinct().select(
         "field", "term", F.xxhash64(F.col("field"), F.col("term")).alias("tid")
     )
+
+
+def _corpus_stats(
+    docs: DataFrame, fields: list[str] | None
+) -> tuple[int, float, dict | None]:
+    """(n_docs, avgdl, avgdl_by_field) of a docs frame in one aggregate
+    job. `avgdl_by_field` maps each indexed field to its own average
+    length (per-field norms) on multi-field indexes, else None."""
+    agg = docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("doclen").alias("total_len"),
+        *[
+            F.sum(f"doclen_{i}").alias(f"total_len_{i}")
+            for i in range(len(fields or ()))
+        ],
+    ).collect()[0]
+    n = int(agg["n"])
+
+    def avg(col: str) -> float:
+        return float(agg[col]) / n if n else 0.0
+
+    by_field = (
+        {f: avg(f"total_len_{i}") for i, f in enumerate(fields)}
+        if fields
+        else None
+    )
+    return n, avg("total_len"), by_field
+
+
+def _term_stats(
+    postings: DataFrame,
+    term_dict: DataFrame,
+    salt_threshold: int,
+    num_buckets: int,
+    block_meta: DataFrame | None = None,
+) -> DataFrame:
+    """The term dictionary: exact df/cttf per tid aggregated from
+    `postings`, the term string (and field) from `term_dict`, and the
+    block-max fold (mtp, skips) from `_encode_blocks` — null columns
+    when the index has no blocks."""
+    ts = (
+        postings.groupBy("tid")
+        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").cast("long").alias("cttf"))
+        .join(term_dict, "tid")
+        .withColumn("is_head", F.col("df") > F.lit(salt_threshold))
+        .withColumn("bucket", bucket_of_col("term", num_buckets))
+    )
+    if block_meta is not None:
+        return ts.join(block_meta, "tid", "left")
+    return ts.withColumn("mtp", F.lit(None).cast("double")).withColumn(
+        "skips", F.lit(None).cast("array<struct<m:double,nd:int>>")
+    )
+
+
+def _write_term_stats(df: DataFrame, path: str, num_buckets: int) -> None:
+    """Write the dictionary partitioned by its crc32 term bucket, each
+    file sorted by term (row-group pruning on the seek key)."""
+    (
+        df.repartition(max(1, num_buckets // 2), "bucket")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(path)
+    )
+
+
+def _tid_clustered(
+    postings: DataFrame, dictionary: DataFrame, fields: list[str] | None
+) -> DataFrame:
+    """Postings read back from parquet -> the input `_encode_blocks`
+    needs: every tid in one partition (one exchange on tid; a file split
+    can cut a tid's run), sorted by (tid, docid) within the partition.
+
+    On a multi-field index the `fid` ordinal (per-field avgdl in the
+    block-max metadata) is not stored — the postings layout stays
+    field-free — so it is derived here from the dictionary's (tid, field):
+    a tid belongs to exactly one field."""
+    if fields:
+        fid = F.array_position(
+            F.array(*[F.lit(f) for f in fields]), F.col("field")
+        ) - F.lit(1)
+        postings = postings.join(
+            dictionary.select("tid", fid.cast("int").alias("fid")), "tid"
+        )
+    parts = int(postings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return postings.repartition(parts, "tid").sortWithinPartitions("tid", "docid")
+
+
+def _encode_blocks(
+    postings: DataFrame, out_path: str, meta: dict, block_size: int = BLOCK_SIZE
+) -> DataFrame:
+    """The index's one block-encode path — build, expunge and merge.
+
+    `postings` must be clustered by tid and sorted by (tid, docid) within
+    each partition, with a `fid` column on multi-field indexes (the laid
+    build cache, or `_tid_clustered`). Encodes with the one salt rule of
+    `make_block_encoder` and the index's avgdl (per field when `meta`
+    has `fields`), writes the blocks to `out_path` in the bucketed
+    layout, and returns the per-term block-max fold (tid, mtp, skips)
+    the dictionary carries."""
+    fields = meta.get("fields")
+    avgdl = (
+        [float(meta["avgdl_by_field"][f]) for f in fields]
+        if fields
+        else float(meta["avgdl"])
+    )
+    blocks = postings.mapInArrow(
+        make_block_encoder(
+            avgdl, block_size,
+            salt_threshold=int(meta["salt_threshold"]),
+            num_salts=int(meta["num_salts"]),
+        ),
+        schema=BLOCKS_SCHEMA,
+    )
+    # encode at full width, then compact to one tid-sorted file per
+    # bucket (same listing/footer + row-group-pruning rationale as the
+    # postings layout); the extra exchange moves only the small encoded
+    # rows, never raw postings
+    _write_bucketed(
+        blocks, out_path, int(meta["num_buckets"]), ("tid", "salt", "block_id")
+    )
+
+    # per-term block-max summary folded into the dictionary: mtp is the
+    # term's global max tf_part (-> MaxScore upper bound ub = w*mtp);
+    # skips is the top-SKIPLIST_CAP blocks by min_tf_part as (m, nd)
+    # pairs — walking it until Σnd >= k yields a SOUND lower bound of
+    # the kth single-term score with NO decode job at query time (the
+    # batch analogue of Lucene's block-max skip data). Window (not
+    # collect_list-then-slice) so a head term with millions of blocks
+    # never materializes one giant array.
+    from pyspark.sql import Window
+
+    bmeta = postings.sparkSession.read.parquet(out_path).select(
+        "tid", "min_tf_part", F.col("n_docs").alias("nd"), "max_tf_part"
+    )
+    mtp = bmeta.groupBy("tid").agg(F.max("max_tf_part").alias("mtp"))
+    w = Window.partitionBy("tid").orderBy(F.desc("min_tf_part"), F.desc("nd"))
+    skips = (
+        bmeta.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= SKIPLIST_CAP)
+        .groupBy("tid")
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(F.col("min_tf_part").alias("m"), F.col("nd"))
+                ),
+                asc=False,
+            ).alias("skips")
+        )
+    )
+    return mtp.join(skips, "tid")
 
 
 def build_index(
@@ -1082,18 +1237,13 @@ def _build_index_impl(
     `fields`: index several text columns as independent per-field
     inverted indexes (tid = hash(field, term); per-field norms) — the
     schema-fields model that lets edismax/qf run against the REAL index.
-    Block-max metadata is per-field since round 3 (the encoder reads a
-    fid ordinal riding the in-flight postings and applies that FIELD's
-    avgdl to tf_part), enabling block-max WAND on any field of a
-    single-chunk multi-field build; chunked multi-field builds skip
-    blocks (the staged postings lose the fid) and serve every field via
-    the flat path.
+    Block-max metadata is per-field (the encoder applies each posting's
+    FIELD avgdl to tf_part via a fid ordinal), so block-max WAND serves
+    every field of any multi-field build — single-chunk, chunked or
+    resumed. The single-chunk build feeds the encoder its in-flight
+    layout cache; the other two re-read the written postings and derive
+    fid from the dictionary (`_tid_clustered`).
     """
-    if fields and num_chunks > 1:
-        # multi-field blocks need the in-flight fid ordinal (per-field
-        # avgdl in the block-max metadata); the chunked path re-reads
-        # postings from their fid-less parquet, so blocks stay off there
-        build_blocks = False
     paths = IndexPaths(out_dir)
     if not resume and os.path.exists(out_dir):
         shutil.rmtree(out_dir)
@@ -1125,7 +1275,7 @@ def _build_index_impl(
     # straight to their final layout (no stage copy, one shuffle less)
     single = num_chunks == 1
     laid: DataFrame | None = None  # single-chunk: layout-shuffled postings
-    doc_agg = None
+    stats = None  # (n_docs, avgdl, avgdl_by_field)
     for chunk in range(num_chunks):
         manifest = os.path.join(paths.checkpoints, f"chunk_{chunk}.json")
         if resume and os.path.exists(manifest):
@@ -1208,14 +1358,7 @@ def _build_index_impl(
             # fold the corpus stats (n_docs, avgdl — per field in multi-
             # field mode) into the cached tokenize pass instead of a
             # separate docs-parquet scan job
-            doc_agg = docs_tok.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("doclen").alias("total_len"),
-                *[
-                    F.sum(f"doclen_{i}").alias(f"total_len_{i}")
-                    for i in range(len(fields or ()))
-                ],
-            ).collect()[0]
+            stats = _corpus_stats(docs_tok, fields)
         docs_tok.unpersist()
         man = {
             "chunk": chunk,
@@ -1232,164 +1375,31 @@ def _build_index_impl(
             json.dump(man, f)
 
     # ---- phase 2: finalize (global stats, bucketed layout, blocks) ----
-    if single:
-        if laid is None:
-            # resume=True and the only chunk's manifest was already
-            # committed: phase 1 was skipped, so the live layout shuffle
-            # and cached doc stats don't exist — re-read the final
-            # parquet layouts instead (pre-round-3 this crashed with a
-            # NoneType subscript; ADVICE.md round 2, reproduced by
-            # scripts/submit_build.py --resume with num_chunks=1)
-            postings = spark.read.parquet(paths.postings)
-            agg = spark.read.parquet(paths.docs).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("doclen").alias("total_len"),
-                *[
-                    F.sum(f"doclen_{i}").alias(f"total_len_{i}")
-                    for i in range(len(fields or ()))
-                ],
-            ).collect()[0]
-        else:
-            postings = laid
-            agg = doc_agg
-    else:
-        docs = spark.read.parquet(os.path.join(paths.stage, "docs_c*"))
-        postings = spark.read.parquet(os.path.join(paths.stage, "post_c*"))
-        docs.write.mode("overwrite").parquet(paths.docs)
-        docs = spark.read.parquet(paths.docs)
-        agg = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("doclen").alias("total_len"),
-            *[
-                F.sum(f"doclen_{i}").alias(f"total_len_{i}")
-                for i in range(len(fields or ()))
-            ],
-        ).collect()[0]
-    n_docs = int(agg["n"])
-    avgdl = float(agg["total_len"]) / n_docs if n_docs else 0.0
-    avgdl_by_field = (
-        {
-            f: (float(agg[f"total_len_{i}"]) / n_docs if n_docs else 0.0)
-            for i, f in enumerate(fields)
-        }
-        if fields
-        else None
-    )
-
-    term_dict = spark.read.parquet(os.path.join(paths.stage, "dict_c*")).distinct()
-    postings_agg = postings.groupBy("tid").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").cast("long").alias("cttf")
-    )
-
-    # bucketed flat postings (the correctness/scoring path)
     if not single:
-        _write_bucketed(postings, paths.postings, num_buckets, ("tid", "docid"))
-        postings = spark.read.parquet(paths.postings)
-
-    if build_positions and not single:
+        spark.read.parquet(os.path.join(paths.stage, "docs_c*")).write.mode(
+            "overwrite"
+        ).parquet(paths.docs)
+        # bucketed flat postings (the correctness/scoring path)
         _write_bucketed(
-            spark.read.parquet(os.path.join(paths.stage, "pos_c*")),
-            paths.positions, num_buckets, ("tid", "docid", "pos"),
+            spark.read.parquet(os.path.join(paths.stage, "post_c*")),
+            paths.postings, num_buckets, ("tid", "docid"),
         )
-
-    block_meta = None
-    if fields and laid is None:
-        # resumed single-chunk multi-field build: the written postings
-        # carry no fid ordinal, so per-field block metadata cannot be
-        # rebuilt — skip blocks (flat scoring serves every field)
-        build_blocks = False
-    if build_blocks and n_docs:
-        from solr_spark.index.blocks import BLOCK_SIZE
-
-        bsz = block_size or BLOCK_SIZE
-        # Round-6: the head-term salt is derived INSIDE the encoder
-        # (make_block_encoder salt_threshold/num_salts): the layout keys
-        # on pure functions of tid, so a tid's in-partition run length
-        # is its exact df and the encoder salts head groups locally.
-        # This drops the head-tid broadcast join and the second full
-        # sortWithinPartitions the old shape paid over every posting
-        # (guide §2.4) — the laid cache feeds the encoder as-is.
-        if single and laid is not None:
-            # encode parallelism = num_buckets * FILES_PER_BUCKET tasks
-            # — the same width as the postings write; num_buckets is the
-            # cluster-size scaling knob.
-            sorted_post = laid
-        else:
-            shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            sorted_post = (
-                spark.read.parquet(paths.postings)
-                .repartition(shuffle_parts, "tid")
-                .sortWithinPartitions("tid", "docid")
+        if build_positions:
+            _write_bucketed(
+                spark.read.parquet(os.path.join(paths.stage, "pos_c*")),
+                paths.positions, num_buckets, ("tid", "docid", "pos"),
             )
-        blocks = sorted_post.mapInArrow(
-            # multi-field: per-field avgdl array, indexed by the fid
-            # ordinal riding the in-flight postings (per-field norms in
-            # the block-max metadata)
-            make_block_encoder(
-                [avgdl_by_field[f] for f in fields] if fields else avgdl,
-                bsz, salt_threshold=salt_threshold, num_salts=num_salts,
-            ),
-            schema=BLOCKS_SCHEMA,
-        )
-        # encode at full width, then compact to one tid-sorted file per
-        # bucket (same listing/footer + row-group-pruning rationale as
-        # the postings layout); the extra exchange moves only the small
-        # encoded rows, never raw postings
-        _write_bucketed(blocks, paths.blocks, num_buckets, ("tid", "salt", "block_id"))
+    if stats is None:
+        # chunked build, or resume=True with the only chunk's manifest
+        # already committed: no cached tokenize pass to fold the stats
+        # into, so read them off the final docs parquet (pre-round-3 a
+        # resumed single-chunk build crashed here with a NoneType
+        # subscript; ADVICE.md round 2)
+        stats = _corpus_stats(spark.read.parquet(paths.docs), fields)
+    n_docs, avgdl, avgdl_by_field = stats
+    postings = laid if laid is not None else spark.read.parquet(paths.postings)
+    term_dict = spark.read.parquet(os.path.join(paths.stage, "dict_c*")).distinct()
 
-        # per-term block-max summary folded into the dictionary: mtp is
-        # the term's global max tf_part (-> MaxScore upper bound ub =
-        # w*mtp); skips is the top-SKIPLIST_CAP blocks by min_tf_part as
-        # (m, nd) pairs — walking it until Σnd >= k yields a SOUND lower
-        # bound of the kth single-term score with NO decode job at query
-        # time (the batch analogue of Lucene's block-max skip data).
-        # Window (not collect_list-then-slice) so a head term with
-        # millions of blocks never materializes one giant array.
-        from pyspark.sql import Window
-
-        bmeta = spark.read.parquet(paths.blocks).select(
-            "tid", "min_tf_part", F.col("n_docs").alias("nd"), "max_tf_part"
-        )
-        mtp = bmeta.groupBy("tid").agg(F.max("max_tf_part").alias("mtp"))
-        w = Window.partitionBy("tid").orderBy(
-            F.desc("min_tf_part"), F.desc("nd")
-        )
-        skips = (
-            bmeta.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= SKIPLIST_CAP)
-            .groupBy("tid")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(F.col("min_tf_part").alias("m"), F.col("nd"))
-                    ),
-                    asc=False,
-                ).alias("skips")
-            )
-        )
-        block_meta = mtp.join(skips, "tid")
-
-    term_stats = (
-        postings_agg.join(term_dict, "tid")
-        .withColumn("is_head", F.col("df") > F.lit(salt_threshold))
-        .withColumn("bucket", bucket_of_col("term", num_buckets))
-    )
-    if block_meta is not None:
-        term_stats = term_stats.join(block_meta, "tid", "left")
-    else:
-        term_stats = term_stats.withColumn(
-            "mtp", F.lit(None).cast("double")
-        ).withColumn("skips", F.lit(None).cast("array<struct<m:double,nd:int>>"))
-    (
-        term_stats.repartition(max(1, num_buckets // 2), "bucket")
-        .sortWithinPartitions("term")  # row-group pruning on the seek key
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(paths.term_stats)
-    )
-
-    if laid is not None:
-        laid.unpersist()
     meta = {
         "n_docs": n_docs,
         "avgdl": avgdl,
@@ -1397,7 +1407,7 @@ def _build_index_impl(
         "num_salts": num_salts,
         "salt_threshold": salt_threshold,
         "num_chunks": num_chunks,
-        "build_seconds": round(time.time() - t0, 3),
+        "build_seconds": None,
         "has_blocks": bool(build_blocks and n_docs),
         "has_positions": bool(build_positions and n_docs),
         "has_payloads": bool(
@@ -1417,6 +1427,25 @@ def _build_index_impl(
         meta["synonyms"] = dict(synonyms)
     if analyzer:
         meta["analyzer"] = dict(analyzer)
+
+    block_meta = None
+    if meta["has_blocks"]:
+        # the single-chunk laid cache is already tid-clustered and
+        # (tid, docid)-sorted with fid riding along, so it feeds the
+        # encoder as-is (encode parallelism = num_buckets *
+        # FILES_PER_BUCKET tasks, the postings-write width; no exchange)
+        block_meta = _encode_blocks(
+            laid if laid is not None
+            else _tid_clustered(postings, term_dict, fields),
+            paths.blocks, meta, block_size or BLOCK_SIZE,
+        )
+    _write_term_stats(
+        _term_stats(postings, term_dict, salt_threshold, num_buckets, block_meta),
+        paths.term_stats, num_buckets,
+    )
+    if laid is not None:
+        laid.unpersist()
+    meta["build_seconds"] = round(time.time() - t0, 3)
     with open(paths.meta, "w") as f:
         json.dump(meta, f, indent=2)
     if not keep_stage:

@@ -13,12 +13,12 @@ merge (forceMerge / expungeDeletes). The Spark shape:
   index is compacted, so block-max metadata stays a valid upper bound.
 - `expunge_deletes` is the merge: rewrite postings/docs/positions
   without the deleted rows (same bucketed layout), re-encode block-max
-  blocks from the live postings (single-field indexes; the salt layout
-  is a pure function of docid + the dictionary's head flags, so the
-  rebuild needs no staged state), refresh the dictionary's mtp/skips
-  columns, and clear the sidecar. Statistics stay build-time
-  (expungeDeletes semantics); a stats refresh is a rebuild —
-  `sources.snapshots.build_index_versioned` is that path.
+  blocks from the live postings through the build's own encode path
+  (`builder._encode_blocks`: one salt rule, per-field avgdl on
+  multi-field indexes, so the rebuild needs no staged state), refresh
+  the dictionary's mtp/skips columns, and clear the sidecar. Statistics
+  stay build-time (expungeDeletes semantics); a stats refresh is a
+  rebuild — `sources.snapshots.build_index_versioned` is that path.
 
 While deletes are pending, the pruned WAND path routes to the flat
 engine: WAND's metadata-seeded threshold T0 counts deleted docs, so a
@@ -28,6 +28,7 @@ is exact at any delete ratio. expunge restores pruning.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -35,7 +36,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.index.builder import (
-    DELETES_BROADCAST_CAP, SKIPLIST_CAP, Index, _write_bucketed,
+    DELETES_BROADCAST_CAP,
+    Index,
+    IndexPaths,
+    _corpus_stats,
+    _encode_blocks,
+    _term_stats,
+    _tid_clustered,
+    _write_bucketed,
+    _write_term_stats,
 )
 
 
@@ -106,22 +115,10 @@ def expunge_deletes(index: Index) -> dict:
 
     Compacts postings, docs and positions (anti-join + the original
     bucketed layout), re-encodes blocks from the live postings and
-    refreshes the dictionary's block-max summary (single-field
-    indexes), then clears the deletes sidecar. Returns a report dict.
-
-    Multi-field indexes with blocks DROP the blocks sidecar instead of
-    re-encoding (the on-disk postings drop the fid ordinal the
-    per-field encoder needs — the same constraint as a resumed
-    multi-field build, builder.py:969-973): the compacted postings are
-    exact, `has_blocks` flips off in meta so WAND routing reflects
-    reality, the deletes sidecar clears, and repeated expunges are
-    no-ops. (Keeping stale blocks + a permanent sidecar was the
-    round-4 finding: pruning stayed disabled forever and every later
-    expunge re-rewrote the whole index.)
+    refreshes the dictionary's block-max summary (single- and
+    multi-field indexes alike), then clears the deletes sidecar, so
+    repeated expunges are no-ops. Returns a report dict.
     """
-    import json
-
-    spark = index.spark
     paths = index.paths
     report: dict = {"expunged": 0}
     if not index.has_deletes():
@@ -153,154 +150,78 @@ def expunge_deletes(index: Index) -> dict:
     # just at the end — later steps must list the new files
     index._df_cache.clear()
 
-    multi_field = bool(index.meta.get("fields"))
-    if index.meta.get("has_blocks") and not multi_field:
+    if index.meta.get("has_blocks"):
         _reencode_blocks(index)
         report["blocks_reencoded"] = True
-    elif index.meta.get("has_blocks") and multi_field:
-        # postings are compacted but can't be re-encoded per-field:
-        # drop the (now stale) blocks and record it, so WAND routing
-        # and repeated expunges see a consistent index
-        shutil.rmtree(paths.blocks, ignore_errors=True)
-        index.meta["has_blocks"] = False
-        with open(paths.meta, "w") as f:
-            json.dump(index.meta, f, indent=2)
-        report["blocks_dropped"] = True
 
     dele.unpersist()
     shutil.rmtree(paths.deletes, ignore_errors=True)
-    _drop_ts_cache(index)  # dictionary was rewritten (mtp/skips)
-    return report
-
-
-def _drop_ts_cache(index: Index) -> None:
-    """Full handle-cache invalidation after an on-disk rewrite: the
-    persisted term_stats frame, the term-dictionary LRU, memoized table
-    handles, query-result cache and deletes snapshot all reflect the OLD
-    files. The commit-opens-a-new-searcher analogue."""
+    # the rewritten files (dictionary mtp/skips included) invalidate
+    # every handle cache: the commit-opens-a-new-searcher analogue
     index.invalidate_caches()
+    return report
 
 
 def _reencode_blocks(index: Index) -> None:
     """Rebuild blocks + the dictionary's (mtp, skips) columns from the
-    COMPACTED postings — the head-term salt is pmod(docid, num_salts)
-    gated on the dictionary's is_head flag, so the encode layout is
-    reproducible with no staged build state."""
-    from pyspark.sql import Window
-
-    from solr_spark.index.blocks import BLOCK_SIZE, BLOCKS_SCHEMA, make_block_encoder
-
+    COMPACTED postings through the build's encode path. Salting follows
+    the live run length (the one salt rule), not the build-time
+    `is_head` flag; no query path reads either — `salt` is an opaque
+    part of the block key — so results do not change. Statistics (df,
+    avgdl) stay build-time, as expungeDeletes leaves them."""
     spark = index.spark
     paths = index.paths
-    num_buckets = int(index.meta["num_buckets"])
-    num_salts = int(index.meta["num_salts"])
-    avgdl = float(index.meta["avgdl"])
-
-    # salting here deliberately keeps the DICTIONARY's is_head flag
-    # (build-time df), not the post-compaction run length, so the salt
-    # layout stays stable across expunges — the salt column is provided
-    # to the encoder rather than derived
     ts = spark.read.parquet(paths.term_stats)
-    head_tids = ts.where(F.col("is_head")).select("tid").withColumn(
-        "_is_head", F.lit(True)
-    )
-    salted = (
-        spark.read.parquet(paths.postings)
-        .join(F.broadcast(head_tids), "tid", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("_is_head").isNotNull(),
-                F.pmod(F.col("docid"), F.lit(num_salts)).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("_is_head")
-    )
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sorted_post = salted.repartition(
-        shuffle_parts, "tid", "salt"
-    ).sortWithinPartitions("tid", "salt", "docid")
-    blocks = sorted_post.mapInArrow(
-        make_block_encoder(avgdl, BLOCK_SIZE), schema=BLOCKS_SCHEMA
-    )
     tmp_blocks = paths.blocks + ".compact"
-    _write_bucketed(blocks, tmp_blocks, num_buckets, ("tid", "salt", "block_id"))
-    _swap_dir(tmp_blocks, paths.blocks)
-
-    # refresh the dictionary's folded block-max summary (same fold as
-    # the build: per-term global max tf_part + top-SKIPLIST_CAP skip
-    # pairs by min_tf_part)
-    bmeta = spark.read.parquet(paths.blocks).select(
-        "tid", "min_tf_part", F.col("n_docs").alias("nd"), "max_tf_part"
+    fold = _encode_blocks(
+        _tid_clustered(
+            spark.read.parquet(paths.postings), ts, index.meta.get("fields")
+        ),
+        tmp_blocks, index.meta,
     )
-    mtp = bmeta.groupBy("tid").agg(F.max("max_tf_part").alias("mtp"))
-    w = Window.partitionBy("tid").orderBy(F.desc("min_tf_part"), F.desc("nd"))
-    skips = (
-        bmeta.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= SKIPLIST_CAP)
-        .groupBy("tid")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("min_tf_part").alias("m"), F.col("nd"))
-                ),
-                asc=False,
-            ).alias("skips")
-        )
-    )
-    refreshed = (
-        ts.drop("mtp", "skips")
-        .join(mtp.join(skips, "tid"), "tid", "left")
-    )
+    # the fold reads the new blocks, so the dictionary is rewritten
+    # before either directory swaps into place
     tmp_ts = paths.term_stats + ".compact"
-    (
-        refreshed.repartition(max(1, num_buckets // 2), "bucket")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp_ts)
+    _write_term_stats(
+        ts.drop("mtp", "skips").join(fold, "tid", "left"),
+        tmp_ts, int(index.meta["num_buckets"]),
     )
+    _swap_dir(tmp_blocks, paths.blocks)
     _swap_dir(tmp_ts, paths.term_stats)
 
 
 def merge_indexes(a: Index, b: Index, out_root: str) -> Index:
     """MERGEINDEXES (solr CoreAdmin MergeIndexes action / Lucene
     IndexWriter.addIndexes): combine two indexes built with the SAME
-    analyzer config into one, re-based docids (b's shift by a.n_docs)
-    and EXACTLY recomputed statistics — the merged index is
-    value-identical to an index built over the concatenated corpus
-    (asserted by the metamorphic test: merge(half1, half2) gives the
-    same BM25 results as build(whole)).
+    analyzer config and fields into one, re-based docids (b's shift by
+    a's docid space) and EXACTLY recomputed statistics — the merged
+    index is value-identical to an index built over the concatenated
+    corpus (asserted by the metamorphic tests: merge(half1, half2) gives
+    the same BM25 results and blocks as build(whole), single- and
+    multi-field).
 
     Scale shape: postings/docs/positions are UNIONS written back in the
     original bucketed layout (one shuffle each, no corpus re-tokenize);
     the dictionary is recomputed from a postings aggregation
-    (vocabulary-sized); blocks re-encode from the merged postings when
-    either input had them. tid = xxhash64(term) is content-derived, so
-    the two dictionaries agree by construction.
+    (vocabulary-sized); blocks re-encode from the merged postings
+    through the build's encode path when either input had them. tid =
+    xxhash64([field,] term) is content-derived, so the two dictionaries
+    agree by construction.
 
     Pending deletes must be expunged first (deleted docs would leak
-    through the union); multi-field indexes are not supported (their
-    on-disk postings drop the fid ordinal the per-field block encoder
-    needs — same constraint as expunge)."""
-    import json
-
+    through the union)."""
     spark = a.spark
     for side in (a, b):
-        if side.meta.get("fields"):
-            raise ValueError("merge_indexes: multi-field indexes unsupported")
         if side.has_deletes():
             raise ValueError("merge_indexes: expunge_deletes first")
-    for key in ("stopwords", "synonyms", "analyzer"):
+    for key in ("stopwords", "synonyms", "analyzer", "fields", "stored_content"):
         if a.meta.get(key) != b.meta.get(key):
-            raise ValueError(f"merge_indexes: analyzer config differs ({key})")
-    from solr_spark.index.builder import Index as _Index
-    from solr_spark.index.builder import IndexPaths, bucket_of_col
+            raise ValueError(f"merge_indexes: index config differs ({key})")
 
     paths = IndexPaths(out_root)
     os.makedirs(out_root, exist_ok=True)
     num_buckets = int(a.meta["num_buckets"])
-    salt_threshold = int(a.meta["salt_threshold"])
+    fields = a.meta.get("fields")
     # the shift must clear a's ACTUAL docid space, not its live count:
     # expunge/merge compact rows without renumbering docids, so after
     # an expunged input max(docid) exceeds n_docs-1 and an n_docs-based
@@ -329,58 +250,49 @@ def merge_indexes(a: Index, b: Index, out_root: str) -> Index:
             paths.positions, num_buckets, ("tid", "docid", "pos"),
         )
 
-    # dictionary: exact df/cttf from the merged postings; term strings
-    # from the union of the input dictionaries (tid-keyed)
-    post = spark.read.parquet(paths.postings)
-    agg = post.groupBy("tid").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").cast("long").alias("cttf")
+    n_docs, avgdl, avgdl_by_field = _corpus_stats(
+        spark.read.parquet(paths.docs), fields
     )
-    terms = (
-        a.term_stats().select("tid", "term")
-        .unionByName(b.term_stats().select("tid", "term"))
-        .distinct()
-    )
-    ts = (
-        agg.join(terms, "tid")
-        .withColumn("is_head", F.col("df") > F.lit(salt_threshold))
-        .withColumn("bucket", bucket_of_col("term", num_buckets))
-        .withColumn("mtp", F.lit(None).cast("double"))
-        .withColumn("skips", F.lit(None).cast("array<struct<m:double,nd:int>>"))
-    )
-    (
-        ts.repartition(max(1, num_buckets // 2), "bucket")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(paths.term_stats)
-    )
-
-    docs_stats = spark.read.parquet(paths.docs).agg(
-        F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avgdl")
-    ).collect()[0]
     meta = dict(a.meta)
     meta.update(
         {
-            "n_docs": int(docs_stats["n"]),
-            "avgdl": float(docs_stats["avgdl"]),
+            "n_docs": n_docs,
+            "avgdl": avgdl,
             "num_chunks": 1,
             "has_positions": has_positions,
-            "has_blocks": False,
+            "has_blocks": bool(
+                a.meta.get("has_blocks") or b.meta.get("has_blocks")
+            ),
             "merged_from": [a.paths.root, b.paths.root],
         }
     )
+    if fields:
+        meta["avgdl_by_field"] = avgdl_by_field
     meta.pop("build_seconds", None)
+
+    # dictionary: exact df/cttf from the merged postings; term strings
+    # (and fields) from the union of the input dictionaries (tid-keyed)
+    key_cols = ["field", "term"] if fields else ["term"]
+    terms = (
+        a.term_stats().select("tid", *key_cols)
+        .unionByName(b.term_stats().select("tid", *key_cols))
+        .distinct()
+    )
+    post = spark.read.parquet(paths.postings)
+    block_meta = None
+    if meta["has_blocks"]:
+        block_meta = _encode_blocks(
+            _tid_clustered(post, terms, fields), paths.blocks, meta
+        )
+    _write_term_stats(
+        _term_stats(
+            post, terms, int(meta["salt_threshold"]), num_buckets, block_meta
+        ),
+        paths.term_stats, num_buckets,
+    )
     with open(paths.meta, "w") as f:
         json.dump(meta, f, indent=2)
-    out = _Index(spark, paths, meta)
-    if a.meta.get("has_blocks") or b.meta.get("has_blocks"):
-        _reencode_blocks(out)
-        meta["has_blocks"] = True
-        with open(paths.meta, "w") as f:
-            json.dump(meta, f, indent=2)
-        out.meta = meta
-        _drop_ts_cache(out)
-    return out
+    return Index(spark, paths, meta)
 
 
 def backup_index(index: Index, backup_root: str, name: str) -> str:
@@ -435,11 +347,12 @@ def add_documents(index: Index, corpus: DataFrame, out_root: str) -> Index:
     (DirectUpdateHandler2.addDoc + commit opens a searcher over old and
     new segments). Builds a DELTA index over just the new corpus rows —
     tokenize/invert cost is proportional to the delta, never the
-    existing index — with the parent's exact analyzer config and layout
-    knobs, then merges (merge_indexes) into `out_root` with re-based
-    docids and exactly recomputed statistics. The parent index is
-    untouched (commit-switch via sources.snapshots keeps readers on it
-    until the new root is published).
+    existing index — with the parent's exact analyzer config, fields,
+    stored-content setting and layout knobs, then merges (merge_indexes)
+    into `out_root` with re-based docids and exactly recomputed
+    statistics. The parent index is untouched (commit-switch via
+    sources.snapshots keeps readers on it until the new root is
+    published).
 
     New (repo, path, commit) keys must not collide with existing docs —
     updates go through delete_by_query + add (the reference's
@@ -447,8 +360,6 @@ def add_documents(index: Index, corpus: DataFrame, out_root: str) -> Index:
     """
     from solr_spark.index.builder import build_index
 
-    if index.meta.get("fields"):
-        raise ValueError("add_documents: multi-field indexes unsupported")
     delta_root = out_root + ".delta"
     shutil.rmtree(delta_root, ignore_errors=True)
     m = index.meta
@@ -459,8 +370,12 @@ def add_documents(index: Index, corpus: DataFrame, out_root: str) -> Index:
         num_buckets=int(m["num_buckets"]),
         salt_threshold=int(m["salt_threshold"]),
         num_salts=int(m["num_salts"]),
-        build_blocks=bool(m.get("has_blocks")),
+        # merge_indexes encodes the merged postings' blocks when the
+        # parent has them; blocks of the delta alone would be discarded
+        build_blocks=False,
         build_positions=bool(m.get("has_positions")),
+        fields=m.get("fields"),
+        store_content=bool(m.get("stored_content")),
         stopwords=m.get("stopwords"),
         synonyms=m.get("synonyms"),
         analyzer=m.get("analyzer"),
@@ -479,9 +394,10 @@ def upsert_documents(index: Index, corpus: DataFrame, out_root: str) -> Index:
 
     Shape: one broadcast-friendly join of the delta's keys against the
     docs table finds the colliding docids (delta-sized work), they're
-    tombstoned + expunged, then add_documents merges the delta in. The
-    returned index lives at `out_root`; the parent is left expunged but
-    otherwise intact."""
+    tombstoned, every pending delete (these and any earlier ones) is
+    expunged — merge_indexes refuses an index with deletes pending —
+    then add_documents merges the delta in. The returned index lives at
+    `out_root`; the parent is left expunged but otherwise intact."""
     from solr_spark.index.builder import DOC_KEY
 
     keys = corpus.select(*DOC_KEY).distinct()
@@ -490,6 +406,6 @@ def upsert_documents(index: Index, corpus: DataFrame, out_root: str) -> Index:
         .join(F.broadcast(keys), list(DOC_KEY), "left_semi")
         .select("docid")
     )
-    if delete_by_df(index, colliding):
-        expunge_deletes(index)
+    delete_by_df(index, colliding)
+    expunge_deletes(index)  # no-op when nothing is pending
     return add_documents(index, corpus, out_root)

@@ -58,8 +58,41 @@ def _stream_rows(enc, tbl, batch_rows):
     return out
 
 
+def _encoder_input(rng, sizes, thr, nsalt, fids=None):
+    """One tid run per entry of `sizes`, as (unsalted, salted): the
+    unsalted form is the encoder's (tid, docid)-sorted input; the salted
+    form is the same rows with every run longer than `thr` salted by
+    docid % nsalt and re-sorted to (salt, docid) — the layout the
+    reference per-group encode expects."""
+    cols = ("tid", "docid", "tf", "dl_q", "bucket") + (
+        ("fid",) if fids is not None else ()
+    )
+    unsalted = {k: [] for k in cols}
+    salted = {k: [] for k in cols + ("salt",)}
+    for g, n in enumerate(sizes):
+        tid = int(rng.integers(-(2**62), 2**62))
+        docids = np.sort(rng.choice(10**7, size=n, replace=False))
+        run = {
+            "tid": np.full(n, tid),
+            "docid": docids,
+            "tf": rng.integers(1, 30, size=n),
+            "dl_q": rng.integers(20, 500, size=n),
+            "bucket": np.full(n, tid % 16),
+        }
+        if fids is not None:
+            run["fid"] = np.full(n, fids[g])
+        salt = docids % nsalt if n > thr else np.zeros(n, dtype=np.int64)
+        order = np.lexsort((docids, salt))
+        for k in cols:
+            unsalted[k].extend(run[k].tolist())
+            salted[k].extend(run[k][order].tolist())
+        salted["salt"].extend(salt[order].tolist())
+    return unsalted, salted
+
+
 def _reference_rows(tbl, avgdl, multi=False):
-    """Per-group encode_posting_list over the same sorted input."""
+    """Per-group encode_posting_list over salted, (tid, salt, docid)-
+    grouped input."""
     tids = np.asarray(tbl["tid"])
     salts = np.asarray(tbl["salt"])
     keys = list(zip(tids.tolist(), salts.tolist()))
@@ -84,79 +117,53 @@ def _reference_rows(tbl, avgdl, multi=False):
 def test_stream_encoder_matches_per_group_encode():
     """The vectorized whole-batch encoder must be value- and
     byte-identical to per-group encode_posting_list, including across
-    Arrow batch boundaries that split a (tid, salt) group."""
+    Arrow batch boundaries that split a tid run."""
     rng = np.random.default_rng(11)
-    tbl = {k: [] for k in ("tid", "salt", "docid", "tf", "dl_q", "bucket")}
-    for g in range(40):
-        n = int(rng.integers(1, 400))
-        tid = int(rng.integers(-(2**62), 2**62))
-        salt = int(rng.integers(0, 4))
-        docids = np.sort(rng.choice(10**7, size=n, replace=False))
-        tbl["tid"].extend([tid] * n)
-        tbl["salt"].extend([salt] * n)
-        tbl["docid"].extend(docids.tolist())
-        tbl["tf"].extend(rng.integers(1, 30, size=n).tolist())
-        tbl["dl_q"].extend(rng.integers(20, 500, size=n).tolist())
-        tbl["bucket"].extend([tid % 16] * n)
-    want = _reference_rows(tbl, avgdl=137.25)
-    for batch_rows in (57, 1000, len(tbl["tid"])):
-        got = _stream_rows(make_block_encoder(137.25), tbl, batch_rows)
+    sizes = rng.integers(1, 400, size=40)
+    thr = int(sizes.max())  # no head runs: every group is one tid run
+    unsalted, salted = _encoder_input(rng, sizes, thr, 4)
+    want = _reference_rows(salted, avgdl=137.25)
+    for batch_rows in (57, 1000, len(unsalted["tid"])):
+        got = _stream_rows(
+            make_block_encoder(137.25, salt_threshold=thr, num_salts=4),
+            unsalted, batch_rows,
+        )
         assert got == want, f"mismatch at batch_rows={batch_rows}"
 
 
 def test_stream_encoder_derives_head_salt():
-    """salt_threshold mode: the encoder must salt head tid-runs itself
-    and emit EXACTLY the blocks the pre-salted, pre-sorted input form
-    produces — including when a head group spans Arrow batches."""
+    """The encoder must salt head tid-runs itself and emit EXACTLY the
+    blocks the pre-salted, pre-sorted input form produces — including
+    when a head group spans Arrow batches."""
     rng = np.random.default_rng(3)
     thr, nsalt = 200, 8
-    unsorted = {k: [] for k in ("tid", "salt", "docid", "tf", "dl_q", "bucket")}
-    presorted = {k: [] for k in unsorted}
-    for g in range(25):
-        head = g in (3, 11, 19)
-        n = int(rng.integers(thr + 1, 1500)) if head else int(rng.integers(1, thr))
-        tid = int(rng.integers(-(2**62), 2**62))
-        docids = np.sort(rng.choice(10**6, size=n, replace=False))
-        tf = rng.integers(1, 20, size=n)
-        dlq = rng.integers(20, 400, size=n)
-        salt = (docids % nsalt).astype(np.int64) if head else np.zeros(n, dtype=np.int64)
-        unsorted["tid"].extend([tid] * n)
-        unsorted["salt"].extend([0] * n)  # ignored in derive mode
-        unsorted["docid"].extend(docids.tolist())
-        unsorted["tf"].extend(tf.tolist())
-        unsorted["dl_q"].extend(dlq.tolist())
-        unsorted["bucket"].extend([tid % 16] * n)
-        order = np.lexsort((docids, salt))
-        presorted["tid"].extend([tid] * n)
-        presorted["salt"].extend(salt[order].tolist())
-        presorted["docid"].extend(docids[order].tolist())
-        presorted["tf"].extend(tf[order].tolist())
-        presorted["dl_q"].extend(dlq[order].tolist())
-        presorted["bucket"].extend([tid % 16] * n)
-    want = _reference_rows(presorted, avgdl=119.5)
-    derive_in = {k: v for k, v in unsorted.items() if k != "salt"}
-    for batch_rows in (57, 1024, len(unsorted["tid"])):
+    sizes = [
+        int(rng.integers(thr + 1, 1500)) if g in (3, 11, 19)
+        else int(rng.integers(1, thr))
+        for g in range(25)
+    ]
+    unsalted, salted = _encoder_input(rng, sizes, thr, nsalt)
+    want = _reference_rows(salted, avgdl=119.5)
+    for batch_rows in (57, 1024, len(unsalted["tid"])):
         got = _stream_rows(
             make_block_encoder(119.5, salt_threshold=thr, num_salts=nsalt),
-            derive_in, batch_rows,
+            unsalted, batch_rows,
         )
         assert got == want, f"mismatch at batch_rows={batch_rows}"
 
 
 def test_stream_encoder_multi_field_avgdl():
+    """Multi-field input: each tid run's tf_part uses its fid's avgdl,
+    head runs included."""
     rng = np.random.default_rng(5)
-    tbl = {k: [] for k in ("tid", "salt", "docid", "tf", "dl_q", "bucket", "fid")}
-    for g in range(10):
-        n = int(rng.integers(1, 300))
-        fid = int(rng.integers(0, 3))
-        tbl["tid"].extend([g * 7919] * n)
-        tbl["salt"].extend([0] * n)
-        tbl["docid"].extend(np.sort(rng.choice(10**6, size=n, replace=False)).tolist())
-        tbl["tf"].extend(rng.integers(1, 9, size=n).tolist())
-        tbl["dl_q"].extend(rng.integers(10, 200, size=n).tolist())
-        tbl["bucket"].extend([g % 16] * n)
-        tbl["fid"].extend([fid] * n)
+    thr = 250
+    sizes = [int(rng.integers(1, 300)) for _ in range(10)]
+    fids = [int(rng.integers(0, 3)) for _ in range(10)]
+    unsalted, salted = _encoder_input(rng, sizes, thr, 4, fids=fids)
     avgdl = [80.0, 133.5, 212.25]
-    want = _reference_rows(tbl, avgdl, multi=True)
-    got = _stream_rows(make_block_encoder(avgdl), tbl, 97)
+    want = _reference_rows(salted, avgdl, multi=True)
+    got = _stream_rows(
+        make_block_encoder(avgdl, salt_threshold=thr, num_salts=4),
+        unsalted, 97,
+    )
     assert got == want

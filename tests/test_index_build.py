@@ -45,6 +45,32 @@ def test_docids_dense_and_deterministic(spark, corpus):
     assert [r.docid for r in by_key] == list(range(N_DOCS))
 
 
+def test_monotonically_increasing_id_bit_layout(corpus):
+    """assign_docids reads a row's partition-local index off
+    monotonically_increasing_id() as (partition_id << 33) | local_index,
+    dense from 0 in each partition's row order. Pin that Spark-internal
+    layout on the shape assign_docids numbers (a range-partitioned,
+    partition-sorted key projection), so a Spark upgrade that changes
+    it fails here instead of silently assigning wrong docids."""
+    keys = [F.col(k) for k in ("repo", "path", "commit")]
+    rows = (
+        corpus.select(*keys)
+        .repartitionByRange(4, *keys)
+        .sortWithinPartitions(*keys)
+        .select(
+            F.spark_partition_id().alias("pid"),
+            F.monotonically_increasing_id().alias("mid"),
+        )
+        .collect()
+    )
+    per_partition = {}
+    for r in rows:
+        local = per_partition.get(r.pid, 0)
+        assert r.mid == (r.pid << 33) | local, (r.pid, local, r.mid)
+        per_partition[r.pid] = local + 1
+    assert len(per_partition) > 1 and sum(per_partition.values()) == N_DOCS
+
+
 def test_sha256_invariant_vs_source(spark, corpus, index):
     src = corpus.select("repo", "path", "commit", F.sha2("content", 256).alias("h"))
     joined = index.docs().join(src, ["repo", "path", "commit"])

@@ -1,7 +1,6 @@
 """Round-5 regression tests: the round-4 verdict/advice findings.
 
 - merge/upsert docid collision after an expunged input (advice: high)
-- multi-field expunge drops stale blocks + clears the sidecar (medium)
 - deletes-sidecar broadcast cap degrades to a shuffle anti-join
 - bm25_explain agrees with search while deletes pend (low)
 - complex-phrase unordered path uses the Lucene-exact sloppy matcher
@@ -69,49 +68,6 @@ def test_consecutive_upserts_no_docid_collision(spark, tmp_path):
     fresh = build_index(spark, logical, str(tmp_path / "fresh"), **kw)
     for q in ("zzsecondpass", "zzfirstpass", "return import"):
         assert _payload_results(up2, q) == _payload_results(fresh, q), q
-
-
-def test_expunge_multifield_blocks_drops_blocks(spark, tmp_path):
-    """Multi-field + blocks expunge can't re-encode per-field blocks:
-    it must drop them (meta has_blocks=False), clear the sidecar, and
-    make repeated expunges no-ops — not keep a permanent sidecar with
-    stale blocks (round-4 medium)."""
-    import os
-
-    from solr_spark.index.builder import Index
-    from solr_spark.index.maintenance import delete_by_ids, expunge_deletes
-    from solr_spark.query.engine import bm25_topk
-    from solr_spark.query.wand import bm25_topk_wand
-
-    corpus = synthesize_corpus(spark, 400, seed=5, partitions=4).withColumn(
-        "title", F.concat_ws(" ", F.col("path"), F.col("lang"))
-    )
-    idx = build_index(
-        spark, corpus.select("repo", "path", "commit", "content", "title"),
-        str(tmp_path / "mfx"), num_buckets=4, salt_threshold=150, num_salts=4,
-        fields=["content", "title"], build_blocks=True,
-    )
-    assert idx.meta["has_blocks"]
-    before = [r["docid"] for r in bm25_topk(idx, "return import", k=10).collect()]
-    delete_by_ids(idx, before[:2])
-
-    report = expunge_deletes(idx)
-    assert report["expunged"] == 2 and report.get("blocks_dropped")
-    assert not idx.has_deletes()
-    assert idx.meta["has_blocks"] is False
-    assert not os.path.isdir(idx.paths.blocks)
-    # the change is durable (meta.json rewritten)
-    assert Index.load(spark, idx.paths.root).meta["has_blocks"] is False
-    # repeated expunge is a no-op
-    assert expunge_deletes(idx) == {"expunged": 0}
-
-    # queries still exact: flat == wand (wand routes to flat, no blocks)
-    flat = [(r.docid, round(r.score, 9))
-            for r in bm25_topk(idx, "return import", k=10, field="content").collect()]
-    wand = [(r.docid, round(r.score, 9))
-            for r in bm25_topk_wand(idx, "return import", k=10, field="content").collect()]
-    assert flat == wand and flat
-    assert not {d for d, _ in flat} & set(before[:2])
 
 
 def test_deletes_broadcast_guard(spark, tmp_path, monkeypatch):
