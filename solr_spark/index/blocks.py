@@ -83,6 +83,64 @@ def varint_decode(buf: bytes, n: int) -> np.ndarray:
     return vals.astype(np.int64)
 
 
+def _binary_values(col) -> np.ndarray:
+    """The concatenated value bytes of an Arrow binary column, zero-copy
+    (the data buffer between the first and last offset)."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if len(col) == 0:
+        return np.zeros(0, dtype=np.uint8)
+    _, offs, data = col.buffers()
+    odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offsets = np.frombuffer(offs, dtype=odt)[col.offset : col.offset + len(col) + 1]
+    return np.frombuffer(data, dtype=np.uint8)[offsets[0] : offsets[-1]]
+
+
+def _varint_decode_stream(b: np.ndarray, n: int) -> np.ndarray:
+    """LEB128 decode of exactly n values from one uint8 buffer. Each
+    value's bytes are OR-ed together with one `bitwise_or.reduceat`
+    over the value starts (no per-value Python, no scatter-add)."""
+    is_last = b < 0x80
+    ends = np.flatnonzero(is_last)
+    if ends.size != n or (b.size and not is_last[-1]):
+        raise ValueError(f"varint stream holds {ends.size} values, expected {n}")
+    if b.size == n:  # every value fits one byte
+        return b.astype(np.int64)
+    starts = np.empty(n, dtype=np.int64)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    shifts = (np.arange(b.size) - np.repeat(starts, ends - starts + 1)) * 7
+    parts = (b & 0x7F).astype(np.uint64) << shifts.astype(np.uint64)
+    return np.bitwise_or.reduceat(parts, starts).astype(np.int64)
+
+
+def decode_blocks(batch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode every block row of an Arrow table or record batch in ONE
+    vectorized pass -> concatenated (docids, tfs, dlqs), block by block
+    in row order.
+
+    LEB128 is a per-value code, so the concatenated `*_bin` buffers
+    decode as one stream; docids are a segmented cumsum of the deltas,
+    each block's run seeded by its `first_docid` (the stored first delta
+    is ignored, as in `decode_block`)."""
+    n = np.asarray(batch.column("n_docs"), dtype=np.int64)
+    total = int(n.sum())
+    if total == 0:
+        z = np.zeros(0, dtype=np.int64)
+        return z, z, z
+    starts = np.cumsum(n) - n
+    deltas = _varint_decode_stream(_binary_values(batch.column("docids_bin")), total)
+    deltas[starts] = 0
+    run = np.cumsum(deltas)
+    first = np.asarray(batch.column("first_docid"), dtype=np.int64)
+    docids = run + np.repeat(first - run[starts], n)
+    tfs = _varint_decode_stream(_binary_values(batch.column("tfs_bin")), total)
+    dlqs = _varint_decode_stream(_binary_values(batch.column("dlqs_bin")), total)
+    return docids, tfs, dlqs
+
+
 def encode_posting_list(
     tid: int,
     salt: int,

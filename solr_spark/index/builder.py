@@ -413,8 +413,23 @@ class Index:
             .distinct()
         )
         est = total_rows(self.paths.deletes) if ver > 0 else 0
-        self._del_state = (ver, ids, est)
+        # the 4th slot caches the ids as a sorted int64 array, filled on
+        # first use by `deleted_id_array` (None until then)
+        self._del_state = (ver, ids, est, None)
         return self._del_state
+
+    def deleted_id_array(self):
+        """Sorted int64 array of the deleted docids for driver-side
+        filtering, collected once per sidecar version. None when the
+        sidecar is above DELETES_BROADCAST_CAP or of unknown size — the
+        same bound that keeps the liveDocs anti-join a broadcast."""
+        import numpy as np
+
+        ver, ids, est, arr = self._deletes_snapshot()
+        if arr is None and est is not None and est <= DELETES_BROADCAST_CAP:
+            arr = np.sort(ids.toArrow().column("docid").to_numpy().astype(np.int64))
+            self._del_state = (ver, ids, est, arr)
+        return arr
 
     def deleted_rows_estimate(self) -> int | None:
         """Upper bound on the deletes sidecar size from manifest
@@ -1061,15 +1076,14 @@ def _tid_clustered(
     return postings.repartition(parts, "tid").sortWithinPartitions("tid", "docid")
 
 
-def _encode_blocks(
-    postings: DataFrame, out_path: str, meta: dict, block_size: int = BLOCK_SIZE
-) -> DataFrame:
+def _encode_blocks(postings: DataFrame, out_path: str, meta: dict) -> DataFrame:
     """The index's one block-encode path — build, expunge and merge.
 
     `postings` must be clustered by tid and sorted by (tid, docid) within
     each partition, with a `fid` column on multi-field indexes (the laid
     build cache, or `_tid_clustered`). Encodes with the one salt rule of
-    `make_block_encoder` and the index's avgdl (per field when `meta`
+    `make_block_encoder`, the index's block size (`meta["block_size"]`,
+    absent on default-size indexes) and its avgdl (per field when `meta`
     has `fields`), writes the blocks to `out_path` in the bucketed
     layout, and returns the per-term block-max fold (tid, mtp, skips)
     the dictionary carries."""
@@ -1081,7 +1095,7 @@ def _encode_blocks(
     )
     blocks = postings.mapInArrow(
         make_block_encoder(
-            avgdl, block_size,
+            avgdl, int(meta.get("block_size", BLOCK_SIZE)),
             salt_threshold=int(meta["salt_threshold"]),
             num_salts=int(meta["num_salts"]),
         ),
@@ -1427,6 +1441,9 @@ def _build_index_impl(
         meta["synonyms"] = dict(synonyms)
     if analyzer:
         meta["analyzer"] = dict(analyzer)
+    if block_size:
+        # expunge, merge and add re-encode at the build's block size
+        meta["block_size"] = int(block_size)
 
     block_meta = None
     if meta["has_blocks"]:
@@ -1437,7 +1454,7 @@ def _build_index_impl(
         block_meta = _encode_blocks(
             laid if laid is not None
             else _tid_clustered(postings, term_dict, fields),
-            paths.blocks, meta, block_size or BLOCK_SIZE,
+            paths.blocks, meta,
         )
     _write_term_stats(
         _term_stats(postings, term_dict, salt_threshold, num_buckets, block_meta),

@@ -88,13 +88,11 @@ def payload_score(
     if func not in _FUNCS:
         raise ValueError(f"payload_score: unknown func {func!r}")
     terms = index.analyze(query)
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     if not terms:
-        return empty
+        return index.spark.createDataFrame([], "docid long, score double")
     tids, pos = _payload_positions(index, terms)
     if tids is None:
-        return empty
+        return index.spark.createDataFrame([], "docid long, score double")
     if len(tids) == 1:
         rows = pos.select("docid", "payload")
     else:
@@ -138,13 +136,11 @@ def payload_check(
     if op not in _OPS:
         raise ValueError(f"payload_check: unknown op {op!r}")
     terms = index.analyze(query)
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, n_spans long")
     if not terms or len(payloads) != len(terms):
-        return empty
+        return index.spark.createDataFrame([], "docid long, n_spans long")
     tids, pos = _payload_positions(index, terms)
     if tids is None:
-        return empty
+        return index.spark.createDataFrame([], "docid long, n_spans long")
     spans = _span_rows(pos, tids)
     for i, want in enumerate(payloads):
         spans = spans.where(

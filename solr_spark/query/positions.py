@@ -37,6 +37,9 @@ from pyspark.sql import functions as F
 from solr_spark.analysis.analyzer import tokenize_py
 from solr_spark.index.builder import Index
 
+#: schema of the (docid, phrase_freq) frames the phrase matchers return
+_PHRASE_SCHEMA = "docid long, phrase_freq int"
+
 
 def chain_match_count(pos_cols: list[Column], slop: int = 0) -> Column:
     """#start positions of term0 beginning a full sequential chain.
@@ -303,9 +306,8 @@ def phrase_docids(
     terms: list[str] = []
     for w in words:
         terms.extend(index.analyze(w))
-    empty = spark.createDataFrame([], "docid long, phrase_freq int")
     if not terms:
-        return empty
+        return spark.createDataFrame([], _PHRASE_SCHEMA)
     if index.meta.get("fields"):
         fld = field or index.meta["fields"][0]
         fstats = index.term_stats_fielded([(fld, t) for t in set(terms)])
@@ -313,7 +315,8 @@ def phrase_docids(
     else:
         stats = index.term_stats_for(sorted(set(terms)))
     if any(t not in stats for t in terms):
-        return empty  # a phrase term absent from the corpus
+        # a phrase term absent from the corpus
+        return spark.createDataFrame([], _PHRASE_SCHEMA)
     tid_of = {t: stats[t]["tid"] for t in set(terms)}
     tids = sorted({tid_of[t] for t in terms})
 
@@ -401,7 +404,6 @@ def complex_phrase_docids(
     from functools import reduce
 
     spark = index.spark
-    empty = spark.createDataFrame([], "docid long, phrase_freq int")
     dict_df = index.term_dictionary(field)
     slot_tids: list[list[int]] = []
     for spec in slot_specs:
@@ -429,7 +431,7 @@ def complex_phrase_docids(
                 [stats[toks[0]]["tid"]] if toks[0] in stats else []
             )
             if not slot_tids[-1]:
-                return empty
+                return spark.createDataFrame([], _PHRASE_SCHEMA)
             continue
         rows = cand.select("tid").limit(max_expansions + 1).collect()
         if len(rows) > max_expansions:
@@ -438,7 +440,7 @@ def complex_phrase_docids(
                 f"max_expansions={max_expansions}"
             )
         if not rows:
-            return empty
+            return spark.createDataFrame([], _PHRASE_SCHEMA)
         slot_tids.append([r["tid"] for r in rows])
 
     all_tids = sorted({t for tids in slot_tids for t in tids})

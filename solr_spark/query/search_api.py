@@ -180,8 +180,8 @@ def _eval_bool(index: Index, node: BoolNode, now=None) -> DataFrame:
     least one SHOULD child; matching SHOULD scores always add.
     Field clauses are non-scoring restrictions in any positive position.
     """
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
+    def empty() -> DataFrame:  # built only on the paths that return it
+        return index.spark.createDataFrame([], "docid long, score double")
 
     # plain-term children fold into ONE postings scan (weights + occur)
     weights: dict[str, float] = {}
@@ -254,7 +254,7 @@ def _eval_bool(index: Index, node: BoolNode, now=None) -> DataFrame:
 
     base, n_must_tids, missing_must = _scored_tokens(index, weights, must_set)
     if missing_must:
-        return empty  # a required term is absent from the index
+        return empty()  # a required term is absent from the index
 
     parts: list[DataFrame] = []
     n_required = n_must_tids + len(must_extras)
@@ -267,11 +267,11 @@ def _eval_bool(index: Index, node: BoolNode, now=None) -> DataFrame:
 
     if not parts:
         if weights:
-            return empty  # scoring terms requested, none resolved
+            return empty()  # scoring terms requested, none resolved
         if filters or not_filters or ban_tokens or not_parts:
             agg = index.docs().select("docid", F.lit(1.0).alias("score"))
         else:
-            return empty
+            return empty()
     else:
         merged = parts[0]
         for p in parts[1:]:

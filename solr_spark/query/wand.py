@@ -35,21 +35,30 @@ All threshold comparisons carry a 1e-9 epsilon: partial sums are float64
 and Spark's aggregation order differs from the driver's. Widening the
 cut only grows the candidate superset — exactness is unaffected.
 
-Queries where pruning cannot help (single term, AND mode, T0=0, k past
-the skip-list horizon) delegate to the flat path instead of paying the
-decode overhead. Exactness (pruned == flat) is asserted in
+Routing is by volume first, then by prunability. A query whose
+postings volume (Σ df, read from the dictionary with no job) is at most
+DRIVER_DECODE_MAX_POSTINGS runs on the driver (`_wand_driver`) whatever
+its shape: OR with or without a MaxScore split, AND, single term, weak
+T0, and pending deletes (T0 left unseeded, deleted ids dropped before
+scoring). Its one shuffle-free scan undercuts the flat plan even when
+nothing can be pruned (measured up to the gate, with the figures at
+DRIVER_DECODE_MAX_POSTINGS). Above the gate, a query that
+MaxScore can prune takes the distributed formulation above; the rest
+(nothing prunable, essential lists most of the volume, pending deletes)
+take the flat `bm25_topk`, which stays the reference both venues are
+tested against: exactness (pruned == flat) is asserted in
 tests/test_wand.py for every shape.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.functions.bm25 import B, K1, idf_py
-from solr_spark.index.blocks import varint_decode
+from solr_spark.index.blocks import decode_blocks
 from solr_spark.index.builder import Index
 from solr_spark.query.engine import analyze_query, bm25_topk, norm_mode
 
@@ -57,175 +66,163 @@ from solr_spark.query.engine import analyze_query, bm25_topk, norm_mode
 #: differences between driver-side and executor-side arithmetic
 EPS = 1e-9
 
-#: query-postings budget for the driver-decode hybrid (~16 MB of
-#: block bytes); beyond it the distributed formulation takes over
+#: query-postings budget of the driver venue; beyond it the query runs
+#: distributed (pruned) or flat. Measured on a 1M-doc index with every
+#: block decoded (nothing prunable), local[2] and local[4] on 4 vCPUs:
+#: the driver beat flat `bm25_topk` at every volume up to 4.75M
+#: postings (4M: 0.81-0.98 s vs 2.39-3.86 s, with and without pending
+#: deletes); at 4M the Python process's peak RSS rose from ~160 MB to
+#: ~400-420 MB. A flat scan over more executor cores than that may
+#: cross over sooner (not measured)
 DRIVER_DECODE_MAX_POSTINGS = 4_000_000
 
-#: pruned paths only run when the essential lists are at most this
-#: fraction of the query's total postings (otherwise the decode skip
-#: cannot recoup its plumbing and the flat path wins by construction)
+#: over the driver gate, the distributed pruned path only runs when the
+#: essential lists are at most this fraction of the query's total
+#: postings (otherwise the decode skip cannot recoup its plumbing and
+#: the flat path wins by construction)
 PRUNE_MIN_SKIP_FRACTION = 0.3
 
 
-def _decode_rows(rows, weights: dict[int, float], avgdl: float):
-    """NumPy-decode collected block rows -> (docids, contribs, tids)."""
-    dd, cc, tt = [], [], []
-    for r in rows:
-        n = int(r["n_docs"])
-        deltas = varint_decode(r["docids_bin"], n)
-        deltas[0] = r["first_docid"]
-        docids = np.cumsum(deltas)
-        tfs = varint_decode(r["tfs_bin"], n).astype(np.float64)
-        dlqs = varint_decode(r["dlqs_bin"], n).astype(np.float64)
-        w = weights[int(r["tid"])]
-        cc.append(w * tfs / (tfs + K1 * (1.0 - B + B * dlqs / avgdl)))
-        dd.append(docids)
-        tt.append(np.repeat(np.int64(r["tid"]), n))
-    if not dd:
-        return (
-            np.zeros(0, np.int64), np.zeros(0, np.float64), np.zeros(0, np.int64)
+def _frame(spark, docids: np.ndarray, scores: np.ndarray) -> DataFrame:
+    """(docid, score) frame from driver arrays, shipped as one Arrow
+    table (a Python row list costs ~10x more to build and collect)."""
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "docid": pa.array(docids, pa.int64()),
+                "score": pa.array(scores, pa.float64()),
+            }
         )
-    return np.concatenate(dd), np.concatenate(cc), np.concatenate(tt)
+    )
+
+
+def _no_rows(spark) -> DataFrame:
+    return _frame(spark, np.zeros(0, np.int64), np.zeros(0, np.float64))
+
+
+def _score_blocks(batch, weights: dict[int, float], avgdl: float):
+    """Decode + BM25-score every block row of an Arrow batch in one
+    vectorized pass -> per-posting (docids, contribs).
+
+    weights: tid -> qtf*idf (the per-occurrence score multiplier)."""
+    docids, tfs, dlqs = decode_blocks(batch)
+    tid = np.asarray(batch.column("tid"), dtype=np.int64)
+    w = np.zeros(tid.size)
+    for g, wg in weights.items():
+        w[tid == g] = wg
+    w = np.repeat(w, np.asarray(batch.column("n_docs"), dtype=np.int64))
+    tfs = tfs.astype(np.float64)
+    dlqs = dlqs.astype(np.float64)
+    return docids, w * tfs / (tfs + K1 * (1.0 - B + B * dlqs / avgdl))
+
+
+#: block columns the driver venue reads (no salt/bucket/block-max stats)
+_DRIVER_COLS = (
+    "tid", "n_docs", "first_docid", "max_docid", "docids_bin", "tfs_bin", "dlqs_bin",
+)
 
 
 def _wand_driver(
     index: Index,
     weights: dict[int, float],
     ub: dict[int, float],
-    essential: list[int],
     non_essential: list[int],
     t0: float,
     k: int,
     avgdl: float,
+    n_and: int,
+    dead: np.ndarray | None,
     debug: dict | None,
 ) -> DataFrame:
-    """Bounded-volume pruned top-k: ONE shuffle-free scan job + driver
-    NumPy. All blocks of the query's tids are collected in a single
+    """Bounded-volume top-k: ONE shuffle-free scan job + driver NumPy.
+    All blocks of the query's tids arrive as one Arrow table from a
     pruned parquet scan (the volume gate bounds the transfer); the
     MaxScore algebra then runs on the driver:
 
-    - decode the essential (rare) lists -> exact partial scores s_hat;
-    - T = max(T0, kth best s_hat); candidates = bound >= T;
-    - if the candidate set is small, decode ONLY the non-essential
-      blocks whose [first_docid, max_docid] range contains a candidate
-      (vectorized range check on the already-collected metadata) — the
-      decode-skip that makes pruning pay;
-    - if it is large (mid-frequency terms, weak threshold), decode
-      everything — still exact, still the same single job.
+    - decode the essential lists -> exact partial scores s_hat, after
+      dropping `dead` (pending deletes) docids; n_and > 0 (AND mode,
+      every term essential) keeps the docs matching all n_and terms;
+    - with no non-essential term, s_hat is the final score;
+    - otherwise T = max(T0, kth best s_hat) and the candidates are the
+      docs with s_hat + Σ non-essential ub >= T. Only the non-essential
+      blocks whose [first_docid, max_docid] range holds a candidate are
+      decoded (a vectorized range check on the fetched metadata) — the
+      decode-skip that makes pruning pay.
 
     This is the same role split as a Solr shard executing a top-k
     locally: the distributed path below handles volumes that cannot sit
     on one node, and tests force it to prove both venues agree.
     """
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     ptids = list(weights)
-    rows = (
+    tbl = (
         index.blocks()
         .where(F.col("bucket").isin(index.pbuckets_for(ptids)))
         .where(F.col("tid").isin(ptids))
-        .collect()
+        .select(*_DRIVER_COLS)
+        .toArrow()
     )
-    ess_set = set(essential)
-    ess_rows = [r for r in rows if r["tid"] in ess_set]
-    ne_rows = [r for r in rows if r["tid"] not in ess_set]
-    docids, contribs, tids = _decode_rows(
-        ess_rows, {g: weights[g] for g in essential}, avgdl
-    )
-    if docids.size == 0:
-        return empty
+    is_ne = np.isin(np.asarray(tbl.column("tid"), dtype=np.int64), non_essential)
+    ess = tbl.filter(pa.array(~is_ne))
+    ne = tbl.filter(pa.array(is_ne))
+    docids, contribs = _score_blocks(ess, weights, avgdl)
+    if dead is not None:
+        live = ~np.isin(docids, dead)
+        docids, contribs = docids[live], contribs[live]
     uniq, inv = np.unique(docids, return_inverse=True)
-    s_hat = np.zeros(uniq.size)
-    np.add.at(s_hat, inv, contribs)
-    ub_per_row = np.array([ub[int(t)] for t in tids])
-    covered = np.zeros(uniq.size)
-    np.add.at(covered, inv, ub_per_row)
-    ess_ub_total = sum(ub[g] for g in essential)
-    ne_ub_total = sum(ub[g] for g in non_essential)
+    s_hat = np.bincount(inv, weights=contribs, minlength=uniq.size)
+    if n_and:
+        keep = np.bincount(inv, minlength=uniq.size) == n_and
+        uniq, s_hat = uniq[keep], s_hat[keep]
 
-    t1 = 0.0
-    if uniq.size >= k:
-        t1 = float(np.partition(s_hat, uniq.size - k)[uniq.size - k])
-    thresh = max(t0, t1)
-    bound = s_hat + (ess_ub_total - covered) + ne_ub_total
-    mask = bound >= thresh - EPS
-    cand_ids = uniq[mask]
-    cand_shat = s_hat[mask]
-    if cand_ids.size == 0:
-        return empty
-
-    ne_weights = {g: weights[g] for g in non_essential}
-    if cand_ids.size > max(50 * k, 2000):
-        # weak threshold: decode-skip cannot pay — decode everything
-        # (exact, and the data is already here; no extra job)
-        hit_rows = ne_rows
-        nd, nc, _ = _decode_rows(hit_rows, ne_weights, avgdl)
-        all_d = np.concatenate([docids, nd])
-        all_c = np.concatenate([contribs, nc])
-        fin_ids, fin_inv = np.unique(all_d, return_inverse=True)
-        scores = np.zeros(fin_ids.size)
-        np.add.at(scores, fin_inv, all_c)
-        out_ids = fin_ids
-    else:
-        # vectorized range check on collected metadata: a block can hold
-        # a candidate iff some cand in [first_docid, max_docid]
-        firsts = np.array([r["first_docid"] for r in ne_rows], dtype=np.int64)
-        maxs = np.array([r["max_docid"] for r in ne_rows], dtype=np.int64)
-        lo = np.searchsorted(cand_ids, firsts, side="left")
-        hi = np.searchsorted(cand_ids, maxs, side="right")
-        hit_rows = [r for r, keep in zip(ne_rows, hi > lo) if keep]
-        cd, cc2, _ = _decode_rows(hit_rows, ne_weights, avgdl)
-        scores = cand_shat.copy()
-        if cd.size:
-            pos = np.searchsorted(cand_ids, cd)
-            ok = (pos < cand_ids.size) & (
-                cand_ids[np.minimum(pos, cand_ids.size - 1)] == cd
-            )
-            np.add.at(scores, pos[ok], cc2[ok])
-        out_ids = cand_ids
+    if non_essential:
+        # s_hat is EXACT over the essential terms, so a doc's final
+        # score is at most s_hat + Σ non-essential ub
+        t1 = 0.0
+        if uniq.size >= k:
+            t1 = float(np.partition(s_hat, uniq.size - k)[uniq.size - k])
+        thresh = max(t0, t1)
+        mask = s_hat + sum(ub[g] for g in non_essential) >= thresh - EPS
+        uniq, s_hat = uniq[mask], s_hat[mask]
+        # a block can hold a candidate iff one lies in its range
+        lo = np.searchsorted(uniq, np.asarray(ne.column("first_docid")), "left")
+        hi = np.searchsorted(uniq, np.asarray(ne.column("max_docid")), "right")
+        ne = ne.filter(pa.array(hi > lo))
+        cd, cc = _score_blocks(ne, weights, avgdl)
+        pos = np.searchsorted(uniq, cd)
+        ok = (pos < uniq.size) & (uniq[np.minimum(pos, uniq.size - 1)] == cd)
+        np.add.at(s_hat, pos[ok], cc[ok])
 
     if debug is not None:
         debug["path"] = "driver"
-        debug["n_candidates"] = int(cand_ids.size)
-        debug["blocks_decoded"] = len(ess_rows) + len(hit_rows)
-        debug["blocks_total"] = len(rows)
+        debug["pruned"] = bool(non_essential)
+        debug["n_candidates"] = int(uniq.size)
+        debug["blocks_decoded"] = ess.num_rows + ne.num_rows
+        debug["blocks_total"] = tbl.num_rows
 
-    order = np.lexsort((out_ids, -np.round(scores, 9)))[:k]
-    out = [(int(out_ids[i]), float(scores[i])) for i in order]
-    return spark.createDataFrame(out, "docid long, score double")
+    order = np.lexsort((uniq, -np.round(s_hat, 9)))[:k]
+    return _frame(index.spark, uniq[order], s_hat[order])
 
 
 def _decode_score_fn(weights: dict[int, float], avgdl: float):
-    """mapInPandas: block rows (+`ubw` col) -> (docid, contrib, ubv) rows.
+    """mapInArrow: block rows (+`ubw` col) -> (docid, contrib, ubv) rows.
 
-    weights: tid -> qtf*idf (the per-occurrence score multiplier); `ubw`
-    rides through per posting so the aggregation can track the covered
-    upper bound without a join.
+    `ubw` rides through per posting so the aggregation can track the
+    covered upper bound without a join.
     """
 
     def fn(batches):
-        for pdf in batches:
-            out_docid, out_contrib, out_ub = [], [], []
-            for r in pdf.itertuples(index=False):
-                n = int(r.n_docs)
-                deltas = varint_decode(r.docids_bin, n)
-                deltas[0] = r.first_docid
-                docids = np.cumsum(deltas)
-                tfs = varint_decode(r.tfs_bin, n).astype(np.float64)
-                dlqs = varint_decode(r.dlqs_bin, n).astype(np.float64)
-                w = weights[int(r.tid)]
-                contrib = w * tfs / (tfs + K1 * (1.0 - B + B * dlqs / avgdl))
-                out_docid.append(docids)
-                out_contrib.append(contrib)
-                out_ub.append(np.full(n, float(r.ubw)))
-            if out_docid:
-                yield pd.DataFrame(
-                    {
-                        "docid": np.concatenate(out_docid),
-                        "contrib": np.concatenate(out_contrib),
-                        "ubv": np.concatenate(out_ub),
-                    }
-                )
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            docids, contribs = _score_blocks(rb, weights, avgdl)
+            ubv = np.repeat(
+                np.asarray(rb.column("ubw"), dtype=np.float64),
+                np.asarray(rb.column("n_docs"), dtype=np.int64),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(docids), pa.array(contribs), pa.array(ubv)],
+                names=["docid", "contrib", "ubv"],
+            )
 
     return fn
 
@@ -258,20 +255,10 @@ def bm25_topk_wand(
     runs extra count() jobs; the production path is ONE action.
     """
     mode = norm_mode(mode)
-    if index.has_deletes():
-        # pending deletes: the metadata-seeded threshold T0 counts
-        # deleted docs, so a live doc below T0 could be wrongly pruned
-        # — route to the flat path, whose liveDocs anti-join is exact at
-        # any delete ratio. expunge_deletes() restores pruning (it
-        # re-encodes the blocks from live postings).
-        if debug is not None:
-            debug["path"] = "flat_deletes"
-        return bm25_topk(index, qtext, k, mode, field=field)
     spark = index.spark
     qterms = analyze_query(qtext, index)
-    empty = spark.createDataFrame([], "docid long, score double")
     if not qterms:
-        return empty
+        return _no_rows(spark)
     n_docs = index.meta["n_docs"]
     if index.meta.get("fields"):
         # multi-field: the query targets ONE field; its avgdl feeds both
@@ -284,7 +271,7 @@ def bm25_topk_wand(
     stats = index.term_stats_for(list(qterms), field=fld)
     present = [t for t in qterms if t in stats]
     if not present or (mode == "AND" and len(present) < len(qterms)):
-        return empty
+        return _no_rows(spark)
 
     tid_of = {t: stats[t]["tid"] for t in present}
     weights = {
@@ -299,7 +286,27 @@ def bm25_topk_wand(
     ub = {g: weights[g] * float(mtps[g]) for g in weights}
     ptids = list(weights)
 
-    t0 = _seed_t0(weights, skips, k) if mode == "OR" and len(ptids) > 1 else 0.0
+    # route by volume first: the dictionary's df sum bounds the postings
+    # the query can touch, known with no job
+    total_volume = sum(int(stats[t]["df"]) for t in present)
+    on_driver = total_volume <= DRIVER_DECODE_MAX_POSTINGS
+    dead = None
+    if index.has_deletes():
+        # pending deletes: the driver venue drops the deleted ids before
+        # scoring (a broadcast-sized sidecar, cached per version); past
+        # the volume gate or the sidecar cap the flat path's liveDocs
+        # anti-join is the exact route at any delete ratio
+        dead = index.deleted_id_array() if on_driver else None
+        if dead is None:
+            if debug is not None:
+                debug["path"] = "flat_deletes"
+            return bm25_topk(index, qtext, k, mode, field=field)
+
+    # the metadata seed T0 counts deleted docs, so with deletes pending
+    # it could prune a live doc: leave it unseeded (every term essential)
+    t0 = 0.0
+    if mode == "OR" and len(ptids) > 1 and dead is None:
+        t0 = _seed_t0(weights, skips, k)
 
     # essential/non-essential split (MaxScore)
     non_essential: list[int] = []
@@ -312,39 +319,29 @@ def bm25_topk_wand(
             else:
                 break
     essential = [g for g in ptids if g not in non_essential]
-    if not non_essential:
-        # nothing prunable: the flat path is strictly cheaper than
-        # decode-everything (single term, AND mode, weak T0, huge k)
-        return bm25_topk(index, qtext, k, mode, field=field)
     if debug is not None:
         debug["present"] = list(present)
         debug["essential"] = [t for t in present if tid_of[t] in essential]
         debug["t0"] = t0
 
-    # driver-decode hybrid: when the ESSENTIAL postings volume is small
-    # (which is what the MaxScore split produces — essential terms are
-    # the rare ones), the whole pruned query fits in two shuffle-free
-    # scan jobs + NumPy on the driver. At bench scale a Spark job has a
-    # ~1 s fixed floor (scheduling + python workers + shuffle stages), so
-    # the distributed formulation pays 2x that floor and loses to the
-    # flat single job no matter how many blocks it skips; the driver
-    # path is the same algebra minus the floors. The volume gate keeps
-    # it sound at cluster scale: big essential sets (where driver decode
-    # would not fit) take the distributed path below.
-    total_volume = sum(int(stats[t]["df"]) for t in present)
+    if on_driver:
+        # one shuffle-free scan + driver decode serves every shape under
+        # the gate (OR, AND, single term, weak T0, pending deletes); it
+        # beat the flat plan at every volume measured up to the gate,
+        # with every block decoded (see DRIVER_DECODE_MAX_POSTINGS)
+        n_and = len(present) if mode == "AND" else 0
+        return _wand_driver(
+            index, weights, ub, non_essential, t0, k, avgdl, n_and, dead, debug
+        )
+
+    # over the gate: prune distributed when MaxScore can skip most of
+    # the volume; otherwise the flat scan decodes no more than a pruned
+    # formulation would and pays no extra plumbing (known from stats)
     ess_volume = sum(
         int(stats[t]["df"]) for t in present if tid_of[t] in essential
     )
-    if ess_volume > PRUNE_MIN_SKIP_FRACTION * total_volume:
-        # the essential lists ARE most of the postings volume (all-common
-        # queries with small idf spread): any pruned formulation decodes
-        # nearly as much as the flat scan and pays extra plumbing — known
-        # from stats alone, so bail before touching any data
+    if not non_essential or ess_volume > PRUNE_MIN_SKIP_FRACTION * total_volume:
         return bm25_topk(index, qtext, k, mode, field=field)
-    if total_volume <= DRIVER_DECODE_MAX_POSTINGS:
-        return _wand_driver(
-            index, weights, ub, essential, non_essential, t0, k, avgdl, debug
-        )
 
     ne_ub_total = sum(ub[g] for g in non_essential)
     ess_ub_total = sum(ub[g] for g in essential)
@@ -386,7 +383,7 @@ def bm25_topk_wand(
     )
     partial = (
         ess_blocks.withColumn("ubw", ub_map[F.col("tid")])
-        .mapInPandas(
+        .mapInArrow(
             _decode_score_fn({g: weights[g] for g in essential}, avgdl),
             schema="docid long, contrib double, ubv double",
         )
@@ -427,7 +424,7 @@ def bm25_topk_wand(
     if len(pre) == cap and pre[-1]["_bound"] >= thresh - EPS:
         return bm25_topk(index, qtext, k, mode, field=field)  # cap overflow: exact fallback
     if not cand_rows:
-        return empty
+        return _no_rows(spark)
     cand = spark.createDataFrame(cand_rows, "docid long, s_hat double")
 
     # (4) correction WITHOUT a flat-postings rescan: only pruned/non-
@@ -445,7 +442,7 @@ def bm25_topk_wand(
         debug["n_candidates"] = cand_ids.count()
     correction = (
         hit_blocks.withColumn("ubw", F.lit(0.0))
-        .mapInPandas(
+        .mapInArrow(
             _decode_score_fn(weights, avgdl),
             schema="docid long, contrib double, ubv double",
         )

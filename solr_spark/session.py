@@ -13,6 +13,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem(executors: int | None, meminfo: str = "/proc/meminfo") -> str:
+    """Default spark.driver.memory: half of the host's MemTotal, capped at
+    16g with separate executor JVMs and 64g in local mode (where the
+    driver JVM also runs every task). A heap sized past the host lets
+    the JVM grow until the host runs out of memory instead of
+    collecting. Falls back to the cap when `meminfo` is unreadable."""
+    cap_mb = (16 if executors else 64) * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # kB
+                    # floor: Spark refuses a driver heap under ~450 MB
+                    return f"{max(1024, min(cap_mb, total_mb // 2))}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "solr_spark",
     cores: int | None = None,
@@ -66,7 +85,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g" if executors else "64g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(executors),
         )
         .config("spark.executor.memory", f"{executor_mem_mb}m")
         .config("spark.ui.enabled", "false")

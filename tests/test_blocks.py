@@ -4,6 +4,7 @@ import numpy as np
 
 from solr_spark.index.blocks import (
     decode_block,
+    decode_blocks,
     encode_posting_list,
     make_block_encoder,
     varint_decode,
@@ -167,3 +168,36 @@ def test_stream_encoder_multi_field_avgdl():
         unsalted, 97,
     )
     assert got == want
+
+
+def test_decode_blocks_equals_per_block_varint():
+    """The one-pass decode of many blocks equals varint_decode per block
+    (docids seeded by first_docid) on salted, multi-block, multi-batch
+    encoder output, including a sliced (non-zero offset) table."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(17)
+    thr, nsalt = 150, 4
+    sizes = [int(rng.integers(thr + 1, 900)) if g % 4 == 0
+             else int(rng.integers(1, thr)) for g in range(16)]
+    unsalted, _ = _encoder_input(rng, sizes, thr, nsalt)
+    enc = make_block_encoder(101.5, 32, salt_threshold=thr, num_salts=nsalt)
+    batches = pa.Table.from_pydict(unsalted).to_batches(max_chunksize=300)
+    tbl = pa.Table.from_batches(list(enc(iter(batches))))
+    assert tbl.num_rows > 50 and tbl.column("docids_bin").num_chunks > 1
+    assert len(set(tbl.column("salt").to_pylist())) == nsalt
+
+    def per_block(rows):
+        parts = []
+        for r in rows:
+            n = r["n_docs"]
+            deltas = varint_decode(r["docids_bin"], n)
+            deltas[0] = r["first_docid"]
+            parts.append((np.cumsum(deltas), varint_decode(r["tfs_bin"], n),
+                          varint_decode(r["dlqs_bin"], n)))
+        return [np.concatenate(c) for c in zip(*parts)]
+
+    for view in (tbl, tbl.slice(7, 40), tbl.to_batches()[-1]):
+        got = decode_blocks(view)
+        for g, w in zip(got, per_block(view.to_pylist())):
+            assert g.dtype == np.int64 and np.array_equal(g, w)

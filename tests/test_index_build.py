@@ -308,10 +308,11 @@ def test_delete_by_query_and_expunge(spark, corpus, tmp_path):
 
     after = [r["docid"] for r in bm25_topk(idx, "return import", k=10).collect()]
     assert not set(victims) & set(after)
-    # WAND routes to the exact flat path under pending deletes
+    # under pending deletes WAND serves the query on the driver, with
+    # the deleted ids dropped before scoring
     dbg = {}
     wand = [r["docid"] for r in bm25_topk_wand(idx, "return import", k=10, debug=dbg).collect()]
-    assert dbg["path"] == "flat_deletes" and wand == after
+    assert dbg["path"] == "driver" and wand == after
     # stats unchanged until expunge (Lucene semantics)
     assert idx.meta["n_docs"] == corpus.count()
 
