@@ -443,10 +443,7 @@ def _ctx_docstat(key: str):
     def build(raws, index):
         fld = _need_str(raws[0], key, 0)
         term = _need_str(raws[1], key, 1)
-        if index.meta.get("fields"):
-            st = index.term_stats_fielded([(fld, term)]).get((fld, term))
-        else:
-            st = index.term_stats_for([term]).get(term)
+        st = index.term_stats_for([term], field=fld).get(term)
         if st is None:
             val = 0.0
         elif key == "docfreq":
@@ -615,10 +612,7 @@ def _perdoc_frame(name, args, raws, index, tag, df=None):
     if name in ("tf", "termfreq"):
         fld = _need_str(raws[0], name, 0)
         term = _need_str(raws[1], name, 1)
-        if index.meta.get("fields"):
-            st = index.term_stats_fielded([(fld, term)]).get((fld, term))
-        else:
-            st = index.term_stats_for([term]).get(term)
+        st = index.term_stats_for([term], field=fld).get(term)
         if st is None:
             return None, 0.0  # absent term: constant 0 everywhere
         tid = st["tid"]

@@ -309,13 +309,32 @@ class Index:
         return self._read(self.paths.docs)
 
     def postings(self) -> DataFrame:
-        return self._read(self.paths.postings)
+        """The postings every query scores: the live view, anti-joined
+        against the deletes sidecar while deletes are pending (no plan
+        node without them; see `minus_deleted`) — Lucene applies
+        liveDocs in one place, the leaf's bulk scorer, for every query.
+        Stats (n_docs/avgdl/df) keep their build-time values, exactly
+        Lucene's behavior with uncommitted deletes (docFreq/maxDoc count
+        deleted docs until segments merge), which also keeps block-max
+        upper bounds valid. Maintenance reads the raw table through
+        `_read(paths.postings)`."""
+        return self.minus_deleted(self._read(self.paths.postings))
 
     def blocks(self) -> DataFrame:
         return self._read(self.paths.blocks)
 
     def positions(self) -> DataFrame:
-        return self._read(self.paths.positions)
+        """The flat (tid, docid, pos) positions table, as a live view like
+        `postings()`. Every build since the flat layout writes it; an
+        older array-layout table is refused here, for every positional
+        query."""
+        pos = self._read(self.paths.positions)
+        if "pos" not in pos.columns:
+            raise ValueError(
+                "positional queries need the flat positions layout; "
+                "rebuild this index"
+            )
+        return self.minus_deleted(pos)
 
     def pin_memory(self, components: tuple = ("postings", "docs")) -> "Index":
         """Serving mode: persist the hot table frames in executor
@@ -454,15 +473,6 @@ class Index:
             dele = F.broadcast(dele)
         return df.join(dele, "docid", "left_anti")
 
-    def postings_live(self) -> DataFrame:
-        """Postings minus deleted docs. The deletes side broadcasts
-        while sidecar-sized (see `minus_deleted`); stats
-        (n_docs/avgdl/df) deliberately keep their build-time values —
-        exactly Lucene's behavior with uncommitted deletes
-        (docFreq/maxDoc count deleted docs until segments merge), which
-        also keeps block-max upper bounds valid."""
-        return self.minus_deleted(self.postings())
-
     def docs_live(self) -> DataFrame:
         return self.minus_deleted(self.docs())
 
@@ -545,7 +555,7 @@ class Index:
             "n_docs": self.meta.get("n_docs"),
             "avgdl": self.meta.get("avgdl"),
             "n_terms": self.term_stats().count(),
-            "n_postings": self.postings().count(),
+            "n_postings": self._read(self.paths.postings).count(),
             "num_chunks": self.meta.get("num_chunks"),
             "build_seconds": self.meta.get("build_seconds"),
             "has_blocks": self.meta.get("has_blocks"),
@@ -568,6 +578,16 @@ class Index:
             return ts
         return ts.where(F.col("field") == (field or flds[0]))
 
+    def scoring_field(self, field: str | None = None) -> tuple[str | None, float]:
+        """(field, avgdl) a scored query runs against: the given field, or
+        the first indexed one, with that field's own norms on a
+        multi-field index; (None, avgdl) on a single-field index."""
+        flds = self.meta.get("fields")
+        if not flds:
+            return None, float(self.meta["avgdl"])
+        fld = field or flds[0]
+        return fld, float(self.meta["avgdl_by_field"][fld])
+
     def term_stats_for(
         self, terms: list[str], field: str | None = None
     ) -> dict[str, dict]:
@@ -576,50 +596,14 @@ class Index:
         analogue of the term-dictionary seek). On a multi-field index the
         lookup is scoped to `field` (default: first indexed field) so a
         term never resolves to an arbitrary field's tid/df."""
-        if not terms:
-            return {}
         flds = self.meta.get("fields")
-        if flds:
-            fld = field or flds[0]
-            return {
-                t: s
-                for (_, t), s in self.term_stats_fielded(
-                    [(fld, t) for t in terms]
-                ).items()
-            }
-        out, misses = {}, []
-        for t in terms:
-            hit, s = self._dict_get((None, t))
-            if hit:
-                if s is not None:
-                    out[t] = s
-            else:
-                misses.append(t)
-        if not misses:
-            return out
-        rows = (
-            self.term_stats()
-            .where(F.col("bucket").isin(self.buckets_for(misses)))
-            .where(F.col("term").isin(misses))
-            .collect()
-        )
-        found = {}
-        for r in rows:
-            d = {"tid": r["tid"], "df": r["df"], "cttf": r["cttf"]}
-            if "mtp" in r.__fields__:
-                d["mtp"] = r["mtp"]
-                d["skips"] = (
-                    [(s["m"], s["nd"]) for s in r["skips"]]
-                    if r["skips"] is not None
-                    else None
-                )
-            found[r["term"]] = d
-        for t in set(misses):
-            d = found.get(t)
-            self._dict_put((None, t), d)  # negatives cached too
-            if d is not None:
-                out[t] = d
-        return out
+        fld = (field or flds[0]) if flds else None
+        return {
+            t: s
+            for (_, t), s in self.term_stats_fielded(
+                [(fld, t) for t in terms]
+            ).items()
+        }
 
     def _dict_get(self, key) -> tuple[bool, dict | None]:
         """(hit, stats-or-None) from the term-dictionary LRU. A cached
@@ -643,13 +627,12 @@ class Index:
             lru.popitem(last=False)
 
     def term_stats_fielded(
-        self, pairs: list[tuple[str, str]]
-    ) -> dict[tuple[str, str], dict]:
-        """{(field, term): {tid, df, cttf}} on a multi-field index —
-        the per-field dictionary seek (one scan covers every qf field;
-        bucket pruning is by term, the field filter rides the same scan)."""
-        if not pairs:
-            return {}
+        self, pairs: list[tuple[str | None, str]]
+    ) -> dict[tuple[str | None, str], dict]:
+        """{(field, term): {tid, df, cttf}} — the one dictionary seek,
+        keyed by (field, term) on a multi-field index and (None, term)
+        on a single-field one. One scan covers every field asked for:
+        bucket pruning is by term, the field filter rides the same scan."""
         out, miss_pairs = {}, []
         for key in dict.fromkeys(pairs):  # de-dup, keep order
             hit, s = self._dict_get(key)
@@ -661,19 +644,16 @@ class Index:
         if not miss_pairs:
             return out
         terms = sorted({t for _, t in miss_pairs})
-        flds = sorted({f for f, _ in miss_pairs})
-        want = set(miss_pairs)
-        rows = (
+        flds = sorted({f for f, _ in miss_pairs if f is not None})
+        ts = (
             self.term_stats()
             .where(F.col("bucket").isin(self.buckets_for(terms)))
             .where(F.col("term").isin(terms))
-            .where(F.col("field").isin(flds))
-            .collect()
         )
+        if flds:
+            ts = ts.where(F.col("field").isin(flds))
         found = {}
-        for r in rows:
-            if (r["field"], r["term"]) not in want:
-                continue
+        for r in ts.collect():
             d = {"tid": r["tid"], "df": r["df"], "cttf": r["cttf"]}
             if "mtp" in r.__fields__:
                 d["mtp"] = r["mtp"]
@@ -682,10 +662,10 @@ class Index:
                     if r["skips"] is not None
                     else None
                 )
-            found[(r["field"], r["term"])] = d
+            found[(r["field"] if flds else None, r["term"])] = d
         for key in miss_pairs:
             d = found.get(key)
-            self._dict_put(key, d)
+            self._dict_put(key, d)  # negatives cached too
             if d is not None:
                 out[key] = d
         return out

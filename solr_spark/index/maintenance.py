@@ -7,10 +7,11 @@ merge (forceMerge / expungeDeletes). The Spark shape:
 
 - deletes land in a snapshot-committed `deletes/` sidecar table of
   docids (sources/snapshots.py: atomic manifest commit — a crash never
-  publishes a torn delete batch). Query paths exclude them via a
-  BROADCAST anti-join (`Index.postings_live`), and — faithful to
-  Lucene — corpus statistics keep their build-time values until the
-  index is compacted, so block-max metadata stays a valid upper bound.
+  publishes a torn delete batch). Every query excludes them in one
+  place: `Index.postings()`/`positions()` are live views (a BROADCAST
+  anti-join while the sidecar is small), and — faithful to Lucene —
+  corpus statistics keep their build-time values until the index is
+  compacted, so block-max metadata stays a valid upper bound.
 - `expunge_deletes` is the merge: rewrite postings/docs/positions
   without the deleted rows (same bucketed layout), re-encode block-max
   blocks from the live postings through the build's own encode path
@@ -20,10 +21,12 @@ merge (forceMerge / expungeDeletes). The Spark shape:
   stay build-time (expungeDeletes semantics); a stats refresh is a
   rebuild — `sources.snapshots.build_index_versioned` is that path.
 
-While deletes are pending, the pruned WAND path routes to the flat
-engine: WAND's metadata-seeded threshold T0 counts deleted docs, so a
-live doc below T0 could be wrongly pruned; the flat path's anti-join
-is exact at any delete ratio. expunge restores pruning.
+While deletes are pending, WAND leaves its threshold T0 unseeded (the
+metadata seed counts deleted docs, so a live doc below it could be
+wrongly pruned): the driver venue drops the deleted ids before scoring,
+and past its volume gate or the sidecar's broadcast cap the query runs
+on the flat path, whose live postings are exact at any delete ratio.
+expunge restores the seeded threshold.
 """
 
 from __future__ import annotations
@@ -36,7 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.index.builder import (
-    DELETES_BROADCAST_CAP,
     Index,
     IndexPaths,
     _corpus_stats,
@@ -123,27 +125,23 @@ def expunge_deletes(index: Index) -> dict:
     report: dict = {"expunged": 0}
     if not index.has_deletes():
         return report
-    dele = index.deleted_ids().persist()
-    n_del = dele.count()
-    report["expunged"] = int(n_del)
+    report["expunged"] = index.deleted_ids().count()
     num_buckets = int(index.meta["num_buckets"])
-    # the delete set was just counted — broadcast only when it fits
-    dele_j = F.broadcast(dele) if n_del <= DELETES_BROADCAST_CAP else dele
 
-    live_post = index.postings().join(dele_j, "docid", "left_anti")
+    # the live views are the compacted tables
     tmp_post = paths.postings + ".compact"
-    _write_bucketed(live_post, tmp_post, num_buckets, ("tid", "docid"))
+    _write_bucketed(index.postings(), tmp_post, num_buckets, ("tid", "docid"))
     _swap_dir(tmp_post, paths.postings)
 
-    live_docs = index.docs().join(dele_j, "docid", "left_anti")
     tmp_docs = paths.docs + ".compact"
-    live_docs.write.mode("overwrite").parquet(tmp_docs)
+    index.docs_live().write.mode("overwrite").parquet(tmp_docs)
     _swap_dir(tmp_docs, paths.docs)
 
     if index.meta.get("has_positions") and os.path.isdir(paths.positions):
-        live_pos = index.positions().join(dele_j, "docid", "left_anti")
         tmp_pos = paths.positions + ".compact"
-        _write_bucketed(live_pos, tmp_pos, num_buckets, ("tid", "docid", "pos"))
+        _write_bucketed(
+            index.positions(), tmp_pos, num_buckets, ("tid", "docid", "pos")
+        )
         _swap_dir(tmp_pos, paths.positions)
 
     # the swapped dirs invalidate any memoized table handles NOW, not
@@ -154,7 +152,6 @@ def expunge_deletes(index: Index) -> dict:
         _reencode_blocks(index)
         report["blocks_reencoded"] = True
 
-    dele.unpersist()
     shutil.rmtree(paths.deletes, ignore_errors=True)
     # the rewritten files (dictionary mtp/skips included) invalidate
     # every handle cache: the commit-opens-a-new-searcher analogue
@@ -234,7 +231,9 @@ def merge_indexes(a: Index, b: Index, out_root: str) -> Index:
     def shifted(df: DataFrame) -> DataFrame:
         return df.withColumn("docid", F.col("docid") + F.lit(offset))
 
-    merged_post = a.postings().unionByName(shifted(b.postings()))
+    merged_post = a._read(a.paths.postings).unionByName(
+        shifted(b._read(b.paths.postings))
+    )
     _write_bucketed(merged_post, paths.postings, num_buckets, ("tid", "docid"))
 
     a.docs().unionByName(shifted(b.docs())).write.mode("overwrite").parquet(
@@ -246,7 +245,9 @@ def merge_indexes(a: Index, b: Index, out_root: str) -> Index:
     )
     if has_positions:
         _write_bucketed(
-            a.positions().unionByName(shifted(b.positions())),
+            a._read(a.paths.positions).unionByName(
+                shifted(b._read(b.paths.positions))
+            ),
             paths.positions, num_buckets, ("tid", "docid", "pos"),
         )
 

@@ -61,42 +61,32 @@ def analyze_query(qtext: str, index: Index | None = None) -> dict[str, int]:
 
 
 def _scored_postings(
-    index: Index, qterms: dict[str, int], field: str | None = None
-) -> tuple[DataFrame, int]:
+    index: Index, qterms: dict[str, float], field: str | None = None
+) -> tuple[DataFrame | None, dict[str, dict]]:
     """Postings of the query terms with per-(term,doc) contributions.
 
     Phase A (tiny, bucket-pruned term_stats scan): resolve term -> (tid,
     df) and compute idf with the GLOBAL df — the Spark shape of the
     distributed-stats exchange
     (solr/core/src/java/org/apache/solr/search/stats/ExactStatsCache.java:62).
-    Phase B: scan only the postings partitions of those tids, with the
-    tid IN (...) literal list pushed down to the parquet scan.
+    Phase B: scan only the live postings partitions of those tids, with
+    the tid IN (...) literal list pushed down to the parquet scan.
+    `qterms` maps each term to its query weight (qtf, or a summed boost).
 
-    Returns (scored df, n_present_terms).
+    Returns (DF(tid, docid, contrib) or None, stats of the present terms).
     """
-    spark = index.spark
     n_docs = index.meta["n_docs"]
-    if index.meta.get("fields"):
-        # multi-field index: per-field dictionary + per-field norms
-        fld = field or index.meta["fields"][0]
-        avgdl = index.meta["avgdl_by_field"][fld]
-        stats = {
-            t: s
-            for (_, t), s in index.term_stats_fielded(
-                [(fld, t) for t in qterms]
-            ).items()
-        }
-    else:
-        avgdl = index.meta["avgdl"]
-        stats = index.term_stats_for(list(qterms))
+    fld, avgdl = index.scoring_field(field)
+    stats = index.term_stats_for(list(qterms), field=fld)
     if not stats:
-        return spark.createDataFrame([], "docid long, contrib double"), 0
+        return None, stats
     tids = [s["tid"] for s in stats.values()]
     postings = (
-        index.postings_live()  # liveDocs: deleted docs never score
+        index.postings()
         .where(F.col("bucket").isin(index.pbuckets_for(tids)))
         .where(F.col("tid").isin(tids))
     )
+    tp = tf_part_col(F.col("tf"), F.col("dl_q"), avgdl)
     if len(stats) <= QREL_INLINE_MAX:
         # interactive fast path: the per-tid weight qtf*idf is a
         # CONSTANT, so inline it as a chained CASE WHEN on tid instead
@@ -108,14 +98,8 @@ def _scored_postings(
             weight = F.lit(float(qterms[t]) * idf_py(int(s["df"]), n_docs))
             cond = F.col("tid") == int(s["tid"])
             w = F.when(cond, weight) if w is None else w.when(cond, weight)
-        scored = postings.select(
-            "docid",
-            (w * tf_part_col(F.col("tf"), F.col("dl_q"), float(avgdl))).alias(
-                "contrib"
-            ),
-        )
-        return scored, len(stats)
-    qrel = spark.createDataFrame(
+        return postings.select("tid", "docid", (w * tp).alias("contrib")), stats
+    qrel = index.spark.createDataFrame(
         [
             (s["tid"], float(qterms[t]), idf_py(int(s["df"]), n_docs))
             for t, s in stats.items()
@@ -123,14 +107,9 @@ def _scored_postings(
         "tid long, qtf double, idf double",
     )
     scored = postings.join(F.broadcast(qrel), "tid").select(
-        "docid",
-        (
-            F.col("qtf")
-            * F.col("idf")
-            * tf_part_col(F.col("tf"), F.col("dl_q"), float(avgdl))
-        ).alias("contrib"),
+        "tid", "docid", (F.col("qtf") * F.col("idf") * tp).alias("contrib")
     )
-    return scored, len(stats)
+    return scored, stats
 
 
 def bm25_scores(
@@ -143,9 +122,8 @@ def bm25_scores(
     the full score frame to join by docid, not a top-k."""
     mode = norm_mode(mode)
     qterms = analyze_query(qtext, index)
-    scored, n_present = (
-        _scored_postings(index, qterms, field) if qterms else (None, 0)
-    )
+    scored, stats = _scored_postings(index, qterms, field)
+    n_present = len(stats)
     if n_present == 0 or (mode == "AND" and n_present < len(qterms)):
         return index.spark.createDataFrame([], "docid long, score double")
     agg = scored.groupBy("docid").agg(
@@ -174,9 +152,8 @@ def bm25_topk(
     """
     mode = norm_mode(mode)
     qterms = analyze_query(qtext, index)
-    scored, n_present = (
-        _scored_postings(index, qterms, field) if qterms else (None, 0)
-    )
+    scored, stats = _scored_postings(index, qterms, field)
+    n_present = len(stats)
     if n_present == 0 or (mode == "AND" and n_present < len(qterms)):
         result = index.spark.createDataFrame([], "docid long, score double")
     else:
@@ -284,8 +261,6 @@ def bm25_explain(
     query path, PLUS docid IN (...) pushed to the scan — explain work is
     O(|terms|·|docids|), never corpus-sized.
     """
-    from solr_spark.functions.bm25 import tf_part_col
-
     spark = index.spark
     n_docs = index.meta["n_docs"]
     qterms = analyze_query(qtext, index)
@@ -296,18 +271,8 @@ def bm25_explain(
     )
     if not qterms:
         return empty
-    if index.meta.get("fields"):
-        fld = field or index.meta["fields"][0]
-        avgdl = index.meta["avgdl_by_field"][fld]
-        stats = {
-            t: s
-            for (_, t), s in index.term_stats_fielded(
-                [(fld, t) for t in qterms]
-            ).items()
-        }
-    else:
-        avgdl = index.meta["avgdl"]
-        stats = index.term_stats_for(list(qterms))
+    fld, avgdl = index.scoring_field(field)
+    stats = index.term_stats_for(list(qterms), field=fld)
     if not stats:
         return empty
     qrel = spark.createDataFrame(
@@ -319,16 +284,15 @@ def bm25_explain(
         "tid long, term string, qtf double, df long, idf double",
     )
     tids = [s["tid"] for s in stats.values()]
-    # postings_live, not postings: explain must agree with search while
-    # deletes are pending (a deleted doc scores nowhere, so it also has
-    # no breakdown) — round-4 advice
+    # the live view: explain agrees with search while deletes are
+    # pending (a deleted doc scores nowhere, so it has no breakdown)
     postings = (
-        index.postings_live()
+        index.postings()
         .where(F.col("bucket").isin(index.pbuckets_for(tids)))
         .where(F.col("tid").isin(tids))
         .where(F.col("docid").isin([int(x) for x in docids]))
     )
-    tp = tf_part_col(F.col("tf"), F.col("dl_q"), float(avgdl))
+    tp = tf_part_col(F.col("tf"), F.col("dl_q"), avgdl)
     return (
         postings.join(F.broadcast(qrel), "tid")
         .select(
@@ -389,18 +353,8 @@ def bm25_topk_batch(
     )
     if not all_terms:
         return empty
-    if index.meta.get("fields"):
-        fld = field or index.meta["fields"][0]
-        avgdl = index.meta["avgdl_by_field"][fld]
-        stats = {
-            t: s
-            for (_, t), s in index.term_stats_fielded(
-                [(fld, t) for t in all_terms]
-            ).items()
-        }
-    else:
-        avgdl = index.meta["avgdl"]
-        stats = index.term_stats_for(all_terms)
+    fld, avgdl = index.scoring_field(field)
+    stats = index.term_stats_for(all_terms, field=fld)
     # CANONICALIZE: real query logs are head-heavy — many qids analyze
     # to the SAME term multiset, and each duplicate would otherwise pay
     # the full postings fan-out (measured: 256 qids over 6 distinct
@@ -440,7 +394,7 @@ def bm25_topk_batch(
     )
     tids = sorted({r[1] for r in qrel_rows})
     postings = (
-        index.postings_live()
+        index.postings()
         .where(F.col("bucket").isin(index.pbuckets_for(tids)))
         .where(F.col("tid").isin(tids))
     )
@@ -450,7 +404,7 @@ def bm25_topk_batch(
         (
             F.col("qtf")
             * F.col("idf")
-            * tf_part_col(F.col("tf"), F.col("dl_q"), float(avgdl))
+            * tf_part_col(F.col("tf"), F.col("dl_q"), avgdl)
         ).alias("contrib"),
     )
     agg = contrib.groupBy("qid", "docid").agg(
@@ -494,10 +448,8 @@ def bm25_topk_maxscore(
     tie=0. Same single-job shape as bm25_topk — only the aggregate
     changes."""
     qterms = analyze_query(qtext, index)
-    scored, n_present = (
-        _scored_postings(index, qterms, field) if qterms else (None, 0)
-    )
-    if n_present == 0:
+    scored, stats = _scored_postings(index, qterms, field)
+    if not stats:
         return index.spark.createDataFrame([], "docid long, score double")
     return (
         scored.groupBy("docid")

@@ -103,14 +103,11 @@ def payload_score(
         )
     # a matching doc whose positions carry no payloads scores 0, not
     # NULL (Lucene PayloadFunction.docScore with numPayloadsSeen == 0)
-    out = rows.groupBy("docid").agg(
+    return rows.groupBy("docid").agg(
         F.coalesce(
             _FUNCS[func]("payload").cast("double"), F.lit(0.0)
         ).alias("score")
     )
-    if index.has_deletes():
-        out = index.minus_deleted(out)
-    return out
 
 
 _OPS = {
@@ -146,7 +143,4 @@ def payload_check(
         spans = spans.where(
             _OPS[op](F.col(f"payload_{i}"), F.lit(float(want)))
         )
-    out = spans.groupBy("docid").agg(F.count(F.lit(1)).alias("n_spans"))
-    if index.has_deletes():
-        out = index.minus_deleted(out)
-    return out
+    return spans.groupBy("docid").agg(F.count(F.lit(1)).alias("n_spans"))

@@ -6,7 +6,7 @@ them via parser/SolrQueryParserBase.java:547-554). Round 1 re-derived
 positions from the raw text at query time — a full-corpus scan per
 phrase query (VERDICT.md item 3). The positions table removes that:
 
-    positions/(tid long, docid long, positions array<int>, bucket int)
+    positions/(tid long, docid long, pos int, bucket int)
 
 partitioned by bucket = tid % num_buckets like postings, so a phrase
 query scans ONLY the partitions of its terms (driver-pruned after the
@@ -287,6 +287,61 @@ def chain_match_count_sql(pos_exprs: list[str], slop: int = 0) -> str:
     return f"len({cur})"
 
 
+def _match_slots(
+    index: Index,
+    slots: list[list[int]],
+    slop: int,
+    ordered: bool,
+    window: bool = False,
+    terms: list[str] | None = None,
+) -> DataFrame:
+    """(docid, phrase_freq) of docs where the phrase's slots line up.
+    Slot j matches any tid in `slots[j]`: one tid for a plain term, a
+    dictionary expansion for a complex-phrase slot.
+
+    The positions table stores FLAT (tid, docid, pos) rows (one build
+    shuffle — builder._positions_from_docs), so the arrays are assembled
+    HERE, on the bucket-pruned live scan of the query's tids only: ONE
+    groupBy builds every distinct slot's sorted array (collect_list(when)
+    drops the nulls, so each array holds only its slot's positions) and
+    drops docs missing any slot; a repeated slot reuses its array. Then
+    the matcher: the ordered chain, the window approximation, or the
+    Lucene-exact sloppy count, whose repeated-term distinctness handling
+    `terms` (query order) enables."""
+    col_of = {
+        key: f"_s_{i}"
+        for i, key in enumerate(dict.fromkeys(tuple(sorted(s)) for s in slots))
+    }
+    tids = sorted({t for key in col_of for t in key})
+    joined = (
+        index.positions()
+        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
+        .where(F.col("tid").isin(tids))
+        .groupBy("docid")
+        .agg(
+            *[
+                F.sort_array(
+                    F.collect_list(
+                        F.when(F.col("tid").isin(list(key)), F.col("pos"))
+                    )
+                ).alias(c)
+                for key, c in col_of.items()
+            ]
+        )
+        .where(reduce(lambda a, b: a & b, [F.size(c) > 0 for c in col_of.values()]))
+    )
+    pos_cols = [F.col(col_of[tuple(sorted(s))]) for s in slots]
+    if ordered:
+        freq = chain_match_count(pos_cols, slop)
+    elif window:
+        freq = window_match_count(pos_cols, slop)
+    else:
+        freq = sloppy_match_count(pos_cols, slop, terms)
+    return joined.select("docid", freq.cast("int").alias("phrase_freq")).where(
+        F.col("phrase_freq") > 0
+    )
+
+
 def phrase_docids(
     index: Index,
     words: list[str],
@@ -308,79 +363,13 @@ def phrase_docids(
         terms.extend(index.analyze(w))
     if not terms:
         return spark.createDataFrame([], _PHRASE_SCHEMA)
-    if index.meta.get("fields"):
-        fld = field or index.meta["fields"][0]
-        fstats = index.term_stats_fielded([(fld, t) for t in set(terms)])
-        stats = {t: s for (_, t), s in fstats.items()}
-    else:
-        stats = index.term_stats_for(sorted(set(terms)))
+    stats = index.term_stats_for(sorted(set(terms)), field=field)
     if any(t not in stats for t in terms):
         # a phrase term absent from the corpus
         return spark.createDataFrame([], _PHRASE_SCHEMA)
-    tid_of = {t: stats[t]["tid"] for t in set(terms)}
-    tids = sorted({tid_of[t] for t in terms})
-
-    pos = (
-        index.positions()
-        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
-        .where(F.col("tid").isin(tids))
+    return _match_slots(
+        index, [[stats[t]["tid"]] for t in terms], slop, ordered, window, terms
     )
-    # pivot the j-th term's positions onto one row per docid; duplicate
-    # terms in the phrase reuse the same positions array. The positions
-    # table stores FLAT (tid, docid, pos) rows (one build shuffle, not
-    # two — builder._positions_from_docs), so the arrays are assembled
-    # HERE, on the bucket-pruned scan of the query's terms only; older
-    # array-layout indexes are read as-is.
-    flat = "pos" in pos.columns
-    if flat:
-        # ONE groupBy assembles every term's array: collect_list(when)
-        # drops the nulls, so each _p_<tid> holds only that term's
-        # positions; docs missing ANY term are filtered (the join-chain
-        # semantics of the array layout, without t joins)
-        joined = (
-            pos.groupBy("docid")
-            .agg(
-                *[
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(F.col("tid") == tid, F.col("pos"))
-                        )
-                    ).alias(f"_p_{tid}")
-                    for tid in tids
-                ]
-            )
-            .where(
-                reduce(
-                    lambda a, b: a & b,
-                    [F.size(f"_p_{tid}") > 0 for tid in tids],
-                )
-            )
-        )
-    else:
-        per_tid = {
-            tid: pos.where(F.col("tid") == tid).select(
-                "docid", F.col("positions").alias(f"_p_{tid}")
-            )
-            for tid in tids
-        }
-        joined = None
-        for tid in tids:
-            joined = (
-                per_tid[tid] if joined is None else joined.join(per_tid[tid], "docid")
-            )
-    pos_cols = [F.col(f"_p_{tid_of[t]}") for t in terms]
-    if ordered:
-        freq = chain_match_count(pos_cols, slop)
-    elif window:
-        freq = window_match_count(pos_cols, slop)
-    else:
-        freq = sloppy_match_count(pos_cols, slop, terms)
-    out = joined.select(
-        "docid", freq.cast("int").alias("phrase_freq")
-    ).where(F.col("phrase_freq") > 0)
-    if index.has_deletes():  # liveDocs: phrase hits on deleted docs drop
-        out = index.minus_deleted(out)
-    return out
 
 
 def complex_phrase_docids(
@@ -400,8 +389,6 @@ def complex_phrase_docids(
     `tid IN (slot tids)` unions the expanded terms' positions for free
     — and the ordered/sloppy matchers run unchanged on slot arrays."""
     import re as _re
-
-    from functools import reduce
 
     spark = index.spark
     dict_df = index.term_dictionary(field)
@@ -443,34 +430,6 @@ def complex_phrase_docids(
             return spark.createDataFrame([], _PHRASE_SCHEMA)
         slot_tids.append([r["tid"] for r in rows])
 
-    all_tids = sorted({t for tids in slot_tids for t in tids})
-    pos = (
-        index.positions()
-        .where(F.col("bucket").isin(index.pbuckets_for(all_tids)))
-        .where(F.col("tid").isin(all_tids))
-    )
-    if "pos" not in pos.columns:
-        raise ValueError("complex_phrase_docids needs the flat positions layout")
-    joined = (
-        pos.groupBy("docid")
-        .agg(
-            *[
-                F.sort_array(
-                    F.collect_list(
-                        F.when(F.col("tid").isin(tids), F.col("pos"))
-                    )
-                ).alias(f"_s_{j}")
-                for j, tids in enumerate(slot_tids)
-            ]
-        )
-        .where(
-            reduce(
-                lambda a, b: a & b,
-                [F.size(f"_s_{j}") > 0 for j in range(len(slot_tids))],
-            )
-        )
-    )
-    pos_cols = [F.col(f"_s_{j}") for j in range(len(slot_tids))]
     # unordered uses the same Lucene-exact sloppy matcher as
     # phrase_docids — it only consumes position arrays, so slot arrays
     # drop in unchanged (round-4 advice: the window approximation
@@ -478,14 +437,4 @@ def complex_phrase_docids(
     # all-distinct: two slots whose EXPANSIONS overlap on the same
     # position may double-count, matching Lucene's own behavior for
     # overlapping MultiTerm slots.
-    freq = (
-        chain_match_count(pos_cols, slop)
-        if ordered
-        else sloppy_match_count(pos_cols, slop)
-    )
-    out = joined.select(
-        "docid", freq.cast("int").alias("phrase_freq")
-    ).where(F.col("phrase_freq") > 0)
-    if index.has_deletes():
-        out = index.minus_deleted(out)
-    return out
+    return _match_slots(index, slot_tids, slop, ordered)

@@ -29,7 +29,6 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from solr_spark.functions.bm25 import idf_py, tf_part_col
 from solr_spark.index.builder import Index
 from solr_spark.plans.qparser import (
     MUST,
@@ -44,6 +43,7 @@ from solr_spark.plans.qparser import (
     Term,
     parse_ast,
 )
+from solr_spark.query.engine import _scored_postings
 from solr_spark.query.expand_ops import fuzzy_query, prefix_query
 
 
@@ -119,46 +119,19 @@ def _scored_tokens(
     index: Index, weights: dict[str, float], must_set: set[str]
 ) -> tuple[DataFrame | None, int, bool]:
     """One bucket-pruned postings scan scoring all plain tokens of a bool
-    level. Returns (DF(docid, score, _musts), n_must_tids_present,
-    missing_must) — _musts counts distinct required tids matched."""
-    spark = index.spark
+    level, through the engine's own scoring scan. Returns
+    (DF(docid, score, _musts), n_must_tids_present, missing_must) —
+    _musts counts distinct required tids matched."""
     if not weights:
         return None, 0, False
-    stats = index.term_stats_for(list(weights))
+    scored, stats = _scored_postings(index, weights)
     missing_must = any(t not in stats for t in must_set)
     if not stats:
         return None, 0, missing_must
-    avgdl = float(index.meta["avgdl"])
-    must_tids = {stats[t]["tid"] for t in must_set if t in stats}
-    qrel = spark.createDataFrame(
-        [
-            (
-                s["tid"],
-                float(weights[t]),
-                idf_py(int(s["df"]), index.meta["n_docs"]),
-                1 if s["tid"] in must_tids else 0,
-            )
-            for t, s in stats.items()
-        ],
-        "tid long, w double, idf double, is_must int",
-    )
-    tids = [s["tid"] for s in stats.values()]
-    scored = (
-        index.postings()
-        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
-        .where(F.col("tid").isin(tids))
-        .join(F.broadcast(qrel), "tid")
-        .select(
-            "docid",
-            (
-                F.col("w") * F.col("idf")
-                * tf_part_col(F.col("tf"), F.col("dl_q"), avgdl)
-            ).alias("contrib"),
-            "is_must",
-        )
-    )
+    must_tids = sorted({stats[t]["tid"] for t in must_set if t in stats})
     agg = scored.groupBy("docid").agg(
-        F.sum("contrib").alias("score"), F.sum("is_must").alias("_musts")
+        F.sum("contrib").alias("score"),
+        F.sum(F.col("tid").isin(must_tids).cast("int")).alias("_musts"),
     )
     return agg, len(must_tids), missing_must
 
@@ -269,7 +242,7 @@ def _eval_bool(index: Index, node: BoolNode, now=None) -> DataFrame:
         if weights:
             return empty()  # scoring terms requested, none resolved
         if filters or not_filters or ban_tokens or not_parts:
-            agg = index.docs().select("docid", F.lit(1.0).alias("score"))
+            agg = index.docs_live().select("docid", F.lit(1.0).alias("score"))
         else:
             return empty()
     else:

@@ -223,16 +223,7 @@ def _expand_spec(index: Index, spec: str, field: str | None) -> list[int]:
     terms = index.analyze(spec)
     if not terms:
         return []
-    if index.meta.get("fields"):
-        fld = field or index.meta["fields"][0]
-        stats = {
-            t: s
-            for (_, t), s in index.term_stats_fielded(
-                [(fld, t) for t in terms]
-            ).items()
-        }
-    else:
-        stats = index.term_stats_for(terms)
+    stats = index.term_stats_for(terms, field=field)
     return [stats[t]["tid"] for t in terms if t in stats]
 
 
@@ -372,20 +363,12 @@ def surround_docids(
         .where(F.col("bucket").isin(index.pbuckets_for(all_tids)))
         .where(F.col("tid").isin(all_tids))
     )
-    if "pos" not in pos.columns:
-        raise ValueError("surround_docids needs the flat positions layout")
     ev = _SpanEval(index, pos, tids_of)
     if isinstance(node, BoolNode) and node.kind != "OR":
-        out = ev.docids(node).withColumn("n_spans", F.lit(1).cast("long"))
-    else:
-        out = (
-            ev.spans(node)
-            .groupBy("docid")
-            .agg(F.count(F.lit(1)).alias("n_spans"))
-        )
-    if index.has_deletes():
-        out = index.minus_deleted(out)
-    return out
+        return ev.docids(node).withColumn("n_spans", F.lit(1).cast("long"))
+    return (
+        ev.spans(node).groupBy("docid").agg(F.count(F.lit(1)).alias("n_spans"))
+    )
 
 
 # ------------------------------------------------------------- oracle

@@ -260,14 +260,9 @@ def bm25_topk_wand(
     if not qterms:
         return _no_rows(spark)
     n_docs = index.meta["n_docs"]
-    if index.meta.get("fields"):
-        # multi-field: the query targets ONE field; its avgdl feeds both
-        # the block metadata (baked per field at build) and the decode
-        fld = field or index.meta["fields"][0]
-        avgdl = float(index.meta["avgdl_by_field"][fld])
-    else:
-        fld = None
-        avgdl = float(index.meta["avgdl"])
+    # multi-field: the query targets ONE field; its avgdl feeds both the
+    # block metadata (baked per field at build) and the decode
+    fld, avgdl = index.scoring_field(field)
     stats = index.term_stats_for(list(qterms), field=fld)
     present = [t for t in qterms if t in stats]
     if not present or (mode == "AND" and len(present) < len(qterms)):

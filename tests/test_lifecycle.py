@@ -172,6 +172,61 @@ def test_multifield_expunge_keeps_blocks(spark, mf_whole, tmp_path):
     assert hits and not {d for d, _ in hits} & set(victims)
 
 
+def test_multifield_search_scores_with_the_field_norms(mf_whole):
+    """search() scores the default field with that field's own avgdl,
+    so it equals bm25_topk on every doc, to search's 4 places."""
+    from solr_spark.query.engine import bm25_topk
+    from solr_spark.query.search_api import search
+
+    whole = mf_whole[0]
+    for q in QUERIES:
+        want = dict(_topk(bm25_topk, whole, q, None, k=240))
+        got = {r["docid"]: r["score"] for r in search(whole, q, k=240).collect()}
+        assert set(got) == set(want) and got
+        assert got == pytest.approx(want, abs=5e-5), q
+
+
+def _mf_live_cases():
+    from solr_spark.query.edismax import edismax_indexed
+    from solr_spark.query.search_api import search
+    from solr_spark.query.wand import bm25_topk_wand
+
+    return {
+        "edismax_indexed": lambda i: edismax_indexed(
+            i, "jsonParser java", {"content": 1.0, "title": 2.0}, k=240
+        ),
+        "bm25_topk_wand": lambda i: bm25_topk_wand(
+            i, "return java", k=240, field="title"
+        ),
+        "search": lambda i: search(i, "jsonParser bufferSize", k=240),
+    }
+
+
+@pytest.fixture(scope="module")
+def mf_pending(spark, mf_whole, tmp_path_factory):
+    """A copy of the multi-field index with every 5th doc deleted
+    (pending). Returns (index, deleted ids)."""
+    from solr_spark.index.maintenance import delete_by_ids
+
+    idx = _copy(spark, mf_whole[0], str(tmp_path_factory.mktemp("mf_del") / "x"))
+    gone = sorted(r["docid"] for r in idx.docs().select("docid").collect())[::5]
+    assert delete_by_ids(idx, gone) == len(gone)
+    return idx, set(gone)
+
+
+@pytest.mark.parametrize("entry", list(_mf_live_cases()))
+def test_multifield_pending_deletes_never_come_back(mf_whole, mf_pending, entry):
+    idx, gone = mf_pending
+    run = _mf_live_cases()[entry]
+
+    def ids(df):
+        return {r["docid"] for r in df.collect()}
+
+    assert ids(run(mf_whole[0])) & gone  # the deleted docs matched before
+    got = ids(run(idx))
+    assert got and not got & gone
+
+
 def test_multifield_merge_equals_whole_build(
     spark, mf_whole, mf_halves, tmp_path
 ):

@@ -365,3 +365,78 @@ def test_complex_phrase_wildcard_fuzzy(spark, tmp_path):
     assert complex_phrase_docids(idx, ["zzz*", "pars*"]).count() == 0
     with _pytest.raises(ValueError, match="max_expansions"):
         complex_phrase_docids(idx, ["*", "pars*"], max_expansions=2)
+
+
+def _ids(df):
+    return {r["docid"] for r in df.collect()}
+
+
+def _live_cases():
+    """Every indexed query entry point that returns docids, each with a
+    query that matches docs across the corpus."""
+    from solr_spark.query.engine import bm25_topk, bm25_topk_batch
+    from solr_spark.query.expand_ops import (
+        fuzzy_query, prefix_query, regex_query, term_set_query, wildcard_query,
+    )
+    from solr_spark.query.positions import complex_phrase_docids
+    from solr_spark.query.search_api import search
+    from solr_spark.query.surround import surround_docids
+    from solr_spark.query.wand import bm25_topk_wand
+
+    k = N_DOCS
+    return {
+        "bm25_topk": lambda i: bm25_topk(i, "jsonParser bufferSize", k=k),
+        "bm25_topk_wand": lambda i: bm25_topk_wand(i, "jsonParser bufferSize", k=k),
+        "bm25_topk_batch": lambda i: bm25_topk_batch(
+            i, {"a": "jsonParser", "b": "bufferSize return"}, k=k
+        ),
+        "search_term": lambda i: search(i, "jsonParser", k=k),
+        "search_bool": lambda i: search(i, "+json (parser OR buffer) -zzzq", k=k),
+        "search_filter": lambda i: search(i, "lang:java", k=k),
+        "phrase_docids": lambda i: phrase_docids(i, ["json", "parser"]),
+        "complex_phrase_docids": lambda i: complex_phrase_docids(i, ["json", "pars*"]),
+        "surround_docids": lambda i: surround_docids(i, "json W parser"),
+        "prefix_query": lambda i: prefix_query(i, "json"),
+        "wildcard_query": lambda i: wildcard_query(i, "js?n*"),
+        "regex_query": lambda i: regex_query(i, "^buff.*"),
+        "fuzzy_query": lambda i: fuzzy_query(i, "jsan", max_edits=1),
+        "term_set_query": lambda i: term_set_query(i, ["json", "buffer"]),
+    }
+
+
+@pytest.fixture(scope="module")
+def pending(index, tmp_path_factory):
+    """A copy of the module index with every 5th doc deleted (pending,
+    not expunged). Returns (index, deleted ids)."""
+    import shutil
+
+    from solr_spark.index.builder import Index
+    from solr_spark.index.maintenance import delete_by_ids
+
+    root = str(tmp_path_factory.mktemp("pos_del") / "index")
+    shutil.copytree(index.paths.root, root)
+    idx = Index.load(index.spark, root)
+    gone = sorted(_ids(idx.docs().select("docid")))[::5]
+    assert delete_by_ids(idx, gone) == len(gone)
+    return idx, set(gone)
+
+
+@pytest.mark.parametrize("entry", [*_live_cases(), "spell_collate"])
+def test_pending_deletes_never_come_back(index, pending, entry):
+    """liveDocs in one place: every indexed query entry point drops the
+    deleted docs, which it matched before the delete."""
+    idx, gone = pending
+    if entry == "spell_collate":
+        # collation hits count docs, so they count live docs only
+        from solr_spark.operators.relevance import spell_collate
+        from solr_spark.query.engine import bm25_topk
+
+        (row,) = spell_collate(idx, "jsan parser").collect()
+        live = bm25_topk(idx, row.collation, k=N_DOCS, mode="AND")
+        assert row.hits == live.count() > 0
+        assert not _ids(live) & gone
+        return
+    run = _live_cases()[entry]
+    assert _ids(run(index)) & gone  # the deleted docs matched before
+    got = _ids(run(idx))
+    assert got and not got & gone

@@ -75,7 +75,6 @@ def test_deletes_broadcast_guard(spark, tmp_path, monkeypatch):
     force a broadcast; results stay identical either way and the
     manifest row counts expose the sidecar size without a Spark job."""
     import solr_spark.index.builder as B
-    import solr_spark.index.maintenance as M
     from solr_spark.query.engine import bm25_topk
 
     corpus = synthesize_corpus(spark, 200, seed=7, partitions=4)
@@ -95,8 +94,7 @@ def test_deletes_broadcast_guard(spark, tmp_path, monkeypatch):
     ]
     # now force the shuffle anti-join path and compare
     monkeypatch.setattr(B, "DELETES_BROADCAST_CAP", 5)
-    monkeypatch.setattr(M, "DELETES_BROADCAST_CAP", 5)
-    plan = idx.postings_live()._jdf.queryExecution().optimizedPlan().toString()
+    plan = idx.postings()._jdf.queryExecution().optimizedPlan().toString()
     assert "broadcast" not in plan.lower()
     big_cap = [
         (r["docid"], round(r["score"], 9))
