@@ -134,6 +134,14 @@ def tokenize_arrow_batch(col):
 
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
+    if pa.types.is_dictionary(col.type):
+        col = col.dictionary_decode()
+    if pa.types.is_string_view(col.type):
+        # no string_view -> string cast kernel in pyarrow 16; Spark does
+        # not emit views, so the per-row rebuild is a guard, not a path
+        col = pa.array(col.to_pylist(), pa.large_string())
+    if not (pa.types.is_string(col.type) or pa.types.is_large_string(col.type)):
+        raise TypeError(f"tokenize_arrow_batch needs a string column, got {col.type}")
     nrows = len(col)
     empty = (
         np.zeros(0, dtype=np.uint8),
@@ -156,7 +164,10 @@ def tokenize_arrow_batch(col):
     row_off = np.frombuffer(off_buf, dtype=odt)[
         col.offset:col.offset + nrows + 1
     ].astype(np.int64)
-    data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
+    data_buf = col.buffers()[2]
+    if data_buf is None:  # only empty strings and nulls: no data buffer
+        return empty[:3] + (nrows, null_rows)
+    data = np.frombuffer(data_buf, dtype=np.uint8)
     lo = int(row_off[0])
     buf = data[lo:int(row_off[-1])]
     row_starts = row_off - lo
@@ -286,33 +297,6 @@ def _splice_py_rows(col, values, val_off, tok_rows, bad, nrows):
     val_off = np.zeros(all_lens.size + 1, dtype=np.int64)
     np.cumsum(all_lens, out=val_off[1:])
     return values, val_off, tok_rows
-
-
-def tokens_arrow(col):
-    """`tokens_col` as a pa.ListArray(string) over one Arrow batch column
-    — zero-copy assembly from the tokenize_arrow_batch stream (null rows
-    stay null, matching tokens_col's null semantics)."""
-    import numpy as np
-    import pyarrow as pa
-
-    values, val_off, tok_rows, nrows, null_rows = tokenize_arrow_batch(col)
-    vals = pa.Array.from_buffers(
-        pa.utf8(), int(val_off.size - 1),
-        [None, pa.py_buffer(val_off.astype(np.int32)),
-         pa.py_buffer(values)],
-    )
-    per_row = np.bincount(tok_rows, minlength=nrows).astype(np.int64)
-    list_off = np.zeros(nrows + 1, dtype=np.int64)
-    np.cumsum(per_row, out=list_off[1:])
-    if null_rows.size:
-        # from_arrays: a null at offsets position i nulls list slot i
-        mask = np.zeros(nrows + 1, dtype=bool)
-        mask[null_rows] = True
-        off_arr = pa.array(list_off.astype(np.int32), mask=mask)
-        return pa.ListArray.from_arrays(off_arr, vals)
-    return pa.ListArray.from_arrays(
-        pa.array(list_off.astype(np.int32)), vals
-    )
 
 
 def tokens_sql(col_expr: str) -> str:

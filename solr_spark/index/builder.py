@@ -328,13 +328,31 @@ class Index:
         `postings()`. Every build since the flat layout writes it; an
         older array-layout table is refused here, for every positional
         query."""
+        return self.minus_deleted(self._positions_raw())
+
+    def _positions_raw(self) -> DataFrame:
         pos = self._read(self.paths.positions)
         if "pos" not in pos.columns:
             raise ValueError(
                 "positional queries need the flat positions layout; "
                 "rebuild this index"
             )
-        return self.minus_deleted(pos)
+        return pos
+
+    def tid_scan(
+        self, table: str, tids: list[int], cols: tuple[str, ...] | None = None
+    ) -> DataFrame:
+        """The RAW `table` ("blocks" or "positions") pruned to `tids`:
+        bucket partition pruning plus the tid IN pushdown, one
+        shuffle-free scan. No liveDocs join: the driver venues fetch it
+        whole (`toArrow()`) and drop `deleted_id_array()` ids
+        themselves; the distributed plans build on it. `cols` projects
+        it (default: every column)."""
+        df = self.blocks() if table == "blocks" else self._positions_raw()
+        df = df.where(F.col("bucket").isin(self.pbuckets_for(tids))).where(
+            F.col("tid").isin(tids)
+        )
+        return df.select(*cols) if cols else df
 
     def pin_memory(self, components: tuple = ("postings", "docs")) -> "Index":
         """Serving mode: persist the hot table frames in executor

@@ -8,7 +8,7 @@ This is the INLINE form (positions derived on the fly from the token
 arrays) used by the driver gate over the `documents` table; the indexed
 form reads the index-side positions table instead
 (solr_spark/query/positions.py) — the matching algebra
-(`chain_match_count`) is shared, so both forms agree by construction.
+(`phrase_freqs`) is shared, so both forms agree by construction.
 
 Semantics: a phrase occurrence is a strictly increasing position chain
 p < q_1 < ... with q_j in term j's positions and every gap <= slop+1
@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.analysis.analyzer import tokenize_py, tokens_sql
-from solr_spark.query.positions import chain_match_count, chain_match_count_sql
+from solr_spark.query.positions import chain_match_count_sql
 
 
 def term_positions_col(toks: Column, term: str) -> Column:
@@ -43,12 +43,12 @@ def phrase_freq_col(
     One Arrow UDF over the token array: deriving per-term position
     arrays with expression-level filters re-evaluates the (inlined)
     tokenization per array ELEMENT — Catalyst offers no way to pin the
-    intermediate (see chain_match_count's note in query/positions.py);
+    intermediate (see `_freq_udf`'s note in query/positions.py);
     referencing the token column exactly once keeps it evaluated once
     per row no matter what CollapseProject inlines.
 
     ordered=False = Lucene-exact edit-budget sloppy semantics
-    (query/positions.py sloppy_match_count); window=True opts into the
+    (query/positions.py `_sloppy_count_anchors`); window=True opts into the
     cheaper window approximation instead.
     """
     return _phrase_freq_from_toks_udf(list(terms), slop, ordered, window)(toks)
@@ -61,40 +61,16 @@ def _phrase_freq_from_toks_udf(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    from solr_spark.query.positions import _dup_groups, _sloppy_count_anchors
+    from solr_spark.query.positions import _dup_groups, row_keys, row_phrase_freqs
 
-    s1 = slop + 1
-    n = len(terms)
-    lo_off, hi_off = -slop, n - 1 + slop
     dup_groups = _dup_groups(terms)
 
     def freq(toks):
-        out = np.zeros(len(toks), dtype="int32")
-        for i, tk in enumerate(toks):
-            tk = np.asarray(tk, dtype=object)
-            arrs = [np.nonzero(tk == t)[0] + 1 for t in terms]
-            if ordered:
-                b = arrs[-1]
-                for pj in arrs[-2::-1]:
-                    if b.size == 0:
-                        break
-                    lo = np.searchsorted(b, pj, side="right")
-                    hi = np.searchsorted(b, pj + s1, side="right")
-                    b = pj[hi > lo]
-                out[i] = b.size
-            elif window:
-                anchors = arrs[0]
-                ok = np.ones(anchors.size, dtype=bool)
-                for pj in arrs[1:]:
-                    lo = np.searchsorted(pj, anchors + lo_off, side="left")
-                    hi = np.searchsorted(pj, anchors + hi_off, side="right")
-                    ok &= hi > lo
-                out[i] = int(ok.sum())
-            else:
-                out[i] = _sloppy_count_anchors(
-                    [a.astype(np.int64) for a in arrs], slop, dup_groups
-                )
-        return pd.Series(out)
+        tks = [np.asarray(tk, dtype=object) for tk in toks]
+        keys = row_keys([[np.nonzero(tk == t)[0] + 1 for tk in tks] for t in terms])
+        return pd.Series(
+            row_phrase_freqs(len(tks), keys, slop, ordered, window, dup_groups)
+        )
 
     # real type objects: `from __future__ import annotations` stringifies
     # inline hints, which pandas_udf cannot introspect
@@ -102,7 +78,9 @@ def _phrase_freq_from_toks_udf(
     return pandas_udf(freq, "int")
 
 
-def _phrase_freq_batches(terms: list[str], slop: int, window: bool):
+def _phrase_freq_batches(
+    terms: list[str], slop: int, ordered: bool, window: bool
+):
     """mapInArrow body: (docid, text) record batches -> (docid,
     phrase_freq), tokenization AND matching computed with vectorized C
     kernels over the raw Arrow buffers.
@@ -111,23 +89,18 @@ def _phrase_freq_batches(terms: list[str], slop: int, window: bool):
     boxes every token into a Python str) + per-row Python matcher with
     one whole-batch pass (guide §4.2): `tokenize_arrow_batch` emits the
     batch's flat token stream (bytes + offsets + row ids), per-term hits
-    come from a vectorized length+bytes comparison, and the same
-    backward-DP / window algebra as `chain_match_count` runs ONCE over
-    the whole batch in global coordinates g = token_index + row * pad
-    with pad > n - 1 + 2*slop + 1: within one row g-deltas equal token
-    position deltas, across rows they always exceed the largest usable
-    gap, so no chain step or window can cross a row boundary.
-    Bit-identical to the per-row matchers (fuzzed in tests; the DuckDB
-    twins pin the gate semantics)."""
+    come from a vectorized length+bytes comparison, and each hit's
+    `row << 32 | position` key feeds the shared whole-batch matcher
+    (query/positions.py `phrase_freqs`), so no chain step or window can
+    cross a row boundary. Bit-identical to the per-row matchers (fuzzed
+    in tests; the DuckDB twins pin the gate semantics)."""
     import numpy as np
     import pyarrow as pa
 
     from solr_spark.analysis.analyzer import tokenize_arrow_batch
+    from solr_spark.query.positions import _dup_groups, row_phrase_freqs
 
-    n = len(terms)
-    s1 = slop + 1
-    lo_off, hi_off = -slop, n - 1 + slop
-    pad = n + 2 * slop + 2
+    dup_groups = _dup_groups(terms)
 
     def batches(it):
         for batch in it:
@@ -140,7 +113,13 @@ def _phrase_freq_batches(terms: list[str], slop: int, window: bool):
             )
             ntok = tok_rows.size
             tok_len = np.diff(val_off)
-            g = np.arange(ntok, dtype=np.int64) + tok_rows * pad
+            list_off = np.zeros(nrows + 1, dtype=np.int64)
+            np.cumsum(
+                np.bincount(tok_rows, minlength=nrows), out=list_off[1:]
+            )
+            # 1-based position of each token within its row
+            pos = np.arange(1, ntok + 1, dtype=np.int64) - list_off[tok_rows]
+            key = (tok_rows << 32) | pos
             hits: dict[str, np.ndarray] = {}
             for t in terms:
                 if t in hits:
@@ -153,32 +132,11 @@ def _phrase_freq_batches(terms: list[str], slop: int, window: bool):
                         + np.arange(tb.size, dtype=np.int64)
                     ]
                     cand = cand[(mat == tb).all(axis=1)]
-                hits[t] = g[cand]
-            arrs = [hits[t] for t in terms]
-            if not window:
-                b = arrs[-1]
-                for pj in arrs[-2::-1]:
-                    if b.size == 0:
-                        break
-                    lo = np.searchsorted(b, pj, side="right")
-                    hi = np.searchsorted(b, pj + s1, side="right")
-                    b = pj[hi > lo]
-                surv = b
-            else:
-                anchors = arrs[0]
-                ok = np.ones(anchors.size, dtype=bool)
-                for pj in arrs[1:]:
-                    lo = np.searchsorted(pj, anchors + lo_off, side="left")
-                    hi = np.searchsorted(pj, anchors + hi_off, side="right")
-                    ok &= hi > lo
-                surv = anchors[ok]
-            list_off = np.zeros(nrows + 1, dtype=np.int64)
-            np.cumsum(
-                np.bincount(tok_rows, minlength=nrows), out=list_off[1:]
+                hits[t] = key[cand]
+            counts = row_phrase_freqs(
+                nrows, [hits[t] for t in terms], slop, ordered, window,
+                dup_groups,
             )
-            gstarts = list_off + np.arange(nrows + 1, dtype=np.int64) * pad
-            rows = np.searchsorted(gstarts, surv, side="right") - 1
-            counts = np.bincount(rows, minlength=nrows).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
                 [docid, pa.array(counts, type=pa.int32())],
                 ["docid", "phrase_freq"],
@@ -199,10 +157,8 @@ def phrase_match(
     """(docid, phrase_freq) for docs containing the analyzed phrase.
 
     ordered=False switches to Lucene's exact edit-budget unordered
-    semantics (query/positions.py sloppy_match_count); window=True opts
+    semantics (query/positions.py `_sloppy_count_anchors`); window=True opts
     into the cheaper window approximation instead."""
-    from solr_spark.analysis.analyzer import tokens_col
-
     terms = tokenize_py(phrase)
     if not terms:
         return docs.sparkSession.createDataFrame([], "docid long, phrase_freq int")
@@ -227,27 +183,15 @@ def phrase_match(
     # corpus ("json parser", n=182,428 identical both ways): this shape
     # best 5.0 s vs 8.1 s for the exploded variant (guide §1.2: the
     # job's distributed shape beats shrinking the Python transfer).
-    if ordered or window:
-        # chain / window modes: raw text crosses the boundary and ONE
-        # whole-batch Arrow pass tokenizes (tokenize_arrow_batch) and
-        # matches — no JVM regex tokenize, no per-token boxing (measured
-        # on the bench corpus: the JVM regexp tokenize alone was ~4.9 s
-        # of the 5.4 s line); the exact unordered-sloppy DP
-        # (repeated-term distinctness) keeps the per-row matcher below
-        d = cand.select(
-            F.col(id_col).cast("long").alias("docid"), F.col(text_col)
-        )
-        out = d.mapInArrow(
-            _phrase_freq_batches(terms, slop, window=not ordered),
-            schema="docid long, phrase_freq int",
-        )
-    else:
-        toks = tokens_col(text_col)
-        d = cand.select(
-            F.col(id_col).cast("long").alias("docid"), toks.alias("_toks")
-        )
-        freq = phrase_freq_col(F.col("_toks"), terms, slop, ordered, window)
-        out = d.select("docid", freq.cast("int").alias("phrase_freq"))
+    # raw text crosses the boundary and ONE whole-batch Arrow pass
+    # tokenizes (tokenize_arrow_batch) and matches — no JVM regex
+    # tokenize, no per-token boxing (measured on the bench corpus: the
+    # JVM regexp tokenize alone was ~4.9 s of the 5.4 s line)
+    d = cand.select(F.col(id_col).cast("long").alias("docid"), F.col(text_col))
+    out = d.mapInArrow(
+        _phrase_freq_batches(terms, slop, ordered, window),
+        schema="docid long, phrase_freq int",
+    )
     return out.where(F.col("phrase_freq") > 0).orderBy("docid")
 
 

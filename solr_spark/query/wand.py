@@ -66,14 +66,27 @@ from solr_spark.query.engine import analyze_query, bm25_topk, norm_mode
 #: differences between driver-side and executor-side arithmetic
 EPS = 1e-9
 
-#: query-postings budget of the driver venue; beyond it the query runs
-#: distributed (pruned) or flat. Measured on a 1M-doc index with every
-#: block decoded (nothing prunable), local[2] and local[4] on 4 vCPUs:
-#: the driver beat flat `bm25_topk` at every volume up to 4.75M
-#: postings (4M: 0.81-0.98 s vs 2.39-3.86 s, with and without pending
-#: deletes); at 4M the Python process's peak RSS rose from ~160 MB to
-#: ~400-420 MB. A flat scan over more executor cores than that may
-#: cross over sooner (not measured)
+#: rows budget of the driver venues, counted as the rows their one
+#: fetch returns: Σ df postings for a top-k here, Σ cttf positions for a
+#: phrase (query/positions.py); beyond it the query runs distributed
+#: (pruned), flat, or as the grouped phrase plan. Measured on 4 vCPUs
+#: with a 1 GB driver heap, median of 3 after a warm-up, every result
+#: identical across venues:
+#: - top-k, 1M-doc index, every block decoded (nothing prunable),
+#:   local[2] and local[4]: the driver beat flat `bm25_topk` at every
+#:   volume up to 4.75M postings (4M: 0.81-0.98 s vs 2.39-3.86 s, with
+#:   and without pending deletes); the Python process's peak RSS
+#:   (VmHWM) rose from ~160 MB to ~400-420 MB at 4M;
+#: - phrase, 100k docs x 100 tokens, local[2]: driver vs distributed
+#:   0.25M positions 0.31 vs 0.90 s, 1M 0.49 vs 1.19 s, 2M 1.03 vs
+#:   1.86 s, 3.5M 1.58 vs 2.31 s, 4.5M 1.68 vs 3.34 s, 5M 2.14 vs
+#:   4.00 s; local[4] 3.5M 1.36 vs 2.39 s, 5M 1.93 vs 3.10 s; 40
+#:   deletes pending, local[2], 3.5M 1.76 vs 3.54 s. VmHWM 112 MB idle,
+#:   315 MB at 2M, 470 MB at 3.5M, 554 MB at 4.5-5M.
+#: The phrase crossover lies past 5M too, so one gate serves both. A
+#: scan over more executor cores than 4 may cross over sooner (not
+#: measured); sf1's "json parser" (~25M positions at 2M docs) stays
+#: distributed
 DRIVER_DECODE_MAX_POSTINGS = 4_000_000
 
 #: over the driver gate, the distributed pruned path only runs when the
@@ -153,14 +166,7 @@ def _wand_driver(
     locally: the distributed path below handles volumes that cannot sit
     on one node, and tests force it to prove both venues agree.
     """
-    ptids = list(weights)
-    tbl = (
-        index.blocks()
-        .where(F.col("bucket").isin(index.pbuckets_for(ptids)))
-        .where(F.col("tid").isin(ptids))
-        .select(*_DRIVER_COLS)
-        .toArrow()
-    )
+    tbl = index.tid_scan("blocks", list(weights), _DRIVER_COLS).toArrow()
     is_ne = np.isin(np.asarray(tbl.column("tid"), dtype=np.int64), non_essential)
     ess = tbl.filter(pa.array(~is_ne))
     ne = tbl.filter(pa.array(is_ne))
@@ -341,11 +347,7 @@ def bm25_topk_wand(
     ne_ub_total = sum(ub[g] for g in non_essential)
     ess_ub_total = sum(ub[g] for g in essential)
     total_ub = ne_ub_total + ess_ub_total
-    q_blocks = (
-        index.blocks()
-        .where(F.col("bucket").isin(index.pbuckets_for(ptids)))
-        .where(F.col("tid").isin(ptids))
-    )
+    q_blocks = index.tid_scan("blocks", ptids)
 
     # (3) block-level pruning within essential terms: block b of term t
     # can contain a top-k doc only if w_t*max_tf_part(b) + Σ_{other} ub

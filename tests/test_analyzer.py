@@ -52,13 +52,25 @@ def test_python_vs_spark(spark):
         assert row.t == tokenize_py(s), repr(s)
 
 
+def _arrow_rows(col):
+    """Per-row token lists (None for a null row) from the
+    tokenize_arrow_batch stream."""
+    from solr_spark.analysis.analyzer import tokenize_arrow_batch
+
+    values, val_off, tok_rows, nrows, null_rows = tokenize_arrow_batch(col)
+    out: list = [[] for _ in range(nrows)]
+    for i, r in enumerate(tok_rows.tolist()):
+        out[r].append(bytes(values[val_off[i]:val_off[i + 1]]).decode("utf-8"))
+    for r in null_rows.tolist():
+        out[r] = None
+    return out
+
+
 def test_python_vs_arrow_batch():
     """Fourth executable form (round-6): the vectorized Arrow tokenizer
     used inside mapInArrow bodies — parity incl. unicode-fallback rows,
     null rows, and sliced (non-zero offset) arrays."""
     import pyarrow as pa
-
-    from solr_spark.analysis.analyzer import tokens_arrow
 
     rng = random.Random(11)
     uni = [
@@ -75,18 +87,68 @@ def test_python_vs_arrow_batch():
         (arr.slice(5), cases[5:]),
         (arr.slice(3, 40), cases[3:43]),
     ):
-        for s, toks in zip(cs, tokens_arrow(a).to_pylist()):
+        got = _arrow_rows(a)
+        assert len(got) == len(cs)
+        for s, toks in zip(cs, got):
             assert toks == tokenize_py(s), repr(s)
-    # null rows stay null (tokens_col(null) = null)
+    # null rows are reported (tokens_col(null) = null)
     withnull = pa.array(["a B", None, "", "xY9", None], type=pa.string())
-    assert tokens_arrow(withnull).to_pylist() == [
+    assert _arrow_rows(withnull) == [
         ["a", "b"], None, [], ["x", "y", "9"], None,
     ]
     # large_string input (Spark useLargeVarTypes)
     big = pa.array(["camelCase x", "HTTPServer"], type=pa.large_string())
-    assert tokens_arrow(big).to_pylist() == [
-        ["camel", "case", "x"], ["http", "server"],
-    ]
+    assert _arrow_rows(big) == [["camel", "case", "x"], ["http", "server"]]
+
+
+def test_arrow_batch_string_view():
+    """A string_view column tokenizes like its string twin (it used to
+    give an empty stream)."""
+    import pyarrow as pa
+
+    view = pa.array(["a B", None, "camelCase"], pa.string_view())
+    assert _arrow_rows(view) == [["a", "b"], None, ["camel", "case"]]
+
+
+def test_arrow_batch_dictionary():
+    """A dictionary-encoded column is decoded first (it used to raise
+    IndexError)."""
+    import pyarrow as pa
+
+    enc = pa.array(["a B", "a B", None, "xY"]).dictionary_encode()
+    assert _arrow_rows(enc) == [["a", "b"], ["a", "b"], None, ["x", "y"]]
+
+
+def test_arrow_batch_rejects_non_string():
+    import pyarrow as pa
+
+    for bad in (pa.array([1, 2]), pa.array([b"ab"], pa.binary())):
+        with pytest.raises(TypeError, match="string column"):
+            _arrow_rows(bad)
+
+
+def test_arrow_batch_missing_data_buffer():
+    """A string column of only empty strings may come without a data
+    buffer (the format allows a null buffer of length 0): no tokens."""
+    import pyarrow as pa
+
+    class NoDataBuffer:
+        """The column as such a producer hands it over."""
+
+        def __init__(self, arr):
+            self._arr = arr
+
+        def __getattr__(self, name):
+            return getattr(self._arr, name)
+
+        def __len__(self):
+            return len(self._arr)
+
+        def buffers(self):
+            return self._arr.buffers()[:2] + [None]
+
+    col = NoDataBuffer(pa.array(["", "", ""], pa.string()))
+    assert _arrow_rows(col) == [[], [], []]
 
 
 @pytest.mark.parametrize(

@@ -6,11 +6,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.index.builder import build_index
 from solr_spark.operators.phrase import phrase_match, phrase_freq_col
-from solr_spark.query.positions import (
-    chain_match_count,
-    chain_match_count_sql,
-    phrase_docids,
-)
+from solr_spark.query.positions import chain_match_count_sql, phrase_docids
 from solr_spark.sources.corpus import synthesize_corpus
 
 N_DOCS = 300
@@ -200,19 +196,17 @@ def test_indexed_phrase_equals_inline(spark, corpus, index, phrase, slop):
 
 
 def test_inline_vectorized_matcher_equals_per_row(spark):
-    """Round-6: phrase_match's whole-batch Arrow path (tokenize +
-    global-coordinate chain/window DP in _phrase_freq_batches) against
-    the per-row pandas matcher it replaced — same rows, same freqs, on
-    a fuzzed corpus with repeated terms, adjacent matches, unicode
-    (fallback-tokenized) rows and empty docs."""
+    """Round-6: phrase_match's whole-batch Arrow path (tokenize + the
+    row-keyed matcher in _phrase_freq_batches) against the per-row
+    pandas path (JVM tokens + phrase_freq_col) — same rows, same freqs,
+    for every matcher, on a fuzzed corpus with repeated terms, adjacent
+    matches, unicode (fallback-tokenized) rows and empty docs."""
     import random
 
     from pyspark.sql import functions as F
 
     from solr_spark.analysis.analyzer import tokens_col
-    from solr_spark.operators.phrase import (
-        _phrase_freq_batches, phrase_freq_col, phrase_match,
-    )
+    from solr_spark.operators.phrase import phrase_freq_col, phrase_match
 
     rng = random.Random(23)
     vocab = ["json", "parser", "read", "write", "Été", "x2go"]
@@ -226,6 +220,8 @@ def test_inline_vectorized_matcher_equals_per_row(spark):
         ("json parser read", 2, True, False),
         ("json json", 0, True, False),
         ("parser json", 1, False, True),
+        ("parser json", 1, False, False),
+        ("json parser json", 2, False, False),  # repeated-term sloppy
         ("ete json", 0, True, False),  # unicode-analyzed term
     ]:
         new = phrase_match(
@@ -248,12 +244,141 @@ def test_inline_vectorized_matcher_equals_per_row(spark):
         assert a == b, (phrase, slop, ordered, window, a[:5], b[:5])
 
 
-def test_indexed_phrase_plan_prunes(index):
-    """The phrase plan must scan positions partitions only — never the
-    corpus — and carry the tid IN pushdown to the parquet scan."""
-    plan = phrase_docids(index, ["jsonParser"], 0)._jdf.queryExecution().executedPlan().toString()
-    assert "positions" in plan
-    assert "docs" not in plan  # no corpus/docs scan anywhere in the plan
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_indexed_phrase_plan_prunes(index, monkeypatch):
+    """Both phrase venues scan positions partitions only — never the
+    corpus — and carry the tid IN pushdown to the parquet scan: the
+    driver venue fetches `Index.tid_scan` (its result frame is a local
+    Arrow relation), the distributed venue plans over the same scan."""
+    from solr_spark.query import wand
+
+    tids = [s["tid"] for s in index.term_stats_for(["json", "parser"]).values()]
+    scan = _plan(index.tid_scan("positions", tids, ("tid", "docid", "pos")))
+    monkeypatch.setattr(wand, "DRIVER_DECODE_MAX_POSTINGS", 0)
+    dbg: dict = {}
+    dist = _plan(phrase_docids(index, ["jsonParser"], 0, debug=dbg))
+    assert dbg["path"] == "distributed"
+    for plan in (scan, dist):
+        assert "positions" in plan
+        assert "docs" not in plan  # no corpus/docs scan anywhere in the plan
+        assert "In(tid" in plan  # the tid IN pushed to the parquet scan
+    assert "Exchange" not in scan  # the driver venue's fetch is shuffle-free
+
+
+def _venue_cases():
+    from solr_spark.query.positions import complex_phrase_docids
+
+    return {
+        "exact": lambda i, d: phrase_docids(i, ["json", "parser"], debug=d),
+        "ordered_slop1": lambda i, d: phrase_docids(i, ["buffer", "size"], 1, debug=d),
+        "ordered_slop2": lambda i, d: phrase_docids(i, ["parse", "input"], 2, debug=d),
+        "sloppy": lambda i, d: phrase_docids(
+            i, ["import", "return"], 1, ordered=False, debug=d
+        ),
+        "sloppy_repeated": lambda i, d: phrase_docids(
+            i, ["return", "import", "return"], 3, ordered=False, debug=d
+        ),
+        "window": lambda i, d: phrase_docids(
+            i, ["import", "return"], 1, ordered=False, window=True, debug=d
+        ),
+        "complex": lambda i, d: complex_phrase_docids(i, ["json", "pars*"], debug=d),
+        "complex_sloppy": lambda i, d: complex_phrase_docids(
+            i, ["pars*", "json"], 2, ordered=False, debug=d
+        ),
+    }
+
+
+def _both_venues(idx, run, monkeypatch) -> tuple[list, list]:
+    """(driver, distributed) sorted (docid, phrase_freq) rows of `run`,
+    asserting each venue actually ran."""
+    from solr_spark.query import wand
+
+    out = []
+    for gate, path in ((wand.DRIVER_DECODE_MAX_POSTINGS, "driver"), (0, "distributed")):
+        monkeypatch.setattr(wand, "DRIVER_DECODE_MAX_POSTINGS", gate)
+        dbg: dict = {}
+        out.append(sorted((r.docid, r.phrase_freq) for r in run(idx, dbg).collect()))
+        assert dbg["path"] == path
+    return out[0], out[1]
+
+
+@pytest.mark.parametrize("case", list(_venue_cases()))
+def test_phrase_venues_agree(index, case, monkeypatch):
+    """The driver venue (one pruned fetch + NumPy matcher) and the
+    distributed venue (groupBy + pandas UDF) give identical (docid,
+    phrase_freq) for every matcher, a repeated-term sloppy phrase and a
+    complex phrase whose wildcard slot expands to several tids."""
+    if case.startswith("complex"):
+        dct = index.term_dictionary().where(F.col("term").startswith("pars"))
+        assert dct.count() > 1  # the wildcard slot really is a union
+    driver, dist = _both_venues(index, _venue_cases()[case], monkeypatch)
+    assert driver == dist and driver
+
+
+def test_udf_batch_path_equals_per_row():
+    """The distributed venue's UDF body on one multi-row batch and the
+    driver venue's docid-keyed call both equal a per-row reference: the
+    DuckDB twin of each matcher, and `_sloppy_count_anchors` per row for
+    the repeated-term sloppy phrase (which has no SQL twin)."""
+    import random
+
+    import numpy as np
+    import pandas as pd
+
+    from solr_spark.query.positions import (
+        _dup_groups, _packed_freqs, _sloppy_count_anchors, phrase_freqs,
+        sloppy_match_count_sql, window_match_count_sql,
+    )
+
+    rng = random.Random(3)
+    rows = [[rng.choice("abc") for _ in range(rng.randint(0, 25))] for _ in range(60)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (r INT, toks VARCHAR[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(rows)))
+    for terms, slop, ordered, window in [
+        (["a", "b"], 0, True, False),
+        (["a", "b", "c"], 2, True, False),
+        (["b", "a"], 1, False, False),
+        (["a", "b", "a"], 2, False, False),
+        (["c", "a"], 1, False, True),
+    ]:
+        dup = _dup_groups(terms)
+        per_slot = [
+            [np.flatnonzero(np.asarray(r, dtype=object) == t).astype(np.int32) + 1 for t in terms]
+            for r in rows
+        ]
+        if dup and not ordered:
+            ref = [_sloppy_count_anchors([p.astype(np.int64) for p in ps], slop, dup) for ps in per_slot]
+        else:
+            pos_exprs = [
+                f"[i FOR i IN range(1, len(toks) + 1) IF toks[i] = '{t}']" for t in terms
+            ]
+            twin = (
+                chain_match_count_sql if ordered
+                else window_match_count_sql if window
+                else sloppy_match_count_sql
+            )
+            ref = [
+                f for _, f in con.execute(
+                    f"SELECT r, ({twin(pos_exprs, slop)}) FROM t ORDER BY r"
+                ).fetchall()
+            ]
+        batch = _packed_freqs(pd.Series(per_slot), slop, ordered, window, dup)
+        assert batch.tolist() == ref, terms
+        docid = lambda r: 7 * r + 2  # sparse docids, as a copied index has
+        keys = [
+            np.sort(np.array(
+                [(docid(r) << 32) | int(p) for r, ps in enumerate(per_slot) for p in ps[j]],
+                dtype=np.int64,
+            ))
+            for j in range(len(terms))
+        ]
+        ids, freqs = phrase_freqs(keys, slop, ordered, window, dup)
+        want = {docid(r): f for r, f in enumerate(ref) if f}
+        assert dict(zip(ids.tolist(), freqs.tolist())) == want and want, terms
 
 
 def _sfreq(spark, toks, terms, slop, **kw):
@@ -331,34 +456,40 @@ def test_sloppy_sql_twin(spark):
 def test_complex_phrase_wildcard_fuzzy(spark, tmp_path):
     """ComplexPhrase: wildcard and fuzzy slots expand against the
     dictionary and match positionally — equals the union of the
-    expanded plain phrases; absent expansion -> empty; cap raises."""
+    expanded plain phrases; absent expansion -> empty; cap raises.
+    The corpus brings its own docids past 2^31, which the driver
+    venue's `docid << 32 | pos` keys cannot hold: the distributed venue
+    answers instead."""
     import pytest as _pytest
 
     from solr_spark.index.builder import build_index
     from solr_spark.query.positions import complex_phrase_docids, phrase_docids
 
+    big = 1 << 40
     rows = [
-        ("r", "p1", "c", "the json parser reads fast"),
-        ("r", "p2", "c", "a json parsing engine"),
-        ("r", "p3", "c", "json compiler here"),
-        ("r", "p4", "c", "parser json inverted order"),
+        (big + 1, "r", "p1", "c", "the json parser reads fast"),
+        (big + 2, "r", "p2", "c", "a json parsing engine"),
+        (big + 3, "r", "p3", "c", "json compiler here"),
+        (big + 4, "r", "p4", "c", "parser json inverted order"),
     ]
     corpus = spark.createDataFrame(
-        rows, "repo string, path string, commit string, content string"
+        rows, "docid long, repo string, path string, commit string, content string"
     )
     idx = build_index(
         spark, corpus, str(tmp_path / "cpx"), num_buckets=2,
         build_blocks=False, build_positions=True,
     )
+    dbg: dict = {}
     got = {
         r["docid"]: r["phrase_freq"]
-        for r in complex_phrase_docids(idx, ["json", "pars*"]).collect()
+        for r in complex_phrase_docids(idx, ["json", "pars*"], debug=dbg).collect()
     }
+    assert dbg["path"] == "distributed"
     want = {}
     for w in ("parser", "parsing"):
         for r in phrase_docids(idx, ["json", w]).collect():
             want[r["docid"]] = want.get(r["docid"], 0) + r["phrase_freq"]
-    assert got == want and got  # p1 + p2 match, p3/p4 don't
+    assert got == want and set(got) == {big + 1, big + 2}  # p3/p4 don't
     # fuzzy slot: 'jsan~1' matches 'json'
     fz = {r["docid"] for r in complex_phrase_docids(idx, ["jsan~1", "pars*"]).collect()}
     assert fz == set(got)
@@ -421,10 +552,16 @@ def pending(index, tmp_path_factory):
     return idx, set(gone)
 
 
+#: the phrase entry points of `_live_cases`, as venue cases (same queries)
+_PHRASE_VENUE_CASE = {"phrase_docids": "exact", "complex_phrase_docids": "complex"}
+
+
 @pytest.mark.parametrize("entry", [*_live_cases(), "spell_collate"])
-def test_pending_deletes_never_come_back(index, pending, entry):
+def test_pending_deletes_never_come_back(index, pending, entry, monkeypatch):
     """liveDocs in one place: every indexed query entry point drops the
-    deleted docs, which it matched before the delete."""
+    deleted docs, which it matched before the delete. The phrase entry
+    points drop them on both venues (by id on the driver, by the
+    anti-join under the distributed scan), with identical results."""
     idx, gone = pending
     if entry == "spell_collate":
         # collation hits count docs, so they count live docs only
@@ -440,3 +577,7 @@ def test_pending_deletes_never_come_back(index, pending, entry):
     assert _ids(run(index)) & gone  # the deleted docs matched before
     got = _ids(run(idx))
     assert got and not got & gone
+    if entry in _PHRASE_VENUE_CASE:
+        case = _venue_cases()[_PHRASE_VENUE_CASE[entry]]
+        driver, dist = _both_venues(idx, case, monkeypatch)
+        assert driver == dist and {d for d, _ in driver} == got

@@ -313,7 +313,7 @@ def test_edismax_pf2_shingles(spark):
 
 # ---- multi-field index + indexed edismax ----
 
-def test_multifield_index_edismax(spark, tmp_path):
+def test_multifield_index_edismax(spark, tmp_path, monkeypatch):
     from solr_spark.index.builder import Index, build_index
     from solr_spark.query.edismax import edismax_indexed, edismax_inline
     from solr_spark.query.engine import bm25_topk
@@ -359,6 +359,25 @@ def test_multifield_index_edismax(spark, tmp_path):
                for r in edismax_inline(docs, q, qf, k=8, id_col="docid",
                                        **kw).collect()]
         assert got == ref, q
+
+    # a field= phrase matches that field's positions only, and both
+    # phrase venues agree on it (the driver venue's fetch prunes by the
+    # field's tids like the distributed scan)
+    from solr_spark.query import wand
+    from solr_spark.query.positions import phrase_docids
+
+    by_venue = {}
+    venues = ((wand.DRIVER_DECODE_MAX_POSTINGS, "driver"), (0, "distributed"))
+    for fld in ("text", "head"):
+        for gate, path in venues:
+            monkeypatch.setattr(wand, "DRIVER_DECODE_MAX_POSTINGS", gate)
+            dbg: dict = {}
+            rows = phrase_docids(idx, ["alpha", "beta"], field=fld, debug=dbg).collect()
+            assert dbg["path"] == path
+            by_venue[fld, path] = sorted((r.docid, r.phrase_freq) for r in rows)
+        assert by_venue[fld, "driver"] == by_venue[fld, "distributed"]
+    assert by_venue["text", "driver"] and not by_venue["head", "driver"]
+    monkeypatch.undo()
 
     # absent terms -> empty frame, and a reloaded handle answers the same
     assert edismax_indexed(idx, "zzznope", {"text": 1.0}).count() == 0
