@@ -615,12 +615,8 @@ def _perdoc_frame(name, args, raws, index, tag, df=None):
         st = index.term_stats_for([term], field=fld).get(term)
         if st is None:
             return None, 0.0  # absent term: constant 0 everywhere
-        tid = st["tid"]
-        frame = (
-            index.postings()
-            .where(F.col("bucket").isin(index.pbuckets_for([tid])))
-            .where(F.col("tid") == tid)
-            .select("docid", F.col("tf").cast("double").alias(tag))
+        frame = index.postings([st["tid"]]).select(
+            "docid", F.col("tf").cast("double").alias(tag)
         )
         return frame, 0.0
     # norm(field): the doc-length norm the BM25 scorer consumes — the

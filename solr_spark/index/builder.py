@@ -308,7 +308,7 @@ class Index:
     def docs(self) -> DataFrame:
         return self._read(self.paths.docs)
 
-    def postings(self) -> DataFrame:
+    def postings(self, tids: list[int] | None = None) -> DataFrame:
         """The postings every query scores: the live view, anti-joined
         against the deletes sidecar while deletes are pending (no plan
         node without them; see `minus_deleted`) — Lucene applies
@@ -317,18 +317,19 @@ class Index:
         Lucene's behavior with uncommitted deletes (docFreq/maxDoc count
         deleted docs until segments merge), which also keeps block-max
         upper bounds valid. Maintenance reads the raw table through
-        `_read(paths.postings)`."""
-        return self.minus_deleted(self._read(self.paths.postings))
+        `_read(paths.postings)`. With `tids`, only those terms' rows are
+        scanned (`_pruned`)."""
+        return self.minus_deleted(self._pruned(self._read(self.paths.postings), tids))
 
     def blocks(self) -> DataFrame:
         return self._read(self.paths.blocks)
 
-    def positions(self) -> DataFrame:
+    def positions(self, tids: list[int] | None = None) -> DataFrame:
         """The flat (tid, docid, pos) positions table, as a live view like
-        `postings()`. Every build since the flat layout writes it; an
-        older array-layout table is refused here, for every positional
-        query."""
-        return self.minus_deleted(self._positions_raw())
+        `postings()`, pruned to `tids` when given. Every build since the
+        flat layout writes it; an older array-layout table is refused
+        here, for every positional query."""
+        return self.minus_deleted(self._pruned(self._positions_raw(), tids))
 
     def _positions_raw(self) -> DataFrame:
         pos = self._read(self.paths.positions)
@@ -342,17 +343,27 @@ class Index:
     def tid_scan(
         self, table: str, tids: list[int], cols: tuple[str, ...] | None = None
     ) -> DataFrame:
-        """The RAW `table` ("blocks" or "positions") pruned to `tids`:
-        bucket partition pruning plus the tid IN pushdown, one
+        """The RAW `table` ("blocks" or "positions") pruned to `tids`, one
         shuffle-free scan. No liveDocs join: the driver venues fetch it
         whole (`toArrow()`) and drop `deleted_id_array()` ids
-        themselves; the distributed plans build on it. `cols` projects
-        it (default: every column)."""
+        themselves; the distributed WAND plan builds on it. `cols`
+        projects it (default: every column)."""
         df = self.blocks() if table == "blocks" else self._positions_raw()
-        df = df.where(F.col("bucket").isin(self.pbuckets_for(tids))).where(
-            F.col("tid").isin(tids)
-        )
+        df = self._pruned(df, tids)
         return df.select(*cols) if cols else df
+
+    def _pruned(self, df: DataFrame, tids: list[int] | None) -> DataFrame:
+        """`df` (a bucket-partitioned table: postings, blocks or
+        positions) restricted to `tids`: the bucket partition filter
+        prunes whole directories and the tid IN list is pushed down to
+        the parquet scan. None keeps every row."""
+        if tids is None:
+            return df
+        b = self.meta["num_buckets"]
+        buckets = sorted({tid_bucket_py(t, b) for t in tids})
+        return df.where(F.col("bucket").isin(buckets)).where(
+            F.col("tid").isin(list(tids))
+        )
 
     def pin_memory(self, components: tuple = ("postings", "docs")) -> "Index":
         """Serving mode: persist the hot table frames in executor
@@ -497,10 +508,6 @@ class Index:
     def buckets_for(self, terms: list[str]) -> list[int]:
         b = self.meta["num_buckets"]
         return sorted({bucket_of_py(t, b) for t in terms})
-
-    def pbuckets_for(self, tids: list[int]) -> list[int]:
-        b = self.meta["num_buckets"]
-        return sorted({tid_bucket_py(t, b) for t in tids})
 
     def analyze(self, text: str) -> list[str]:
         """Analyze text with THIS index's chain: the base chain plus

@@ -7,8 +7,9 @@ solr/core/src/java/org/apache/solr/schema/FieldProperties.java:38).
 This is the INLINE form (positions derived on the fly from the token
 arrays) used by the driver gate over the `documents` table; the indexed
 form reads the index-side positions table instead
-(solr_spark/query/positions.py) — the matching algebra
-(`phrase_freqs`) is shared, so both forms agree by construction.
+(solr_spark/query/positions.py) — both hand their flat token or
+positions columns to the same entry point (`flat_phrase_freqs`), so the
+forms agree by construction.
 
 Semantics: a phrase occurrence is a strictly increasing position chain
 p < q_1 < ... with q_j in term j's positions and every gap <= slop+1
@@ -19,126 +20,124 @@ start positions — the statistic Lucene's phrase scorer feeds into BM25.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.analysis.analyzer import tokenize_py, tokens_sql
-from solr_spark.query.positions import chain_match_count_sql
-
-
-def term_positions_col(toks: Column, term: str) -> Column:
-    """1-based positions of `term` in the token array."""
-    return F.filter(
-        F.sequence(F.lit(1), F.size(toks)),
-        lambda i: F.element_at(toks, i) == term,
-    )
+from solr_spark.query.positions import (
+    _dup_groups, chain_match_count_sql, flat_phrase_freqs,
+)
 
 
 def phrase_freq_col(
     toks: Column, terms: list[str], slop: int = 0, ordered: bool = True,
     window: bool = False,
 ) -> Column:
-    """Number of phrase occurrences in the token array.
+    """Number of phrase occurrences in the token array (0 for a null or
+    empty one).
 
-    One Arrow UDF over the token array: deriving per-term position
-    arrays with expression-level filters re-evaluates the (inlined)
-    tokenization per array ELEMENT — Catalyst offers no way to pin the
-    intermediate (see `_freq_udf`'s note in query/positions.py);
-    referencing the token column exactly once keeps it evaluated once
-    per row no matter what CollapseProject inlines.
+    One Arrow UDF over the token column's `ListArray`, flattened into
+    the token stream `_token_freqs` matches. A UDF rather than built-in
+    expressions: Catalyst inlines single-use projections into lambda
+    bodies (CollapseProject) and re-evaluates nested higher-order-
+    function subtrees PER ELEMENT, so per-term position arrays derived
+    with expression-level filters re-run the (inlined) tokenization per
+    array element, and an expression-level DP goes exponential in
+    phrase length (measured: 2 head terms over 300 docs already took
+    >60 s). Referencing the token column exactly once keeps it
+    evaluated once per row no matter what CollapseProject inlines.
 
     ordered=False = Lucene-exact edit-budget sloppy semantics
     (query/positions.py `_sloppy_count_anchors`); window=True opts into the
     cheaper window approximation instead.
     """
-    return _phrase_freq_from_toks_udf(list(terms), slop, ordered, window)(toks)
+    from pyspark.sql.functions import arrow_udf
 
-
-def _phrase_freq_from_toks_udf(
-    terms: list[str], slop: int, ordered: bool = True, window: bool = False
-):
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from solr_spark.query.positions import _dup_groups, row_keys, row_phrase_freqs
-
-    dup_groups = _dup_groups(terms)
+    terms = list(terms)
 
     def freq(toks):
-        tks = [np.asarray(tk, dtype=object) for tk in toks]
-        keys = row_keys([[np.nonzero(tk == t)[0] + 1 for tk in tks] for t in terms])
-        return pd.Series(
-            row_phrase_freqs(len(tks), keys, slop, ordered, window, dup_groups)
+        rows = toks.value_parent_indices().to_numpy()
+        off = toks.offsets.to_numpy()
+        # 1-based position of each token within its row
+        pos = np.arange(1, rows.size + 1) - (off[rows] - off[0])
+        got, freqs = _token_freqs(
+            toks.flatten(), rows, pos, terms, slop, ordered, window
         )
+        out = np.zeros(len(toks), dtype=np.int32)
+        out[got] = freqs
+        return pa.array(out)
 
     # real type objects: `from __future__ import annotations` stringifies
-    # inline hints, which pandas_udf cannot introspect
-    freq.__annotations__ = {"toks": pd.Series, "return": pd.Series}
-    return pandas_udf(freq, "int")
+    # inline hints, which arrow_udf cannot introspect
+    freq.__annotations__ = {"toks": pa.Array, "return": pa.Array}
+    return arrow_udf(freq, "int")(toks)
+
+
+def _token_freqs(
+    tokens: pa.Array, rows: np.ndarray, pos: np.ndarray, terms: list[str],
+    slop: int, ordered: bool, window: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(rows, phrase_freq) of the rows of a flat token stream where the
+    phrase matches: token i sits at `pos[i]` of row `rows[i]`. Its slot
+    key is its term's code (the index among the distinct phrase terms,
+    -1 for any other token), one hashed lookup per token, and
+    `flat_phrase_freqs` keys it by row, so no chain step or window can
+    cross a row boundary."""
+    uniq = list(dict.fromkeys(terms))
+    code = (
+        pc.index_in(tokens, value_set=pa.array(uniq, tokens.type))
+        .fill_null(-1)
+        .to_numpy()
+    )
+    return flat_phrase_freqs(
+        code, rows, pos, [(uniq.index(t),) for t in terms], slop, ordered,
+        window, _dup_groups(terms),
+    )
 
 
 def _phrase_freq_batches(
     terms: list[str], slop: int, ordered: bool, window: bool
 ):
     """mapInArrow body: (docid, text) record batches -> (docid,
-    phrase_freq), tokenization AND matching computed with vectorized C
-    kernels over the raw Arrow buffers.
+    phrase_freq) of the matching docs, tokenization AND matching
+    computed with vectorized C kernels over the raw Arrow buffers.
 
     Replaces the JVM regex tokenize + Arrow->pandas conversion (which
     boxes every token into a Python str) + per-row Python matcher with
     one whole-batch pass (guide §4.2): `tokenize_arrow_batch` emits the
-    batch's flat token stream (bytes + offsets + row ids), per-term hits
-    come from a vectorized length+bytes comparison, and each hit's
-    `row << 32 | position` key feeds the shared whole-batch matcher
-    (query/positions.py `phrase_freqs`), so no chain step or window can
-    cross a row boundary. Bit-identical to the per-row matchers (fuzzed
-    in tests; the DuckDB twins pin the gate semantics)."""
-    import numpy as np
-    import pyarrow as pa
-
+    batch's flat token stream (bytes + offsets + row ids), which is
+    wrapped as an Arrow string array without a copy and matched by
+    `_token_freqs`. Bit-identical to the per-row matchers (fuzzed in
+    tests; the DuckDB twins pin the gate semantics)."""
     from solr_spark.analysis.analyzer import tokenize_arrow_batch
-    from solr_spark.query.positions import _dup_groups, row_phrase_freqs
-
-    dup_groups = _dup_groups(terms)
 
     def batches(it):
         for batch in it:
             nrows = batch.num_rows
-            docid = batch.column(0)
             if nrows == 0:
                 continue
             values, val_off, tok_rows, _, _ = tokenize_arrow_batch(
                 batch.column(1)
             )
             ntok = tok_rows.size
-            tok_len = np.diff(val_off)
             list_off = np.zeros(nrows + 1, dtype=np.int64)
             np.cumsum(
                 np.bincount(tok_rows, minlength=nrows), out=list_off[1:]
             )
             # 1-based position of each token within its row
             pos = np.arange(1, ntok + 1, dtype=np.int64) - list_off[tok_rows]
-            key = (tok_rows << 32) | pos
-            hits: dict[str, np.ndarray] = {}
-            for t in terms:
-                if t in hits:
-                    continue
-                tb = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                cand = np.flatnonzero(tok_len == tb.size)
-                if cand.size and tb.size:
-                    mat = values[
-                        val_off[cand][:, None]
-                        + np.arange(tb.size, dtype=np.int64)
-                    ]
-                    cand = cand[(mat == tb).all(axis=1)]
-                hits[t] = key[cand]
-            counts = row_phrase_freqs(
-                nrows, [hits[t] for t in terms], slop, ordered, window,
-                dup_groups,
+            tokens = pa.Array.from_buffers(
+                pa.large_string(), ntok,
+                [None, pa.py_buffer(val_off), pa.py_buffer(values)],
+            )
+            rows, freqs = _token_freqs(
+                tokens, tok_rows, pos, terms, slop, ordered, window
             )
             yield pa.RecordBatch.from_arrays(
-                [docid, pa.array(counts, type=pa.int32())],
+                [batch.column(0).take(rows), pa.array(freqs, pa.int32())],
                 ["docid", "phrase_freq"],
             )
 
@@ -192,7 +191,7 @@ def phrase_match(
         _phrase_freq_batches(terms, slop, ordered, window),
         schema="docid long, phrase_freq int",
     )
-    return out.where(F.col("phrase_freq") > 0).orderBy("docid")
+    return out.orderBy("docid")
 
 
 def phrase_match_sql(

@@ -121,13 +121,7 @@ def significant_terms_indexed(
     stats = index.term_stats_for([toks[0]])
     if toks[0] not in stats:
         return empty
-    fg_tid = stats[toks[0]]["tid"]
-    fg_docs = (
-        index.postings()
-        .where(F.col("bucket").isin(index.pbuckets_for([fg_tid])))
-        .where(F.col("tid") == fg_tid)
-        .select("docid")
-    )
+    fg_docs = index.postings([stats[toks[0]]["tid"]]).select("docid")
     n_docs = float(index.meta["n_docs"])
     n_fg = float(fg_docs.count())
     fg = (
@@ -293,12 +287,8 @@ def spell_collate(
         for tid in uniq:
             rows.append((cid, tid, len(uniq)))
     memb = spark.createDataFrame(rows, "cid int, tid long, n int")
-    tids = sorted({tid for _, tid, _ in rows})
-    post = (
-        index.postings()
-        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
-        .where(F.col("tid").isin(tids))
-        .select("tid", "docid")
+    post = index.postings(sorted({tid for _, tid, _ in rows})).select(
+        "tid", "docid"
     )
     hits = (
         post.join(F.broadcast(memb), "tid")

@@ -78,12 +78,7 @@ def edismax_indexed(
     qrel = spark.createDataFrame(
         rows, "tid long, w double, idf double, term string, avgdl double"
     )
-    tids = [r[0] for r in rows]
-    postings = (
-        index.postings()
-        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
-        .where(F.col("tid").isin(tids))
-    )
+    postings = index.postings([r[0] for r in rows])
     contrib = postings.join(F.broadcast(qrel), "tid").select(
         "docid",
         "term",
@@ -138,11 +133,8 @@ def edismax_indexed(
                 hits = fdf if hits is None else hits.join(fdf, "docid", "full")
             # dl_q of each hit doc IN this field (any posting row of the
             # field's phrase terms carries it; phrase hits guarantee one)
-            ftids = [s["tid"] for s in fst.values()]
             dlq = (
-                index.postings()
-                .where(F.col("bucket").isin(index.pbuckets_for(ftids)))
-                .where(F.col("tid").isin(ftids))
+                index.postings([s["tid"] for s in fst.values()])
                 .groupBy("docid")
                 .agg(F.max("dl_q").alias("dl_q"))
             )

@@ -80,12 +80,7 @@ def _scored_postings(
     stats = index.term_stats_for(list(qterms), field=fld)
     if not stats:
         return None, stats
-    tids = [s["tid"] for s in stats.values()]
-    postings = (
-        index.postings()
-        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
-        .where(F.col("tid").isin(tids))
-    )
+    postings = index.postings([s["tid"] for s in stats.values()])
     tp = tf_part_col(F.col("tf"), F.col("dl_q"), avgdl)
     if len(stats) <= QREL_INLINE_MAX:
         # interactive fast path: the per-tid weight qtf*idf is a
@@ -150,28 +145,15 @@ def bm25_topk(
     an AND query with an absent term returns no rows. The main pass is
     ONE job: per-partition heap + driver merge (TakeOrderedAndProject).
     """
-    mode = norm_mode(mode)
-    qterms = analyze_query(qtext, index)
-    scored, stats = _scored_postings(index, qterms, field)
-    n_present = len(stats)
-    if n_present == 0 or (mode == "AND" and n_present < len(qterms)):
-        result = index.spark.createDataFrame([], "docid long, score double")
-    else:
-        agg = scored.groupBy("docid").agg(
-            F.sum("contrib").alias("score"),
-            F.count(F.lit(1)).alias("_nmatched"),
-        )
-        if mode == "AND":
-            agg = agg.where(F.col("_nmatched") == n_present)
-        # tie-break on the score ROUNDED to 9 decimals: raw float64 sums
-        # differ in the last ulp between plans (aggregation order), so a
-        # mathematical tie would otherwise order differently in the flat
-        # vs pruned paths; 1e-9 is far below any real BM25 separation
-        result = (
-            agg.select("docid", "score")
-            .orderBy(F.desc(F.round("score", 9)), F.asc("docid"))
-            .limit(k)
-        )
+    # tie-break on the score ROUNDED to 9 decimals: raw float64 sums
+    # differ in the last ulp between plans (aggregation order), so a
+    # mathematical tie would otherwise order differently in the flat
+    # vs pruned paths; 1e-9 is far below any real BM25 separation
+    result = (
+        bm25_scores(index, qtext, mode, field)
+        .orderBy(F.desc(F.round("score", 9)), F.asc("docid"))
+        .limit(k)
+    )
     if with_payload:
         payload_cols = [c for c in index.docs().columns if c not in ("docid",)]
         result = (
@@ -283,14 +265,10 @@ def bm25_explain(
         ],
         "tid long, term string, qtf double, df long, idf double",
     )
-    tids = [s["tid"] for s in stats.values()]
     # the live view: explain agrees with search while deletes are
     # pending (a deleted doc scores nowhere, so it has no breakdown)
-    postings = (
-        index.postings()
-        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
-        .where(F.col("tid").isin(tids))
-        .where(F.col("docid").isin([int(x) for x in docids]))
+    postings = index.postings([s["tid"] for s in stats.values()]).where(
+        F.col("docid").isin([int(x) for x in docids])
     )
     tp = tf_part_col(F.col("tf"), F.col("dl_q"), avgdl)
     return (
@@ -392,12 +370,7 @@ def bm25_topk_batch(
     labels = spark.createDataFrame(
         label_rows, "qid int, qid_label string"
     )
-    tids = sorted({r[1] for r in qrel_rows})
-    postings = (
-        index.postings()
-        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
-        .where(F.col("tid").isin(tids))
-    )
+    postings = index.postings(sorted({r[1] for r in qrel_rows}))
     contrib = postings.join(F.broadcast(qrel), "tid").select(
         "qid",
         "docid",

@@ -44,12 +44,7 @@ def _payload_positions(index: Index, terms: list[str]):
         return None, None
     tid_of = {t: stats[t]["tid"] for t in set(terms)}
     tids = sorted(set(tid_of.values()))
-    pos = (
-        index.positions()
-        .where(F.col("bucket").isin(index.pbuckets_for(tids)))
-        .where(F.col("tid").isin(tids))
-        .select("tid", "docid", "pos", "payload")
-    )
+    pos = index.positions(tids).select("tid", "docid", "pos", "payload")
     return [tid_of[t] for t in terms], pos
 
 

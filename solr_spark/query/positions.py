@@ -23,18 +23,23 @@ job:
   doc at once — the way a Lucene shard matches a phrase against the
   postings it holds, with no exchange;
 - distributed (above the gate, or a deletes sidecar over its cap): the
-  live scan is grouped per doc into sorted per-slot position arrays and
-  a pandas UDF runs the same matcher on each Arrow batch.
+  live pruned scan (`Index.positions(tids)`) is grouped per doc into
+  one tid list and one pos list, and a mapInArrow flattens each
+  batch's lists back into flat columns for the same matcher. A plain
+  repartition by docid feeding the raw rows to mapInArrow was measured
+  and rejected (the figures are at the decision site).
 
-One matching body per semantics, called by both venues and by the inline
-operator (operators/phrase.py) through `phrase_freqs`: each slot's
-positions are packed into sorted composite int64 keys `id << 32 | pos`
-(id = docid on the driver, the batch row index in a UDF), and one
-vectorized pass over the keys of ALL ids replaces a per-doc loop. pos is
-an int32 >= 1 and ids stay below 2^31 (docids are dense ranks,
-builder.assign_docids; an index built from caller-supplied docids past
-that takes the distributed venue), so no key overflows and every offset
-a matcher probes around a key stays inside that key's id.
+Every phrase caller — both venues, `phrase_match` and `phrase_freq_col`
+(operators/phrase.py) — goes through ONE entry point,
+`flat_phrase_freqs`, over flat columns (slot key, id, pos): the key is
+the tid here, a term code per token inline. It packs each slot's
+positions into sorted composite int64 keys `id << 32 | pos` (id = docid
+on the driver, the batch row inside mapInArrow and the inline
+operators), and one matching body per semantics (`phrase_freqs`) makes
+one vectorized pass over the keys of ALL ids instead of a per-doc loop.
+pos is an int32 >= 1 and an id past 2^31 (caller-supplied docids) is
+keyed by its dense rank, so no key overflows and every offset a matcher
+probes around a key stays inside that key's id.
 
 Matching algebra (1-based token positions):
 - exact phrase: start p of term0 with p+j in positions(term_j) for all j
@@ -53,10 +58,9 @@ Matching algebra (1-based token positions):
 from __future__ import annotations
 
 import itertools
-from functools import reduce
+from functools import partial, reduce
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -171,65 +175,41 @@ def phrase_freqs(
     return np.unique(surv >> _ID_SHIFT, return_counts=True)
 
 
-def row_keys(slot_rows: list[list]) -> list[np.ndarray]:
-    """Per-slot matcher keys `row << 32 | pos` over one batch:
-    slot_rows[j][r] = the sorted positions of slot j in row r."""
-    keys = []
-    for arrs in slot_rows:
-        lens = np.fromiter((len(a) for a in arrs), np.int64, len(arrs))
-        rows = np.repeat(np.arange(len(arrs), dtype=np.int64), lens)
-        flat = (
-            np.concatenate(arrs).astype(np.int64)
-            if lens.sum() else np.zeros(0, dtype=np.int64)
-        )
-        keys.append((rows << _ID_SHIFT) | flat)
-    return keys
-
-
-def row_phrase_freqs(
-    nrows: int, keys: list[np.ndarray], slop: int, ordered: bool,
-    window: bool = False, dup_groups: list[list[int]] | None = None,
-) -> np.ndarray:
-    """`phrase_freqs` over row-index keys, as one int32 freq per row."""
-    out = np.zeros(nrows, dtype=np.int32)
-    ids, freqs = phrase_freqs(keys, slop, ordered, window, dup_groups)
-    out[ids] = freqs
-    return out
-
-
-def _packed_freqs(
-    packed: pd.Series, slop: int, ordered: bool, window: bool,
-    dup_groups: list[list[int]] | None,
-) -> pd.Series:
-    """UDF body: one batch of packed rows (row r = per-slot sorted
-    position arrays) -> phrase_freq per row, through `phrase_freqs`."""
-    n_slots = len(packed.iloc[0]) if len(packed) else 0
-    keys = row_keys([[row[j] for row in packed] for j in range(n_slots)])
-    return pd.Series(
-        row_phrase_freqs(len(packed), keys, slop, ordered, window, dup_groups)
-    )
-
-
-def _freq_udf(
-    slop: int, ordered: bool, window: bool = False,
+def flat_phrase_freqs(
+    slot_key: np.ndarray,
+    ids: np.ndarray,
+    pos: np.ndarray,
+    slots: list[tuple],
+    slop: int,
+    ordered: bool,
+    window: bool = False,
     dup_groups: list[list[int]] | None = None,
-):
-    """pandas UDF over F.array(slot position arrays) -> int phrase_freq.
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one phrase-matching entry point, over flat columns: row i
+    puts a token whose slot key is `slot_key[i]` (a tid, or a term code)
+    at position `pos[i]` (1-based) of `ids[i]` (a docid, or a row index);
+    slot j matches any key in `slots[j]`. Returns `phrase_freqs`'s
+    (ids, phrase_freq) of every matching id, ids ascending.
 
-    A UDF rather than built-in expressions: Catalyst inlines single-use
-    projections into lambda bodies (CollapseProject) and re-evaluates
-    nested higher-order-function subtrees PER ELEMENT, making an
-    expression-level DP exponential in phrase length (measured: 2 head
-    terms over 300 docs already took >60 s)."""
-    from pyspark.sql.functions import pandas_udf
-
-    def freq(packed):
-        return _packed_freqs(packed, slop, ordered, window, dup_groups)
-
-    # real type objects: `from __future__ import annotations` stringifies
-    # inline hints, which pandas_udf cannot introspect
-    freq.__annotations__ = {"packed": pd.Series, "return": pd.Series}
-    return pandas_udf(freq, "int")
+    Builds the matcher keys `id << 32 | pos` itself. An id outside
+    [0, 2^31) (an index built from caller-supplied docids) is keyed by
+    its dense rank instead, so no key overflows; ids that fit pay only
+    the min/max check, never the rank's sort."""
+    ids = np.asarray(ids, dtype=np.int64)
+    uniq = None
+    if ids.size and (ids.min() < 0 or ids.max() >= 1 << 31):
+        uniq, ids = np.unique(ids, return_inverse=True)
+    key = (ids << _ID_SHIFT) | np.asarray(pos, dtype=np.int64)
+    # rows arrive sorted by id (grouped lists, token streams) or as a
+    # few (tid, docid, pos)-sorted runs (parquet files), which the
+    # stable sort merges
+    by_slot = {
+        s: np.sort(key[np.isin(slot_key, s)], kind="stable") for s in set(slots)
+    }
+    got, freqs = phrase_freqs(
+        [by_slot[s] for s in slots], slop, ordered, window, dup_groups
+    )
+    return (got if uniq is None else uniq[got]), freqs
 
 
 def _dup_groups(terms: list[str]) -> list[list[int]] | None:
@@ -367,21 +347,23 @@ def _match_slots(
     tid to its positions count. `terms` (query order) enables the
     repeated-term distinctness handling of the sloppy matcher.
 
-    Venue by volume (module docstring): with Σ cttf over the tids at
-    most the driver gate, `_match_on_driver` fetches the positions rows
-    once and matches them in NumPy; otherwise (or with a deletes sidecar
-    over its cap) the distributed plan runs on the bucket-pruned LIVE
-    scan: ONE groupBy builds every distinct slot's sorted array
-    (collect_list(when) drops the nulls, so each array holds only its
-    slot's positions) and drops docs missing any slot; a repeated slot
-    reuses its array; the UDF then calls the same `phrase_freqs` per
-    batch. Pass a dict as `debug` to receive the venue ("driver" or
-    "distributed") under "path"."""
+    Both venues hand `flat_phrase_freqs` flat (tid, id, pos) columns
+    (module docstring). With Σ cttf over the tids at most the driver
+    gate, the driver fetches the raw positions rows once and drops
+    pending deletes by id; otherwise (or with a deletes sidecar over its
+    cap) the LIVE scan is grouped per doc into two aligned lists, docs
+    missing a slot leave by one `exists` filter per distinct slot, and
+    a mapInArrow flattens each batch's lists back into flat columns
+    keyed by the batch row. Pass a dict as `debug` to receive the venue
+    ("driver" or "distributed") under "path"."""
     from solr_spark.query import wand
 
     slots = [tuple(sorted(s)) for s in slots]
     tids = sorted({t for s in slots for t in s})
-    dup_groups = _dup_groups(terms) if terms else None
+    match = partial(
+        flat_phrase_freqs, slots=slots, slop=slop, ordered=ordered,
+        window=window, dup_groups=_dup_groups(terms) if terms else None,
+    )
     on_driver = sum(cttf[t] for t in tids) <= wand.DRIVER_DECODE_MAX_POSTINGS
     dead = None
     if on_driver and index.has_deletes():
@@ -389,81 +371,61 @@ def _match_slots(
         # distributed plan and its liveDocs anti-join
         dead = index.deleted_id_array()
         on_driver = dead is not None
-    if on_driver:
-        got = _match_on_driver(
-            index, slots, tids, dead, slop, ordered, window, dup_groups
-        )
-        if got is not None:
-            if debug is not None:
-                debug["path"] = "driver"
-            return got
     if debug is not None:
-        debug["path"] = "distributed"
+        debug["path"] = "driver" if on_driver else "distributed"
+    if on_driver:
+        tbl = index.tid_scan("positions", tids, ("tid", "docid", "pos")).toArrow()
+        tid, docid, pos = (tbl.column(c).to_numpy() for c in tbl.column_names)
+        if dead is not None:
+            live = ~np.isin(docid, dead)
+            tid, docid, pos = tid[live], docid[live], pos[live]
+        ids, freqs = match(tid, docid, pos)
+        return index.spark.createDataFrame(
+            pa.table(
+                {
+                    "docid": pa.array(ids, pa.int64()),
+                    "phrase_freq": pa.array(freqs, pa.int32()),
+                }
+            )
+        )
 
-    col_of = {key: f"_s_{i}" for i, key in enumerate(dict.fromkeys(slots))}
-    joined = (
-        index.minus_deleted(index.tid_scan("positions", tids))
+    # One groupBy of two lists, flattened back in each batch; both
+    # aggregates consume a group's rows in the same order, so the i-th
+    # tid and the i-th pos come from the same row. Against
+    # the per-slot sort_array(collect_list) arrays + pandas UDF it
+    # replaced (synthetic docs x 100 tokens, Zipf 1.3 vocabulary,
+    # local[4], 4 GB driver, 4 vCPUs; alternating processes, median
+    # seconds, identical results): 200k docs, 7 pairs: 1.0M positions
+    # 2.48 -> 1.93, 4.1M 3.43 -> 2.84, 5.9M 3.94 -> 2.71, 3 terms slop
+    # 1 7.2M 3.95 -> 3.19, unordered slop 1 5.9M 3.52 -> 3.07; 600k
+    # docs, 5 pairs: 17.8M 10.65 -> 8.90, 3 terms slop 1 21.5M 12.16 ->
+    # 9.42, unordered 17.8M 10.24 -> 8.38. The groupBy itself stays: a
+    # repartition(docid) + mapInArrow over the raw rows measured 10-20%
+    # slower than the grouped plan at 1-9M positions, because Arrow then
+    # carries every row's docid and tid across the boundary.
+    grouped = (
+        index.positions(tids)
         .groupBy("docid")
-        .agg(
-            *[
-                F.sort_array(
-                    F.collect_list(
-                        F.when(F.col("tid").isin(list(key)), F.col("pos"))
-                    )
-                ).alias(c)
-                for key, c in col_of.items()
-            ]
-        )
-        .where(reduce(lambda a, b: a & b, [F.size(c) > 0 for c in col_of.values()]))
+        .agg(F.collect_list("tid").alias("tid"), F.collect_list("pos").alias("pos"))
     )
-    packed = F.array(*[F.col(col_of[s]) for s in slots])
-    freq = _freq_udf(slop, ordered, window, dup_groups)(packed)
-    return joined.select("docid", freq.cast("int").alias("phrase_freq")).where(
-        F.col("phrase_freq") > 0
-    )
+    for s in dict.fromkeys(slots):
+        # F.exists calls the lambda now, so it binds this iteration's s
+        grouped = grouped.where(F.exists("tid", lambda t: t.isin(list(s))))
 
+    def batches(it):
+        for batch in it:
+            tid, pos = batch.column(1), batch.column(2)
+            rows, freqs = match(
+                tid.flatten().to_numpy(),
+                tid.value_parent_indices().to_numpy(),
+                pos.flatten().to_numpy(),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(rows), pa.array(freqs, pa.int32())],
+                ["docid", "phrase_freq"],
+            )
 
-def _match_on_driver(
-    index: Index,
-    slots: list[tuple[int, ...]],
-    tids: list[int],
-    dead: np.ndarray | None,
-    slop: int,
-    ordered: bool,
-    window: bool,
-    dup_groups: list[list[int]] | None,
-) -> DataFrame | None:
-    """The driver venue: ONE shuffle-free scan job fetches the tids'
-    raw positions rows as Arrow, `dead` (pending deletes) docids are
-    dropped, and `phrase_freqs` runs over docid keys. None when a docid
-    falls outside the key's 31-bit id range (an index built from
-    caller-supplied docids), which leaves the distributed plan."""
-    tbl = index.tid_scan("positions", tids, ("tid", "docid", "pos")).toArrow()
-    tid = tbl.column("tid").to_numpy()
-    docid = tbl.column("docid").to_numpy()
-    pos = tbl.column("pos").to_numpy().astype(np.int64)
-    if dead is not None:
-        live = ~np.isin(docid, dead)
-        tid, docid, pos = tid[live], docid[live], pos[live]
-    if docid.size and (docid.min() < 0 or docid.max() >= 1 << 31):
-        return None
-    key = (docid << _ID_SHIFT) | pos
-    # each parquet file is sorted by (tid, docid, pos), so a slot's keys
-    # arrive as a few sorted runs, which the stable sort merges
-    by_slot = {
-        s: np.sort(key[np.isin(tid, s)], kind="stable") for s in set(slots)
-    }
-    ids, freqs = phrase_freqs(
-        [by_slot[s] for s in slots], slop, ordered, window, dup_groups
-    )
-    return index.spark.createDataFrame(
-        pa.table(
-            {
-                "docid": pa.array(ids, pa.int64()),
-                "phrase_freq": pa.array(freqs, pa.int32()),
-            }
-        )
-    )
+    return grouped.mapInArrow(batches, _PHRASE_SCHEMA)
 
 
 def phrase_docids(
@@ -513,10 +475,10 @@ def complex_phrase_docids(
     ComplexPhraseQParserPlugin.java): wildcard ('par*', 'p?rse') and
     fuzzy ('spark~1') terms INSIDE a phrase. Each slot expands against
     the term DICTIONARY (vocabulary-sized work, capped at
-    `max_expansions` like Lucene's rewrite bound), then the flat
-    positions scan assembles one array PER SLOT — collect_list over
-    `tid IN (slot tids)` unions the expanded terms' positions for free
-    — and the ordered/sloppy matchers run unchanged on slot arrays.
+    `max_expansions` like Lucene's rewrite bound); a slot then matches
+    any of its expanded tids (`flat_phrase_freqs`' slot keys), which
+    unions the expanded terms' positions for free, and the
+    ordered/sloppy matchers run unchanged.
     Each expansion brings its cttf, so the venue is chosen with no
     extra job; `debug` receives it (see `_match_slots`)."""
     import re as _re

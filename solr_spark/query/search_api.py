@@ -263,13 +263,7 @@ def _eval_bool(index: Index, node: BoolNode, now=None) -> DataFrame:
         ban_stats = index.term_stats_for(sorted(ban_tokens))
         ban_tids = [s["tid"] for s in ban_stats.values()]
         if ban_tids:
-            banned = (
-                index.postings()
-                .where(F.col("bucket").isin(index.pbuckets_for(ban_tids)))
-                .where(F.col("tid").isin(ban_tids))
-                .select("docid")
-                .distinct()
-            )
+            banned = index.postings(ban_tids).select("docid").distinct()
             agg = agg.join(banned, "docid", "left_anti")
     for np_ in not_parts:
         agg = agg.join(np_, "docid", "left_anti")

@@ -358,12 +358,7 @@ def surround_docids(
     spark = index.spark
     if not all_tids:
         return spark.createDataFrame([], "docid long, n_spans long")
-    pos = (
-        index.positions()
-        .where(F.col("bucket").isin(index.pbuckets_for(all_tids)))
-        .where(F.col("tid").isin(all_tids))
-    )
-    ev = _SpanEval(index, pos, tids_of)
+    ev = _SpanEval(index, index.positions(all_tids), tids_of)
     if isinstance(node, BoolNode) and node.kind != "OR":
         return ev.docids(node).withColumn("n_spans", F.lit(1).cast("long"))
     return (

@@ -63,6 +63,14 @@ def test_chain_semantics_exact(spark):
     assert _chain_freq(spark, toks, ["a", "b", "c"], 0) == 1  # only pos 1
     assert _chain_freq(spark, toks, ["a", "b"], 0) == 2
     assert _chain_freq(spark, toks, ["b", "a"], 0) == 0       # order matters
+    # a null and an empty token array hold no phrase, and do not shift
+    # the positions of the rows after them in the same batch
+    df = spark.createDataFrame(
+        [(["a", "b"],), (None,), ([],), (["x", "a", "b", "a", "b"],)],
+        "toks array<string>",
+    ).coalesce(1)
+    freq = phrase_freq_col(F.col("toks"), ["a", "b"])
+    assert [r.f for r in df.select(freq.alias("f")).collect()] == [1, 0, 0, 2]
 
 
 def test_chain_semantics_slop_needs_dp(spark):
@@ -308,7 +316,7 @@ def _both_venues(idx, run, monkeypatch) -> tuple[list, list]:
 @pytest.mark.parametrize("case", list(_venue_cases()))
 def test_phrase_venues_agree(index, case, monkeypatch):
     """The driver venue (one pruned fetch + NumPy matcher) and the
-    distributed venue (groupBy + pandas UDF) give identical (docid,
+    distributed venue (groupBy + mapInArrow) give identical (docid,
     phrase_freq) for every matcher, a repeated-term sloppy phrase and a
     complex phrase whose wildcard slot expands to several tids."""
     if case.startswith("complex"):
@@ -318,18 +326,20 @@ def test_phrase_venues_agree(index, case, monkeypatch):
     assert driver == dist and driver
 
 
-def test_udf_batch_path_equals_per_row():
-    """The distributed venue's UDF body on one multi-row batch and the
-    driver venue's docid-keyed call both equal a per-row reference: the
-    DuckDB twin of each matcher, and `_sloppy_count_anchors` per row for
-    the repeated-term sloppy phrase (which has no SQL twin)."""
+def test_flat_phrase_freqs_equals_per_row():
+    """The one matcher entry point, `flat_phrase_freqs`, over flat
+    (slot key, id, pos) columns in scrambled row order equals a per-row
+    reference — the DuckDB twin of each matcher, and
+    `_sloppy_count_anchors` per row for the repeated-term sloppy phrase
+    (which has no SQL twin) — with ids that are row indexes, sparse
+    docids (as a copied index has) and docids past 2^31 (caller-supplied,
+    keyed by their dense rank)."""
     import random
 
     import numpy as np
-    import pandas as pd
 
     from solr_spark.query.positions import (
-        _dup_groups, _packed_freqs, _sloppy_count_anchors, phrase_freqs,
+        _dup_groups, _sloppy_count_anchors, flat_phrase_freqs,
         sloppy_match_count_sql, window_match_count_sql,
     )
 
@@ -338,6 +348,12 @@ def test_udf_batch_path_equals_per_row():
     con = duckdb.connect()
     con.execute("CREATE TABLE t (r INT, toks VARCHAR[])")
     con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(rows)))
+    # flat token stream: slot key = the token's letter code
+    code = np.array([ord(t) for r in rows for t in r], dtype=np.int64)
+    row = np.repeat(np.arange(len(rows)), [len(r) for r in rows])
+    pos = np.concatenate([np.arange(1, len(r) + 1) for r in rows])
+    order = np.random.default_rng(5).permutation(code.size)
+    code, row, pos = code[order], row[order], pos[order]
     for terms, slop, ordered, window in [
         (["a", "b"], 0, True, False),
         (["a", "b", "c"], 2, True, False),
@@ -346,12 +362,14 @@ def test_udf_batch_path_equals_per_row():
         (["c", "a"], 1, False, True),
     ]:
         dup = _dup_groups(terms)
-        per_slot = [
-            [np.flatnonzero(np.asarray(r, dtype=object) == t).astype(np.int32) + 1 for t in terms]
-            for r in rows
-        ]
         if dup and not ordered:
-            ref = [_sloppy_count_anchors([p.astype(np.int64) for p in ps], slop, dup) for ps in per_slot]
+            ref = [
+                _sloppy_count_anchors(
+                    [np.flatnonzero(np.asarray(r, dtype=object) == t) + 1 for t in terms],
+                    slop, dup,
+                )
+                for r in rows
+            ]
         else:
             pos_exprs = [
                 f"[i FOR i IN range(1, len(toks) + 1) IF toks[i] = '{t}']" for t in terms
@@ -366,19 +384,13 @@ def test_udf_batch_path_equals_per_row():
                     f"SELECT r, ({twin(pos_exprs, slop)}) FROM t ORDER BY r"
                 ).fetchall()
             ]
-        batch = _packed_freqs(pd.Series(per_slot), slop, ordered, window, dup)
-        assert batch.tolist() == ref, terms
-        docid = lambda r: 7 * r + 2  # sparse docids, as a copied index has
-        keys = [
-            np.sort(np.array(
-                [(docid(r) << 32) | int(p) for r, ps in enumerate(per_slot) for p in ps[j]],
-                dtype=np.int64,
-            ))
-            for j in range(len(terms))
-        ]
-        ids, freqs = phrase_freqs(keys, slop, ordered, window, dup)
-        want = {docid(r): f for r, f in enumerate(ref) if f}
-        assert dict(zip(ids.tolist(), freqs.tolist())) == want and want, terms
+        slots = [(ord(t),) for t in terms]
+        for id_of in (lambda r: r, lambda r: 7 * r + 2, lambda r: (1 << 40) + 7 * r):
+            ids, freqs = flat_phrase_freqs(
+                code, id_of(row), pos, slots, slop, ordered, window, dup
+            )
+            want = {id_of(r): f for r, f in enumerate(ref) if f}
+            assert dict(zip(ids.tolist(), freqs.tolist())) == want and want, terms
 
 
 def _sfreq(spark, toks, terms, slop, **kw):
@@ -453,13 +465,13 @@ def test_sloppy_sql_twin(spark):
         assert spark_f == con.execute(sql).fetchone()[0], (text, terms, slop)
 
 
-def test_complex_phrase_wildcard_fuzzy(spark, tmp_path):
+def test_complex_phrase_wildcard_fuzzy(spark, tmp_path, monkeypatch):
     """ComplexPhrase: wildcard and fuzzy slots expand against the
     dictionary and match positionally — equals the union of the
     expanded plain phrases; absent expansion -> empty; cap raises.
-    The corpus brings its own docids past 2^31, which the driver
-    venue's `docid << 32 | pos` keys cannot hold: the distributed venue
-    answers instead."""
+    The corpus brings its own docids past 2^31, which the matcher keys
+    by their dense rank: the driver venue answers them, with the same
+    rows as the distributed venue."""
     import pytest as _pytest
 
     from solr_spark.index.builder import build_index
@@ -479,12 +491,10 @@ def test_complex_phrase_wildcard_fuzzy(spark, tmp_path):
         spark, corpus, str(tmp_path / "cpx"), num_buckets=2,
         build_blocks=False, build_positions=True,
     )
-    dbg: dict = {}
-    got = {
-        r["docid"]: r["phrase_freq"]
-        for r in complex_phrase_docids(idx, ["json", "pars*"], debug=dbg).collect()
-    }
-    assert dbg["path"] == "distributed"
+    cpx = lambda i, d: complex_phrase_docids(i, ["json", "pars*"], debug=d)
+    driver, dist = _both_venues(idx, cpx, monkeypatch)
+    assert driver == dist
+    got = dict(driver)
     want = {}
     for w in ("parser", "parsing"):
         for r in phrase_docids(idx, ["json", w]).collect():
