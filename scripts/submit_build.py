@@ -11,9 +11,9 @@ executors — see scripts/spark_submit_build.sh):
         [--query "jsonParser bufferSize"]
 
 Prints one JSON line of build metrics (docs, postings rows, seconds,
-docs/sec) — the lineage/metrics record the north rule asks each build to
-emit; per-chunk manifests with elapsed times land under
-<out>/_checkpoints/.
+docs/sec) — the lineage/metrics record each build emits; with
+--num-chunks > 1 per-chunk manifests with elapsed times land under
+<out>/_checkpoints/, and --resume restarts from them (see --help).
 """
 
 from __future__ import annotations
@@ -32,7 +32,13 @@ def main() -> None:
     ap.add_argument("--num-buckets", type=int, default=16)
     ap.add_argument("--num-chunks", type=int, default=1)
     ap.add_argument("--salt-threshold", type=int, default=20000)
-    ap.add_argument("--resume", action="store_true")
+    ap.add_argument(
+        "--resume", action="store_true",
+        help="with --num-chunks > 1: skip the chunks whose analysis is "
+        "already committed under <out>/_checkpoints and re-run the build "
+        "body from the staged analysis a crashed run leaves in place; "
+        "a single-chunk build has no checkpoint and is rebuilt",
+    )
     ap.add_argument("--positions", action="store_true")
     ap.add_argument("--query", help="smoke BM25 query to run after the build")
     args = ap.parse_args()

@@ -23,11 +23,14 @@ Scale design points:
   solr/core/src/java/org/apache/solr/search/facet/UnInvertedField.java:109);
   build, expunge and merge all encode through `_encode_blocks`, so this
   is the index's only salt rule.
-- resumable: with num_chunks > 1 the tokenize+invert phase runs per
-  chunk, each committing a staged parquet + a JSON manifest; a restart
-  skips finished chunks (analogue of tlog replay,
-  solr/core/src/java/org/apache/solr/update/UpdateLog.java:374; the final
-  atomic publish mirrors the hard commit,
+- resumable: with num_chunks > 1 the analysis runs per chunk, each
+  committing its analyzed docs as staged parquet + a JSON manifest; a
+  restart skips finished chunks (analogue of tlog replay,
+  solr/core/src/java/org/apache/solr/update/UpdateLog.java:374) and the
+  one build body (invert, layout, block encode, term stats) then runs
+  once over the union of the chunks, exactly as a single-chunk build
+  runs it over its in-memory analysis (the final atomic publish mirrors
+  the hard commit,
   solr/core/src/java/org/apache/solr/update/DirectUpdateHandler2.java:103-158).
 """
 
@@ -76,28 +79,40 @@ DELETES_BROADCAST_CAP = 2_000_000
 DICT_LRU_CAP = 65_536
 
 
-def _write_bucketed(
-    df: DataFrame, path: str, num_buckets: int, sort_cols: tuple[str, ...]
-) -> None:
-    """Write a tid-keyed index table partitioned by bucket with a SMALL,
-    tid-sorted file set: per-query-job cost is dominated by files opened
-    (round-2 measurement: a 512-file layout cost ~1 s/job in listing +
-    footers), and per-file tid-sorting gives tight row-group min/max so
-    the `tid IN (...)` pushdown skips row groups. A tid-derived salt
+def _bucket_layout(
+    df: DataFrame, num_buckets: int, sort_cols: tuple[str, ...]
+) -> DataFrame:
+    """The index's one layout exchange for tid-keyed tables: rows hashed
+    to (bucket, tid-derived file salt), `bucket` projected back, each
+    partition sorted by `sort_cols`. Written partitioned by bucket it
+    gives a SMALL, tid-sorted file set: per-query-job cost is dominated
+    by files opened (round-2 measurement: a 512-file layout cost ~1 s/job
+    in listing + footers), and per-file tid-sorting gives tight row-group
+    min/max so the `tid IN (...)` pushdown skips row groups. The salt
     keeps write parallelism at num_buckets*FILES_PER_BUCKET while every
-    tid's rows land in ONE file of its bucket. Scaling knob at cluster
-    size = num_buckets.
+    tid's rows land in ONE file of its bucket — which is also what the
+    block encoder needs (every tid in one partition, (tid, docid)-sorted).
+    Scaling knob at cluster size = num_buckets.
 
     The bucket is a pure function of tid, so the exchange keys on the
     DERIVED expressions and the column is projected back only after the
     shuffle — 4 bytes/row that never ride the wire."""
     bexpr = tid_bucket_col("tid", num_buckets)
     salt = F.pmod(F.xxhash64(F.col("tid"), F.lit(7)), F.lit(FILES_PER_BUCKET))
-    (
+    return (
         df.drop("bucket")
         .repartition(num_buckets * FILES_PER_BUCKET, bexpr, salt)
         .withColumn("bucket", bexpr)
         .sortWithinPartitions(*[F.col(c) for c in sort_cols])
+    )
+
+
+def _write_bucketed(
+    df: DataFrame, path: str, num_buckets: int, sort_cols: tuple[str, ...]
+) -> None:
+    """Write a tid-keyed index table in the `_bucket_layout` layout."""
+    (
+        _bucket_layout(df, num_buckets, sort_cols)
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
@@ -241,10 +256,6 @@ class IndexPaths:
     @property
     def positions(self):
         return os.path.join(self.root, "positions")
-
-    @property
-    def term_dict_stage(self):
-        return os.path.join(self.root, "stage", "term_dict")
 
     @property
     def meta(self):
@@ -565,9 +576,10 @@ class Index:
         'resumable from checkpoint with per-partition lineage +
         metrics' reporting surface. Combines the meta rollups with
         every committed chunk manifest (_checkpoints/chunk_*.json:
-        per-chunk docs_out/postings_out/elapsed_ms) and the dictionary/
-        postings row counts (parquet count() is a footer read, not a
-        data pass)."""
+        per-chunk analyzed docs_out and elapsed_ms; chunked builds
+        only, a single-chunk build has no checkpoint) and the
+        dictionary/postings row counts (parquet count() is a footer
+        read, not a data pass)."""
         import glob as _glob
 
         chunks = []
@@ -1065,6 +1077,8 @@ def _tid_clustered(
     """Postings read back from parquet -> the input `_encode_blocks`
     needs: every tid in one partition (one exchange on tid; a file split
     can cut a tid's run), sorted by (tid, docid) within the partition.
+    Maintenance (expunge, merge) re-encodes through it; the build
+    encodes its laid postings directly.
 
     On a multi-field index the `fid` ordinal (per-field avgdl in the
     block-max metadata) is not stored — the postings layout stays
@@ -1085,13 +1099,13 @@ def _encode_blocks(postings: DataFrame, out_path: str, meta: dict) -> DataFrame:
     """The index's one block-encode path — build, expunge and merge.
 
     `postings` must be clustered by tid and sorted by (tid, docid) within
-    each partition, with a `fid` column on multi-field indexes (the laid
-    build cache, or `_tid_clustered`). Encodes with the one salt rule of
-    `make_block_encoder`, the index's block size (`meta["block_size"]`,
-    absent on default-size indexes) and its avgdl (per field when `meta`
-    has `fields`), writes the blocks to `out_path` in the bucketed
-    layout, and returns the per-term block-max fold (tid, mtp, skips)
-    the dictionary carries."""
+    each partition, with a `fid` column on multi-field indexes (the
+    build's laid `_bucket_layout` cache, or `_tid_clustered`). Encodes
+    with the one salt rule of `make_block_encoder`, the index's block
+    size (`meta["block_size"]`, absent on default-size indexes) and its
+    avgdl (per field when `meta` has `fields`), writes the blocks to
+    `out_path` in the bucketed layout, and returns the per-term
+    block-max fold (tid, mtp, skips) the dictionary carries."""
     fields = meta.get("fields")
     avgdl = (
         [float(meta["avgdl_by_field"][f]) for f in fields]
@@ -1253,15 +1267,24 @@ def _build_index_impl(
     If the corpus has no `docid` column one is assigned deterministically
     (sort rank over (repo, path, commit)).
 
+    One body builds every index: analysis -> docs, the laid postings,
+    positions, dictionary, corpus stats, blocks, term stats. With
+    `num_chunks > 1` the analysis is the checkpoint: each chunk (docid %
+    num_chunks) writes its analyzed docs to `stage/tok_c{chunk}` and
+    commits `_checkpoints/chunk_{chunk}.json`; the body then runs once
+    over the union of the chunks. `resume=True` skips every committed
+    chunk and re-runs the body from the staged analysis (a crashed build
+    leaves its stage; a finished one keeps it only with `keep_stage`).
+    A single-chunk build is one job graph with no intermediate
+    checkpoint, so `resume=True` rebuilds it from the corpus.
+
     `fields`: index several text columns as independent per-field
     inverted indexes (tid = hash(field, term); per-field norms) — the
     schema-fields model that lets edismax/qf run against the REAL index.
     Block-max metadata is per-field (the encoder applies each posting's
-    FIELD avgdl to tf_part via a fid ordinal), so block-max WAND serves
-    every field of any multi-field build — single-chunk, chunked or
-    resumed. The single-chunk build feeds the encoder its in-flight
-    layout cache; the other two re-read the written postings and derive
-    fid from the dictionary (`_tid_clustered`).
+    FIELD avgdl to tf_part via a fid ordinal carried by the laid
+    postings), so block-max WAND serves every field of any multi-field
+    build.
     """
     paths = IndexPaths(out_dir)
     if not resume and os.path.exists(out_dir):
@@ -1289,135 +1312,92 @@ def _build_index_impl(
                     json.dump({"status": "done"}, f)
             corpus = spark.read.parquet(ids_dir)
 
-    # ---- phase 1: per-chunk tokenize + invert (resumable) ----
-    # single-chunk fast path: write docs and bucket-partitioned postings
-    # straight to their final layout (no stage copy, one shuffle less)
-    single = num_chunks == 1
-    laid: DataFrame | None = None  # single-chunk: layout-shuffled postings
-    stats = None  # (n_docs, avgdl, avgdl_by_field)
-    for chunk in range(num_chunks):
-        manifest = os.path.join(paths.checkpoints, f"chunk_{chunk}.json")
-        if resume and os.path.exists(manifest):
-            continue
-        part = corpus
-        if num_chunks > 1:
-            part = corpus.where(F.pmod(F.col("docid"), F.lit(num_chunks)) == chunk)
-        tick = time.time()
-        docs_tok = _analyze_docs(
+    # ---- phase 1: analysis (checkpointed per chunk when chunked) ----
+    def analyze(part: DataFrame) -> DataFrame:
+        return _analyze_docs(
             part, fields, stopwords, synonyms, store_content, analyzer
-        ).persist()
-        persisted.append(docs_tok)
-        docs_dir = paths.docs if single else os.path.join(paths.stage, f"docs_c{chunk}")
-        post_dir = paths.postings if single else os.path.join(paths.stage, f"post_c{chunk}")
-        dict_dir = os.path.join(paths.stage, f"dict_c{chunk}")
-        docs_tok.drop(*_token_cols(docs_tok)).write.mode("overwrite").parquet(docs_dir)
-        # ONE layout shuffle, reused three times: the (bucket, tid-salt)
-        # exchange + per-file tid sort below is the SAME distribution the
-        # postings write, the df/cttf term aggregation and the block
-        # encode all consume, so it runs once and is persisted
-        # (MEMORY_AND_DISK) instead of being paid as three separate
-        # full-postings shuffles/scans. Layout rationale (unchanged from
-        # _write_bucketed): one file per bucket sorted by tid -> small
-        # listing/footer cost and tight row-group tid min/max for
-        # `tid IN (...)` pushdown (round-2 measurement: a 512-file
-        # layout cost ~1 s/job on a 250k-row metadata scan). The bucket
-        # and file-salt both derive from tid, so the exchange keys on
-        # the expressions and bucket is projected back AFTER the shuffle
-        # — the column never rides the wire.
-        bexpr = tid_bucket_col("tid", num_buckets)
-        fsalt = F.pmod(
-            F.xxhash64(F.col("tid"), F.lit(7)), F.lit(FILES_PER_BUCKET)
         )
-        # NOTE on a rejected "fusion" (round-3, measured on a 200k-doc /
-        # 32-core A/B): deriving postings FROM the laid positions — so a
-        # positions-enabled build pays one token-volume exchange instead
-        # of running the invert too — LOSES on every variant tried:
-        # (a) partition-local run-length via mapInPandas costs a full
-        # positions Arrow round-trip through Python (+47 s vs the +10 s
-        # JVM invert); (b) JVM re-aggregation of the laid/written
-        # positions pays the same exchange volume as the invert PLUS a
-        # 48M-row re-scan (build 45-50 s vs 40.8 s). The invert's
-        # map-side partial agg already shrinks its exchange to postings
-        # volume, so the only duplicated work is a cheap codegen explode
-        # over the cached token arrays. A true single-exchange build
-        # needs NESTED per-(tid,docid) rows shuffled once (positions as
-        # arrays), which changes the on-disk flat layout the phrase path
-        # depends on — not worth it at the measured margins.
-        if single:
-            laid = (
-                _postings_from_docs(docs_tok, fields)
-                .repartition(num_buckets * FILES_PER_BUCKET, bexpr, fsalt)
-                .withColumn("bucket", bexpr)
-                .sortWithinPartitions("tid", "docid")
-                .persist()
-            )
-            persisted.append(laid)
-            # the fid ordinal (multi-field) only feeds the in-flight
-            # block encode; on-disk postings keep the field-free schema
-            laid.drop("fid").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(post_dir)
-        else:
-            _postings_from_docs(docs_tok, fields).drop("fid").write.mode(
-                "overwrite"
-            ).parquet(post_dir)
-        if build_positions:
-            chunk_pos = _positions_from_docs(docs_tok, fields)
-            if single:
-                _write_bucketed(
-                    chunk_pos, paths.positions, num_buckets,
-                    ("tid", "docid", "pos"),
-                )
-            else:
-                chunk_pos.write.mode("overwrite").parquet(
-                    os.path.join(paths.stage, f"pos_c{chunk}")
-                )
-        _term_dict_from_docs(docs_tok, fields).write.mode("overwrite").parquet(dict_dir)
-        if single:
-            # fold the corpus stats (n_docs, avgdl — per field in multi-
-            # field mode) into the cached tokenize pass instead of a
-            # separate docs-parquet scan job
-            stats = _corpus_stats(docs_tok, fields)
-        docs_tok.unpersist()
-        man = {
-            "chunk": chunk,
-            "elapsed_ms": int((time.time() - tick) * 1000),
-            "status": "done",
-        }
-        if not single:
-            # chunked builds record per-chunk lineage counts; the
-            # single-chunk fast path derives them from phase-2 stats
-            # instead of paying two extra count jobs
-            man["docs_out"] = spark.read.parquet(docs_dir).count()
-            man["postings_out"] = spark.read.parquet(post_dir).count()
-        with open(manifest, "w") as f:
-            json.dump(man, f)
 
-    # ---- phase 2: finalize (global stats, bucketed layout, blocks) ----
-    if not single:
-        spark.read.parquet(os.path.join(paths.stage, "docs_c*")).write.mode(
-            "overwrite"
-        ).parquet(paths.docs)
-        # bucketed flat postings (the correctness/scoring path)
+    if num_chunks == 1:
+        # the body reads the analysis five times (docs, postings,
+        # positions, dictionary, stats): materialize it once
+        docs_tok = analyze(corpus).persist()
+        persisted.append(docs_tok)
+    else:
+        tok_dirs = [
+            os.path.join(paths.stage, f"tok_c{chunk}")
+            for chunk in range(num_chunks)
+        ]
+        for chunk, tok_dir in enumerate(tok_dirs):
+            manifest = os.path.join(paths.checkpoints, f"chunk_{chunk}.json")
+            if resume and os.path.exists(manifest):
+                continue
+            tick = time.time()
+            analyze(
+                corpus.where(F.pmod(F.col("docid"), F.lit(num_chunks)) == chunk)
+            ).write.mode("overwrite").parquet(tok_dir)
+            man = {
+                "chunk": chunk,
+                "elapsed_ms": int((time.time() - tick) * 1000),
+                "status": "done",
+                # parquet count() is a footer read, not a data pass
+                "docs_out": spark.read.parquet(tok_dir).count(),
+            }
+            with open(manifest, "w") as f:
+                json.dump(man, f)
+        # read, not cached: each write of the body scans only the staged
+        # columns it needs, and the analysis of a corpus too big for one
+        # chunk need not fit in memory (at 200k docs, local[4], caching
+        # it made the invert spill 3.6 GB)
+        docs_tok = spark.read.parquet(*tok_dirs)
+
+    # ---- phase 2: the one body, over the whole analysis ----
+    docs_tok.drop(*_token_cols(docs_tok)).write.mode("overwrite").parquet(
+        paths.docs
+    )
+    # ONE layout shuffle, reused three times: the `_bucket_layout`
+    # exchange is the SAME distribution the postings write, the df/cttf
+    # term aggregation and the block encode all consume, so it runs once
+    # and is persisted (MEMORY_AND_DISK) instead of being paid as three
+    # separate full-postings shuffles/scans.
+    # NOTE on a rejected "fusion" (round-3, measured on a 200k-doc /
+    # 32-core A/B): deriving postings FROM the laid positions — so a
+    # positions-enabled build pays one token-volume exchange instead
+    # of running the invert too — LOSES on every variant tried:
+    # (a) partition-local run-length via mapInPandas costs a full
+    # positions Arrow round-trip through Python (+47 s vs the +10 s
+    # JVM invert); (b) JVM re-aggregation of the laid/written
+    # positions pays the same exchange volume as the invert PLUS a
+    # 48M-row re-scan (build 45-50 s vs 40.8 s). The invert's
+    # map-side partial agg already shrinks its exchange to postings
+    # volume, so the only duplicated work is a cheap codegen explode
+    # over the cached token arrays. A true single-exchange build
+    # needs NESTED per-(tid,docid) rows shuffled once (positions as
+    # arrays), which changes the on-disk flat layout the phrase path
+    # depends on — not worth it at the measured margins.
+    laid = _bucket_layout(
+        _postings_from_docs(docs_tok, fields), num_buckets, ("tid", "docid")
+    ).persist()
+    persisted.append(laid)
+    # the fid ordinal (multi-field) only feeds the in-flight block
+    # encode; on-disk postings keep the field-free schema
+    laid.drop("fid").write.mode("overwrite").partitionBy("bucket").parquet(
+        paths.postings
+    )
+    if build_positions:
         _write_bucketed(
-            spark.read.parquet(os.path.join(paths.stage, "post_c*")),
-            paths.postings, num_buckets, ("tid", "docid"),
+            _positions_from_docs(docs_tok, fields), paths.positions,
+            num_buckets, ("tid", "docid", "pos"),
         )
-        if build_positions:
-            _write_bucketed(
-                spark.read.parquet(os.path.join(paths.stage, "pos_c*")),
-                paths.positions, num_buckets, ("tid", "docid", "pos"),
-            )
-    if stats is None:
-        # chunked build, or resume=True with the only chunk's manifest
-        # already committed: no cached tokenize pass to fold the stats
-        # into, so read them off the final docs parquet (pre-round-3 a
-        # resumed single-chunk build crashed here with a NoneType
-        # subscript; ADVICE.md round 2)
-        stats = _corpus_stats(spark.read.parquet(paths.docs), fields)
-    n_docs, avgdl, avgdl_by_field = stats
-    postings = laid if laid is not None else spark.read.parquet(paths.postings)
-    term_dict = spark.read.parquet(os.path.join(paths.stage, "dict_c*")).distinct()
+    # the dictionary is staged so releasing the analysis below cannot
+    # make the term-stats job re-run it
+    dict_dir = os.path.join(paths.stage, "dict")
+    _term_dict_from_docs(docs_tok, fields).write.mode("overwrite").parquet(
+        dict_dir
+    )
+    n_docs, avgdl, avgdl_by_field = _corpus_stats(docs_tok, fields)
+    docs_tok.unpersist()
+    term_dict = spark.read.parquet(dict_dir).distinct()
 
     meta = {
         "n_docs": n_docs,
@@ -1452,21 +1432,16 @@ def _build_index_impl(
 
     block_meta = None
     if meta["has_blocks"]:
-        # the single-chunk laid cache is already tid-clustered and
-        # (tid, docid)-sorted with fid riding along, so it feeds the
-        # encoder as-is (encode parallelism = num_buckets *
-        # FILES_PER_BUCKET tasks, the postings-write width; no exchange)
-        block_meta = _encode_blocks(
-            laid if laid is not None
-            else _tid_clustered(postings, term_dict, fields),
-            paths.blocks, meta,
-        )
+        # the laid cache is already tid-clustered and (tid, docid)-sorted
+        # with fid riding along, so it feeds the encoder as-is (encode
+        # parallelism = num_buckets * FILES_PER_BUCKET tasks, the
+        # postings-write width; no exchange)
+        block_meta = _encode_blocks(laid, paths.blocks, meta)
     _write_term_stats(
-        _term_stats(postings, term_dict, salt_threshold, num_buckets, block_meta),
+        _term_stats(laid, term_dict, salt_threshold, num_buckets, block_meta),
         paths.term_stats, num_buckets,
     )
-    if laid is not None:
-        laid.unpersist()
+    laid.unpersist()
     meta["build_seconds"] = round(time.time() - t0, 3)
     with open(paths.meta, "w") as f:
         json.dump(meta, f, indent=2)

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from solr_spark.index.builder import Index
+from solr_spark.index.builder import Index, tid_bucket_col
 
 
 def _expanded_docs(index: Index, term_pred: Column) -> DataFrame:
@@ -30,10 +30,16 @@ def _expanded_docs(index: Index, term_pred: Column) -> DataFrame:
     The predicate runs on the term DICTIONARY (term_stats, which carries
     the strings); matching tids broadcast-join the postings — the
     dictionary-scan-then-postings-seek shape of Lucene's multiterm
-    rewrite. On multi-field indexes the dictionary scan is scoped to the
-    default field (a multiterm query targets one field in Solr)."""
-    tids = index.term_dictionary().where(term_pred).select("tid")
-    post = index.postings().join(F.broadcast(tids), "tid")
+    rewrite. The dictionary side carries each tid's postings bucket, so
+    the join on (tid, bucket) lets dynamic partition pruning skip every
+    postings bucket no expanded term lives in, with no collect and no
+    cap on the expansion. On multi-field indexes the dictionary scan is
+    scoped to the default field (a multiterm query targets one field in
+    Solr)."""
+    tids = index.term_dictionary().where(term_pred).select(
+        "tid", tid_bucket_col("tid", index.meta["num_buckets"]).alias("bucket")
+    )
+    post = index.postings().join(F.broadcast(tids), ["tid", "bucket"])
     return post.select("docid").distinct().withColumn("score", F.lit(1.0))
 
 

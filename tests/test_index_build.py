@@ -134,26 +134,46 @@ def test_blocks_cover_postings(index):
         assert all(r.ns > 1 for r in salts)
 
 
+def _rows(idx):
+    """Every stored table of `idx` as sorted rows, columns in name order,
+    for row-for-row build comparisons."""
+    tables = {
+        "docs": idx.docs(), "postings": idx.postings(),
+        "positions": idx.positions(), "blocks": idx.blocks(),
+        "term_stats": idx.term_stats(),
+    }
+    return {
+        name: sorted(df.select(*sorted(df.columns)).collect(), key=repr)
+        for name, df in tables.items()
+    }
+
+
 def test_resume_equals_fresh(spark, corpus, tmp_path):
-    fresh = build_index(
-        spark, corpus, str(tmp_path / "fresh"), num_buckets=4, num_chunks=3
-    )
-    # simulate a crash: full build keeping stage, then wipe phase-2 output
-    # and one chunk's manifest, and resume
+    """A chunked build equals the single-chunk build row for row in every
+    table (the chunks only checkpoint the analysis; one body builds the
+    index), and so does a chunked build resumed after a crash."""
+    kw = dict(num_buckets=4, salt_threshold=100, num_salts=4,
+              build_positions=True)
+    want = _rows(build_index(spark, corpus, str(tmp_path / "fresh"), **kw))
     out2 = str(tmp_path / "resumed")
-    build_index(spark, corpus, out2, num_buckets=4, num_chunks=3, keep_stage=True)
-    # wipe phase-2 outputs + one chunk manifest, then resume
+    chunked = build_index(
+        spark, corpus, out2, num_chunks=3, keep_stage=True, **kw
+    )
+    assert _rows(chunked) == want
+    assert all(want[t] for t in ("postings", "positions", "blocks"))
+    # simulate a crash: wipe the body's outputs and one chunk's manifest,
+    # then resume from the two committed chunks' staged analysis
     import shutil
 
-    shutil.rmtree(os.path.join(out2, "docs"))
+    for d in ("docs", "postings", "positions", "blocks", "term_stats"):
+        shutil.rmtree(os.path.join(out2, d))
+    os.remove(os.path.join(out2, "meta.json"))
     os.remove(os.path.join(out2, "_checkpoints", "chunk_2.json"))
     resumed = build_index(
-        spark, corpus, out2, num_buckets=4, num_chunks=3, resume=True
+        spark, corpus, out2, num_chunks=3, resume=True, **kw
     )
-    a = sorted(fresh.postings().select("tid", "docid", "tf").collect())
-    b = sorted(resumed.postings().select("tid", "docid", "tf").collect())
-    assert a == b
-    assert fresh.meta["n_docs"] == resumed.meta["n_docs"]
+    assert _rows(resumed) == want
+    assert resumed.meta["n_docs"] == N_DOCS
 
 
 def test_resume_single_chunk(spark, corpus, tmp_path):

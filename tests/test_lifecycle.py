@@ -70,6 +70,16 @@ def _dictionary(idx):
     )
 
 
+def _docs(idx):
+    return sorted(tuple(r) for r in idx.docs().select(
+        *sorted(idx.docs().columns)).collect())
+
+
+def _postings(idx):
+    return sorted(tuple(r) for r in idx.postings().select(
+        "tid", "docid", "tf", "dl_q", "bucket").collect())
+
+
 def _assert_blocks_cover_postings(idx):
     """Every live posting sits in exactly one block, and head terms are
     salted across sub-lists."""
@@ -94,12 +104,11 @@ def _assert_blocks_cover_postings(idx):
 
 @pytest.fixture(scope="module")
 def mf_whole(spark, tmp_path_factory):
-    """The reference: one single-chunk build over the whole corpus, with
-    its stage kept so the resume test can restart from a copy, plus the
-    corpus rows in docid order for the chunked and half builds."""
+    """The reference: one single-chunk build over the whole corpus, plus
+    the corpus rows in docid order for the chunked and half builds."""
     corpus = _mf_corpus(spark, 240, seed=9).persist()
     root = str(tmp_path_factory.mktemp("mf") / "whole")
-    idx = build_index(spark, corpus, root, keep_stage=True, **MF_KW)
+    idx = build_index(spark, corpus, root, **MF_KW)
     rows = corpus.orderBy("repo", "path", "commit").collect()
     return idx, rows, corpus.schema
 
@@ -128,25 +137,29 @@ def test_multifield_chunked_and_resumed_builds_keep_blocks(
     whole, rows, schema = mf_whole
     corpus = spark.createDataFrame(rows, schema)
     _assert_wand_equals_flat(whole)
-    want_blocks, want_dict = _blocks(whole), _dictionary(whole)
+    want = (_blocks(whole), _dictionary(whole), _docs(whole), _postings(whole))
 
     chunked = build_index(
-        spark, corpus, str(tmp_path / "chunked"), num_chunks=3, **MF_KW
+        spark, corpus, str(tmp_path / "chunked"), num_chunks=3,
+        keep_stage=True, **MF_KW
     )
-    assert _blocks(chunked) == want_blocks
-    assert _dictionary(chunked) == want_dict
+    assert (_blocks(chunked), _dictionary(chunked), _docs(chunked),
+            _postings(chunked)) == want
     _assert_wand_equals_flat(chunked)
 
-    # resumed single-chunk build: phase 1 committed (the whole build kept
-    # its stage), phase 2 wiped
+    # resumed chunked build: chunks 0 and 2 committed (their analysis kept
+    # in the stage), chunk 1's manifest and the body's outputs wiped
     out = str(tmp_path / "resumed")
-    shutil.copytree(whole.paths.root, out)
-    for d in ("term_stats", "blocks"):
+    shutil.copytree(chunked.paths.root, out)
+    for d in ("docs", "postings", "term_stats", "blocks"):
         shutil.rmtree(os.path.join(out, d))
     os.remove(os.path.join(out, "meta.json"))
-    resumed = build_index(spark, corpus, out, resume=True, **MF_KW)
-    assert _blocks(resumed) == want_blocks
-    assert _dictionary(resumed) == want_dict
+    os.remove(os.path.join(out, "_checkpoints", "chunk_1.json"))
+    resumed = build_index(
+        spark, corpus, out, num_chunks=3, resume=True, **MF_KW
+    )
+    assert (_blocks(resumed), _dictionary(resumed), _docs(resumed),
+            _postings(resumed)) == want
     _assert_wand_equals_flat(resumed)
 
 

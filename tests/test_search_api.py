@@ -1,5 +1,7 @@
 """Query parser + full search execution semantics."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -132,6 +134,17 @@ def test_prefix_expansion_constant_score(index):
     ]
     with_term = {r.docid for r in _docs_with_terms(index, terms).collect()}
     assert {r.docid for r in rows} == with_term
+    # the expansion prunes postings buckets: the dictionary side carries
+    # each tid's bucket, so the scan gets a dynamic partition filter
+    # instead of reading every bucket, and the rows are those of the
+    # unpruned tid-only join
+    plan = prefix_query(index, "json")._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"dynamicpruningexpression\(bucket#\d+ IN dynamicpruning", plan)
+    tids = index.term_dictionary().where(F.col("term").startswith("json"))
+    unpruned = index.postings().join(F.broadcast(tids.select("tid")), "tid")
+    assert sorted(r.docid for r in rows) == sorted(
+        r.docid for r in unpruned.select("docid").distinct().collect()
+    )
 
 
 def test_wildcard_and_fuzzy_and_set(index):
