@@ -294,7 +294,6 @@ class Index:
     _dict_lru: object = field(default=None, init=False, repr=False)
     _qr_lru: object = field(default=None, init=False, repr=False)
     _del_state: object = field(default=None, init=False, repr=False)
-    _gen: int = field(default=0, init=False, repr=False)
     _pinned: list = field(default_factory=list, init=False, repr=False)
 
     @classmethod
@@ -324,11 +323,11 @@ class Index:
         against the deletes sidecar while deletes are pending (no plan
         node without them; see `minus_deleted`) — Lucene applies
         liveDocs in one place, the leaf's bulk scorer, for every query.
-        Stats (n_docs/avgdl/df) keep their build-time values, exactly
-        Lucene's behavior with uncommitted deletes (docFreq/maxDoc count
-        deleted docs until segments merge), which also keeps block-max
-        upper bounds valid. Maintenance reads the raw table through
-        `_read(paths.postings)`. With `tids`, only those terms' rows are
+        Stats (n_docs/avgdl/df) keep their values until an expunge,
+        exactly Lucene's behavior with uncommitted deletes (docFreq/maxDoc
+        count deleted docs until segments merge), which also keeps
+        block-max upper bounds valid; expunge writes this view back
+        through the build's body. With `tids`, only those terms' rows are
         scanned (`_pruned`)."""
         return self.minus_deleted(self._pruned(self._read(self.paths.postings), tids))
 
@@ -414,7 +413,6 @@ class Index:
         self._dict_lru = None
         self._qr_lru = None
         self._del_state = None
-        self._gen += 1
         if self._ts_cache is not None:
             try:
                 self._ts_cache.unpersist()
@@ -429,7 +427,6 @@ class Index:
         are stale."""
         self._del_state = None
         self._qr_lru = None
-        self._gen += 1
 
     def term_stats(self) -> DataFrame:
         # the dictionary is hot (every query starts with a term->tid
@@ -904,8 +901,9 @@ def _postings_from_docs(
     INSIDE the 64-bit key — postings/positions keep the exact single-
     field schema and shuffle width except a 4-byte `fid` ordinal the
     block encoder needs for per-field avgdl (dropped at the parquet
-    write; `_tid_clustered` re-derives it from the dictionary); dl_q
-    carries the FIELD's quantized length (per-field norms).
+    write; maintenance re-derives it from the dictionary before the
+    layout exchange); dl_q carries the FIELD's quantized length
+    (per-field norms).
     """
     if not fields:
         return (
@@ -1071,41 +1069,18 @@ def _write_term_stats(df: DataFrame, path: str, num_buckets: int) -> None:
     )
 
 
-def _tid_clustered(
-    postings: DataFrame, dictionary: DataFrame, fields: list[str] | None
-) -> DataFrame:
-    """Postings read back from parquet -> the input `_encode_blocks`
-    needs: every tid in one partition (one exchange on tid; a file split
-    can cut a tid's run), sorted by (tid, docid) within the partition.
-    Maintenance (expunge, merge) re-encodes through it; the build
-    encodes its laid postings directly.
-
-    On a multi-field index the `fid` ordinal (per-field avgdl in the
-    block-max metadata) is not stored — the postings layout stays
-    field-free — so it is derived here from the dictionary's (tid, field):
-    a tid belongs to exactly one field."""
-    if fields:
-        fid = F.array_position(
-            F.array(*[F.lit(f) for f in fields]), F.col("field")
-        ) - F.lit(1)
-        postings = postings.join(
-            dictionary.select("tid", fid.cast("int").alias("fid")), "tid"
-        )
-    parts = int(postings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return postings.repartition(parts, "tid").sortWithinPartitions("tid", "docid")
-
-
 def _encode_blocks(postings: DataFrame, out_path: str, meta: dict) -> DataFrame:
     """The index's one block-encode path — build, expunge and merge.
 
     `postings` must be clustered by tid and sorted by (tid, docid) within
-    each partition, with a `fid` column on multi-field indexes (the
-    build's laid `_bucket_layout` cache, or `_tid_clustered`). Encodes
-    with the one salt rule of `make_block_encoder`, the index's block
-    size (`meta["block_size"]`, absent on default-size indexes) and its
-    avgdl (per field when `meta` has `fields`), writes the blocks to
-    `out_path` in the bucketed layout, and returns the per-term
-    block-max fold (tid, mtp, skips) the dictionary carries."""
+    each partition, with a `fid` column on multi-field indexes: the laid
+    `_bucket_layout` cache of `_write_tables`, so the encode needs no
+    exchange of its own. Encodes with the one salt rule of
+    `make_block_encoder`, the index's block size (`meta["block_size"]`,
+    absent on default-size indexes) and its avgdl (per field when `meta`
+    has `fields`), writes the blocks to `out_path` in the bucketed
+    layout, and returns the per-term block-max fold (tid, mtp, skips)
+    the dictionary carries."""
     fields = meta.get("fields")
     avgdl = (
         [float(meta["avgdl_by_field"][f]) for f in fields]
@@ -1157,6 +1132,101 @@ def _encode_blocks(postings: DataFrame, out_path: str, meta: dict) -> DataFrame:
         )
     )
     return mtp.join(skips, "tid")
+
+
+def _write_tables(
+    paths: IndexPaths,
+    docs: DataFrame,
+    postings: DataFrame,
+    positions: DataFrame | None,
+    meta: dict,
+    persisted: list,
+) -> DataFrame:
+    """First half of the index's one writing body — build, expunge and
+    merge: write `docs`, the postings laid out by one `_bucket_layout`
+    exchange, and `positions` (None: the index keeps none), then record
+    in `meta` the corpus stats of `docs` (n_docs, avgdl, per-field avgdl)
+    and which tables the index has. `postings` is (tid, docid, tf, dl_q)
+    plus, on multi-field indexes, the `fid` ordinal the block encoder
+    needs (dropped at the write). Returns the laid postings, persisted
+    and appended to `persisted` for the caller to release:
+    `_write_dictionary` encodes blocks and aggregates term statistics
+    from them with no exchange of its own."""
+    num_buckets = int(meta["num_buckets"])
+    docs.write.mode("overwrite").parquet(paths.docs)
+    # ONE layout shuffle, reused three times: the `_bucket_layout`
+    # exchange is the SAME distribution the postings write, the df/cttf
+    # term aggregation and the block encode all consume, so it runs once
+    # and is persisted (MEMORY_AND_DISK) instead of being paid as three
+    # separate full-postings shuffles/scans.
+    # NOTE on a rejected "fusion" (round-3, measured on a 200k-doc /
+    # 32-core A/B): deriving postings FROM the laid positions — so a
+    # positions-enabled build pays one token-volume exchange instead
+    # of running the invert too — LOSES on every variant tried:
+    # (a) partition-local run-length via mapInPandas costs a full
+    # positions Arrow round-trip through Python (+47 s vs the +10 s
+    # JVM invert); (b) JVM re-aggregation of the laid/written
+    # positions pays the same exchange volume as the invert PLUS a
+    # 48M-row re-scan (build 45-50 s vs 40.8 s). The invert's
+    # map-side partial agg already shrinks its exchange to postings
+    # volume, so the only duplicated work is a cheap codegen explode
+    # over the cached token arrays. A true single-exchange build
+    # needs NESTED per-(tid,docid) rows shuffled once (positions as
+    # arrays), which changes the on-disk flat layout the phrase path
+    # depends on — not worth it at the measured margins.
+    laid = _bucket_layout(postings, num_buckets, ("tid", "docid")).persist()
+    persisted.append(laid)
+    laid.drop("fid").write.mode("overwrite").partitionBy("bucket").parquet(
+        paths.postings
+    )
+    if positions is not None:
+        _write_bucketed(
+            positions, paths.positions, num_buckets, ("tid", "docid", "pos")
+        )
+    fields = meta.get("fields")
+    n_docs, avgdl, avgdl_by_field = _corpus_stats(docs, fields)
+    meta.update(n_docs=n_docs, avgdl=avgdl)
+    if fields:
+        meta["avgdl_by_field"] = avgdl_by_field
+    # an empty index has no avgdl to encode blocks with
+    meta["has_blocks"] = bool(meta.get("has_blocks") and n_docs)
+    meta["has_positions"] = bool(positions is not None and n_docs)
+    meta["has_payloads"] = bool(meta.get("has_payloads") and meta["has_positions"])
+    return laid
+
+
+def _write_dictionary(
+    spark: SparkSession,
+    paths: IndexPaths,
+    laid: DataFrame,
+    term_dict: DataFrame,
+    meta: dict,
+    t0: float | None = None,
+) -> Index:
+    """Second half of the writing body: the blocks of the laid postings
+    (when `meta["has_blocks"]`), the dictionary — df/cttf aggregated
+    from the laid postings, so a term left with no postings leaves it,
+    joined to `term_dict`'s (tid, term[, field]) — and meta.json, which
+    records the build's wall time since `t0` when given."""
+    num_buckets = int(meta["num_buckets"])
+    block_meta = None
+    if meta["has_blocks"]:
+        # the laid cache is already tid-clustered and (tid, docid)-sorted
+        # with fid riding along, so it feeds the encoder as-is (encode
+        # parallelism = num_buckets * FILES_PER_BUCKET tasks, the
+        # postings-write width; no exchange)
+        block_meta = _encode_blocks(laid, paths.blocks, meta)
+    _write_term_stats(
+        _term_stats(
+            laid, term_dict, int(meta["salt_threshold"]), num_buckets, block_meta
+        ),
+        paths.term_stats, num_buckets,
+    )
+    if t0 is not None:
+        meta["build_seconds"] = round(time.time() - t0, 3)
+    with open(paths.meta, "w") as f:
+        json.dump(meta, f, indent=2)
+    return Index(spark, paths, meta)
 
 
 def build_index(
@@ -1268,7 +1338,9 @@ def _build_index_impl(
     (sort rank over (repo, path, commit)).
 
     One body builds every index: analysis -> docs, the laid postings,
-    positions, dictionary, corpus stats, blocks, term stats. With
+    positions, corpus stats (`_write_tables`), the staged dictionary,
+    then blocks, term stats and meta.json (`_write_dictionary`) — the
+    same body expunge_deletes and merge_indexes write through. With
     `num_chunks > 1` the analysis is the checkpoint: each chunk (docid %
     num_chunks) writes its analyzed docs to `stage/tok_c{chunk}` and
     commits `_checkpoints/chunk_{chunk}.json`; the body then runs once
@@ -1352,72 +1424,16 @@ def _build_index_impl(
         docs_tok = spark.read.parquet(*tok_dirs)
 
     # ---- phase 2: the one body, over the whole analysis ----
-    docs_tok.drop(*_token_cols(docs_tok)).write.mode("overwrite").parquet(
-        paths.docs
-    )
-    # ONE layout shuffle, reused three times: the `_bucket_layout`
-    # exchange is the SAME distribution the postings write, the df/cttf
-    # term aggregation and the block encode all consume, so it runs once
-    # and is persisted (MEMORY_AND_DISK) instead of being paid as three
-    # separate full-postings shuffles/scans.
-    # NOTE on a rejected "fusion" (round-3, measured on a 200k-doc /
-    # 32-core A/B): deriving postings FROM the laid positions — so a
-    # positions-enabled build pays one token-volume exchange instead
-    # of running the invert too — LOSES on every variant tried:
-    # (a) partition-local run-length via mapInPandas costs a full
-    # positions Arrow round-trip through Python (+47 s vs the +10 s
-    # JVM invert); (b) JVM re-aggregation of the laid/written
-    # positions pays the same exchange volume as the invert PLUS a
-    # 48M-row re-scan (build 45-50 s vs 40.8 s). The invert's
-    # map-side partial agg already shrinks its exchange to postings
-    # volume, so the only duplicated work is a cheap codegen explode
-    # over the cached token arrays. A true single-exchange build
-    # needs NESTED per-(tid,docid) rows shuffled once (positions as
-    # arrays), which changes the on-disk flat layout the phrase path
-    # depends on — not worth it at the measured margins.
-    laid = _bucket_layout(
-        _postings_from_docs(docs_tok, fields), num_buckets, ("tid", "docid")
-    ).persist()
-    persisted.append(laid)
-    # the fid ordinal (multi-field) only feeds the in-flight block
-    # encode; on-disk postings keep the field-free schema
-    laid.drop("fid").write.mode("overwrite").partitionBy("bucket").parquet(
-        paths.postings
-    )
-    if build_positions:
-        _write_bucketed(
-            _positions_from_docs(docs_tok, fields), paths.positions,
-            num_buckets, ("tid", "docid", "pos"),
-        )
-    # the dictionary is staged so releasing the analysis below cannot
-    # make the term-stats job re-run it
-    dict_dir = os.path.join(paths.stage, "dict")
-    _term_dict_from_docs(docs_tok, fields).write.mode("overwrite").parquet(
-        dict_dir
-    )
-    n_docs, avgdl, avgdl_by_field = _corpus_stats(docs_tok, fields)
-    docs_tok.unpersist()
-    term_dict = spark.read.parquet(dict_dir).distinct()
-
     meta = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
         "num_buckets": num_buckets,
         "num_salts": num_salts,
         "salt_threshold": salt_threshold,
         "num_chunks": num_chunks,
-        "build_seconds": None,
-        "has_blocks": bool(build_blocks and n_docs),
-        "has_positions": bool(build_positions and n_docs),
-        "has_payloads": bool(
-            build_positions
-            and n_docs
-            and (analyzer or {}).get("delimited_payloads")
-        ),
+        "has_blocks": build_blocks,
+        "has_payloads": bool((analyzer or {}).get("delimited_payloads")),
     }
     if fields:
         meta["fields"] = list(fields)
-        meta["avgdl_by_field"] = avgdl_by_field
     if store_content:
         meta["stored_content"] = True
     if stopwords:
@@ -1430,21 +1446,24 @@ def _build_index_impl(
         # expunge, merge and add re-encode at the build's block size
         meta["block_size"] = int(block_size)
 
-    block_meta = None
-    if meta["has_blocks"]:
-        # the laid cache is already tid-clustered and (tid, docid)-sorted
-        # with fid riding along, so it feeds the encoder as-is (encode
-        # parallelism = num_buckets * FILES_PER_BUCKET tasks, the
-        # postings-write width; no exchange)
-        block_meta = _encode_blocks(laid, paths.blocks, meta)
-    _write_term_stats(
-        _term_stats(laid, term_dict, salt_threshold, num_buckets, block_meta),
-        paths.term_stats, num_buckets,
+    laid = _write_tables(
+        paths,
+        docs_tok.drop(*_token_cols(docs_tok)),
+        _postings_from_docs(docs_tok, fields),
+        _positions_from_docs(docs_tok, fields) if build_positions else None,
+        meta,
+        persisted,
     )
-    laid.unpersist()
-    meta["build_seconds"] = round(time.time() - t0, 3)
-    with open(paths.meta, "w") as f:
-        json.dump(meta, f, indent=2)
+    # the dictionary is staged so releasing the analysis below cannot
+    # make the term-stats job re-run it
+    dict_dir = os.path.join(paths.stage, "dict")
+    _term_dict_from_docs(docs_tok, fields).write.mode("overwrite").parquet(
+        dict_dir
+    )
+    docs_tok.unpersist()
+    index = _write_dictionary(
+        spark, paths, laid, spark.read.parquet(dict_dir).distinct(), meta, t0
+    )
     if not keep_stage:
         shutil.rmtree(paths.stage, ignore_errors=True)
-    return Index(spark, paths, meta)
+    return index

@@ -1,4 +1,4 @@
-"""Index maintenance: delete-by-query (liveDocs) + expungeDeletes.
+"""Index maintenance: delete-by-query (liveDocs) + expungeDeletes + merge.
 
 The reference deletes documents through the update log
 (solr/core/src/java/org/apache/solr/update/DirectUpdateHandler2.java
@@ -12,14 +12,14 @@ merge (forceMerge / expungeDeletes). The Spark shape:
   anti-join while the sidecar is small), and — faithful to Lucene —
   corpus statistics keep their build-time values until the index is
   compacted, so block-max metadata stays a valid upper bound.
-- `expunge_deletes` is the merge: rewrite postings/docs/positions
-  without the deleted rows (same bucketed layout), re-encode block-max
-  blocks from the live postings through the build's own encode path
-  (`builder._encode_blocks`: one salt rule, per-field avgdl on
-  multi-field indexes, so the rebuild needs no staged state), refresh
-  the dictionary's mtp/skips columns, and clear the sidecar. Statistics
-  stay build-time (expungeDeletes semantics); a stats refresh is a
-  rebuild — `sources.snapshots.build_index_versioned` is that path.
+- `expunge_deletes` and `merge_indexes` are the merge: like Lucene,
+  which writes a merged segment through the same codec as a flushed
+  one, they write through the build's own body
+  (`builder._write_tables` + `builder._write_dictionary`): one layout
+  exchange of the postings, blocks encoded from it, and statistics
+  (n_docs, avgdl, df, cttf) recomputed from the live rows — a merged
+  segment's docFreq and maxDoc count only its live docs. A term whose
+  every doc was deleted leaves the dictionary.
 
 While deletes are pending, WAND leaves its threshold T0 unseeded (the
 metadata seed counts deleted docs, so a live doc below it could be
@@ -31,31 +31,25 @@ expunge restores the seeded threshold.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.index.builder import (
     Index,
     IndexPaths,
-    _corpus_stats,
-    _encode_blocks,
-    _term_stats,
-    _tid_clustered,
-    _write_bucketed,
-    _write_term_stats,
+    _write_dictionary,
+    _write_tables,
 )
 
-
 def delete_by_ids(index: Index, docids: list[int]) -> int:
-    """Mark docids deleted (idempotent; unknown ids are harmless).
-    Returns the number of NEWLY deleted ids. The explicit-id API — the
-    delete set is caller-bounded, so a driver-side list is fine here;
-    set-valued deletes go through `delete_by_df`/`delete_by_query`,
-    which never collect."""
+    """Mark docids deleted (idempotent; ids the index does not hold are
+    ignored). Returns the number of NEWLY deleted ids. The explicit-id
+    API — the delete set is caller-bounded, so a driver-side list is
+    fine here; set-valued deletes go through `delete_by_df`/
+    `delete_by_query`, which never collect."""
     spark = index.spark
     ids = sorted({int(d) for d in docids})
     if not ids:
@@ -65,14 +59,22 @@ def delete_by_ids(index: Index, docids: list[int]) -> int:
 
 
 def delete_by_df(index: Index, docids_df: DataFrame) -> int:
-    """Mark every docid in `docids_df` deleted; returns the count of
-    NEWLY deleted ids. Fully distributed: the matched set is published
-    straight to the deletes sidecar (snapshots.publish takes the
-    DataFrame), never collected to the driver — a delete matching 100M
-    docs stays executor-side (round-4 scale finding)."""
+    """Mark every docid in `docids_df` that the index holds deleted;
+    returns the count of NEWLY deleted ids. Fully distributed: the
+    matched set is published straight to the deletes sidecar
+    (snapshots.publish takes the DataFrame), never collected to the
+    driver — a delete matching 100M docs stays executor-side (round-4
+    scale finding)."""
     from solr_spark.sources.snapshots import publish
 
-    batch = index.minus_deleted(docids_df.select("docid").distinct()).persist()
+    # the docs' docid column semi-joined with the batch: a docid the
+    # index does not hold never reaches the sidecar (it would count as
+    # deleted in numDocs and unseed WAND's threshold), and the docs side
+    # is unique, so no distinct is needed
+    held = index.docs().select("docid").join(
+        docids_df.select("docid"), "docid", "left_semi"
+    )
+    batch = index.minus_deleted(held).persist()
     try:
         n = batch.count()
         if n:
@@ -112,79 +114,90 @@ def _swap_dir(new_dir: str, live_dir: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _tables(index: Index, offset: int = 0) -> list[DataFrame | None]:
+    """The live docs, postings and positions (None when the index keeps
+    none) of `index` with docids shifted by `offset`, plus its (tid,
+    term[, field]) dictionary: the inputs maintenance writes through
+    `_write_index`."""
+
+    def shifted(df: DataFrame) -> DataFrame:
+        if not offset:
+            return df
+        return df.withColumn("docid", F.col("docid") + F.lit(offset))
+
+    key_cols = ["field", "term"] if index.meta.get("fields") else ["term"]
+    return [
+        shifted(index.docs_live()),
+        shifted(index.postings()),
+        shifted(index.positions()) if index.meta.get("has_positions") else None,
+        index.term_stats().select("tid", *key_cols),
+    ]
+
+
+def _write_index(
+    spark: SparkSession, paths: IndexPaths, tables: list, meta: dict
+) -> Index:
+    """Write an index at `paths` from (docs, postings, positions, terms)
+    through the build's body, with `meta`'s config. On a multi-field
+    index the postings first take the `fid` ordinal the block encoder
+    needs (per-field avgdl) from the dictionary's (tid, field) — a tid
+    belongs to exactly one field — so the one layout exchange carries
+    it, as the build's does."""
+    docs, postings, positions, terms = tables
+    fields = meta.get("fields")
+    if fields:
+        fid = F.array_position(
+            F.array(*[F.lit(f) for f in fields]), F.col("field")
+        ) - F.lit(1)
+        postings = postings.join(
+            terms.select("tid", fid.cast("int").alias("fid")), "tid"
+        )
+    persisted: list[DataFrame] = []
+    try:
+        laid = _write_tables(paths, docs, postings, positions, meta, persisted)
+        return _write_dictionary(spark, paths, laid, terms, meta)
+    finally:
+        for df in persisted:
+            df.unpersist()
+
+
 def expunge_deletes(index: Index) -> dict:
     """Physically drop deleted docs (expungeDeletes / the merge step).
 
-    Compacts postings, docs and positions (anti-join + the original
-    bucketed layout), re-encodes blocks from the live postings and
-    refreshes the dictionary's block-max summary (single- and
-    multi-field indexes alike), then clears the deletes sidecar, so
-    repeated expunges are no-ops. Returns a report dict.
-    """
-    paths = index.paths
+    Writes the index's live views through the build's body into a
+    sibling root — postings, docs and positions in the bucketed layout,
+    blocks, and a dictionary and corpus stats counted over the live docs
+    only — then swaps each table and meta.json into place, clears the
+    deletes sidecar and gives the handle the new meta, so repeated
+    expunges are no-ops. Returns a report dict: `expunged` is the number
+    of docs removed."""
     report: dict = {"expunged": 0}
     if not index.has_deletes():
         return report
-    report["expunged"] = index.deleted_ids().count()
-    num_buckets = int(index.meta["num_buckets"])
-
-    # the live views are the compacted tables
-    tmp_post = paths.postings + ".compact"
-    _write_bucketed(index.postings(), tmp_post, num_buckets, ("tid", "docid"))
-    _swap_dir(tmp_post, paths.postings)
-
-    tmp_docs = paths.docs + ".compact"
-    index.docs_live().write.mode("overwrite").parquet(tmp_docs)
-    _swap_dir(tmp_docs, paths.docs)
-
-    if index.meta.get("has_positions") and os.path.isdir(paths.positions):
-        tmp_pos = paths.positions + ".compact"
-        _write_bucketed(
-            index.positions(), tmp_pos, num_buckets, ("tid", "docid", "pos")
-        )
-        _swap_dir(tmp_pos, paths.positions)
-
-    # the swapped dirs invalidate any memoized table handles NOW, not
-    # just at the end — later steps must list the new files
-    index._df_cache.clear()
-
-    if index.meta.get("has_blocks"):
-        _reencode_blocks(index)
-        report["blocks_reencoded"] = True
-
-    shutil.rmtree(paths.deletes, ignore_errors=True)
-    # the rewritten files (dictionary mtp/skips included) invalidate
-    # every handle cache: the commit-opens-a-new-searcher analogue
-    index.invalidate_caches()
-    return report
-
-
-def _reencode_blocks(index: Index) -> None:
-    """Rebuild blocks + the dictionary's (mtp, skips) columns from the
-    COMPACTED postings through the build's encode path. Salting follows
-    the live run length (the one salt rule), not the build-time
-    `is_head` flag; no query path reads either — `salt` is an opaque
-    part of the block key — so results do not change. Statistics (df,
-    avgdl) stay build-time, as expungeDeletes leaves them."""
-    spark = index.spark
     paths = index.paths
-    ts = spark.read.parquet(paths.term_stats)
-    tmp_blocks = paths.blocks + ".compact"
-    fold = _encode_blocks(
-        _tid_clustered(
-            spark.read.parquet(paths.postings), ts, index.meta.get("fields")
-        ),
-        tmp_blocks, index.meta,
-    )
-    # the fold reads the new blocks, so the dictionary is rewritten
-    # before either directory swaps into place
-    tmp_ts = paths.term_stats + ".compact"
-    _write_term_stats(
-        ts.drop("mtp", "skips").join(fold, "tid", "left"),
-        tmp_ts, int(index.meta["num_buckets"]),
-    )
-    _swap_dir(tmp_blocks, paths.blocks)
-    _swap_dir(tmp_ts, paths.term_stats)
+    n_before = index.docs().count()  # a parquet footer read
+    tmp = IndexPaths(os.path.normpath(paths.root) + ".expunge")
+    shutil.rmtree(tmp.root, ignore_errors=True)
+    new = _write_index(index.spark, tmp, _tables(index), dict(index.meta))
+    # a table the rewritten index does not keep (the blocks of an
+    # emptied index) is removed
+    for name in ("docs", "postings", "positions", "blocks", "term_stats"):
+        src, live = os.path.join(tmp.root, name), os.path.join(paths.root, name)
+        if os.path.isdir(src):
+            _swap_dir(src, live)
+        else:
+            shutil.rmtree(live, ignore_errors=True)
+    os.replace(tmp.meta, paths.meta)
+    shutil.rmtree(tmp.root, ignore_errors=True)
+    shutil.rmtree(paths.deletes, ignore_errors=True)
+    # the rewritten files invalidate every handle cache: the
+    # commit-opens-a-new-searcher analogue
+    index.meta = new.meta
+    index.invalidate_caches()
+    report["expunged"] = n_before - new.meta["n_docs"]
+    if new.meta["has_blocks"]:
+        report["blocks_reencoded"] = True
+    return report
 
 
 def merge_indexes(a: Index, b: Index, out_root: str) -> Index:
@@ -197,17 +210,16 @@ def merge_indexes(a: Index, b: Index, out_root: str) -> Index:
     the same BM25 results and blocks as build(whole), single- and
     multi-field).
 
-    Scale shape: postings/docs/positions are UNIONS written back in the
-    original bucketed layout (one shuffle each, no corpus re-tokenize);
-    the dictionary is recomputed from a postings aggregation
-    (vocabulary-sized); blocks re-encode from the merged postings
-    through the build's encode path when either input had them. tid =
-    xxhash64([field,] term) is content-derived, so the two dictionaries
-    agree by construction.
+    Scale shape: the union of the inputs' docs, postings and positions
+    is written through the build's body (no corpus re-tokenize): one
+    layout exchange of the postings feeds their write, the block encode
+    (when either input had blocks) and the dictionary's df/cttf. Term
+    strings (and fields) come from the union of the input dictionaries:
+    tid = xxhash64([field,] term) is content-derived, so the two agree
+    by construction.
 
     Pending deletes must be expunged first (deleted docs would leak
     through the union)."""
-    spark = a.spark
     for side in (a, b):
         if side.has_deletes():
             raise ValueError("merge_indexes: expunge_deletes first")
@@ -215,10 +227,6 @@ def merge_indexes(a: Index, b: Index, out_root: str) -> Index:
         if a.meta.get(key) != b.meta.get(key):
             raise ValueError(f"merge_indexes: index config differs ({key})")
 
-    paths = IndexPaths(out_root)
-    os.makedirs(out_root, exist_ok=True)
-    num_buckets = int(a.meta["num_buckets"])
-    fields = a.meta.get("fields")
     # the shift must clear a's ACTUAL docid space, not its live count:
     # expunge/merge compact rows without renumbering docids, so after
     # an expunged input max(docid) exceeds n_docs-1 and an n_docs-based
@@ -227,73 +235,23 @@ def merge_indexes(a: Index, b: Index, out_root: str) -> Index:
     offset = int(
         a.docs().agg(F.max("docid").alias("m")).collect()[0]["m"]
     ) + 1
-
-    def shifted(df: DataFrame) -> DataFrame:
-        return df.withColumn("docid", F.col("docid") + F.lit(offset))
-
-    merged_post = a._read(a.paths.postings).unionByName(
-        shifted(b._read(b.paths.postings))
-    )
-    _write_bucketed(merged_post, paths.postings, num_buckets, ("tid", "docid"))
-
-    a.docs().unionByName(shifted(b.docs())).write.mode("overwrite").parquet(
-        paths.docs
-    )
-
-    has_positions = bool(
-        a.meta.get("has_positions") and b.meta.get("has_positions")
-    )
-    if has_positions:
-        _write_bucketed(
-            a._read(a.paths.positions).unionByName(
-                shifted(b._read(b.paths.positions))
-            ),
-            paths.positions, num_buckets, ("tid", "docid", "pos"),
-        )
-
-    n_docs, avgdl, avgdl_by_field = _corpus_stats(
-        spark.read.parquet(paths.docs), fields
-    )
+    tables = [
+        None if x is None or y is None else x.unionByName(y)
+        for x, y in zip(_tables(a), _tables(b, offset))
+    ]
+    tables[3] = tables[3].distinct()  # a term in both dictionaries
     meta = dict(a.meta)
     meta.update(
         {
-            "n_docs": n_docs,
-            "avgdl": avgdl,
             "num_chunks": 1,
-            "has_positions": has_positions,
             "has_blocks": bool(
                 a.meta.get("has_blocks") or b.meta.get("has_blocks")
             ),
             "merged_from": [a.paths.root, b.paths.root],
         }
     )
-    if fields:
-        meta["avgdl_by_field"] = avgdl_by_field
     meta.pop("build_seconds", None)
-
-    # dictionary: exact df/cttf from the merged postings; term strings
-    # (and fields) from the union of the input dictionaries (tid-keyed)
-    key_cols = ["field", "term"] if fields else ["term"]
-    terms = (
-        a.term_stats().select("tid", *key_cols)
-        .unionByName(b.term_stats().select("tid", *key_cols))
-        .distinct()
-    )
-    post = spark.read.parquet(paths.postings)
-    block_meta = None
-    if meta["has_blocks"]:
-        block_meta = _encode_blocks(
-            _tid_clustered(post, terms, fields), paths.blocks, meta
-        )
-    _write_term_stats(
-        _term_stats(
-            post, terms, int(meta["salt_threshold"]), num_buckets, block_meta
-        ),
-        paths.term_stats, num_buckets,
-    )
-    with open(paths.meta, "w") as f:
-        json.dump(meta, f, indent=2)
-    return Index(spark, paths, meta)
+    return _write_index(a.spark, IndexPaths(out_root), tables, meta)
 
 
 def backup_index(index: Index, backup_root: str, name: str) -> str:
@@ -316,7 +274,7 @@ def backup_index(index: Index, backup_root: str, name: str) -> str:
     os.makedirs(tmp)
     for entry in os.listdir(src):
         s = os.path.join(src, entry)
-        if entry == "stage" or entry.endswith((".old", ".compact", ".inprogress")):
+        if entry == "stage" or entry.endswith((".old", ".inprogress")):
             continue
         if os.path.isdir(s):
             shutil.copytree(s, os.path.join(tmp, entry))

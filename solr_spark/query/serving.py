@@ -11,8 +11,8 @@ cores. This module closes the gap for a SERVING workload:
   the Solr queryResultCache analogue
   (solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:123-124
   caches a DocList window keyed by (query, sort, filters); a commit
-  opens a new searcher with cold caches — here maintenance ops bump the
-  handle generation, invalidating entries).
+  opens a new searcher with cold caches — here maintenance ops drop the
+  handle's result LRU, `Index._qr_lru`).
 - `QueryBatcher` — a driver-side leader/follower micro-batcher:
   concurrent `search()` callers enqueue; a background loop drains the
   queue every `max_wait_ms` and executes the whole wave as ONE
@@ -78,8 +78,9 @@ def bm25_search(
     The interactive serving call: identical results to
     `bm25_topk(...).collect()`, but a repeated (qtext, k, mode, field)
     is served driver-side with zero Spark jobs. Maintenance ops
-    (deletes, expunge, merge) invalidate via the handle generation, so
-    a cached result never survives an index mutation."""
+    (deletes, expunge, merge) drop the handle's result LRU
+    (`Index._qr_lru`), so a cached result never survives an index
+    mutation."""
     key = (qtext, int(k), mode, field)
     if use_cache:
         hit = _qr_get(index, key)

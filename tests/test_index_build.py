@@ -3,6 +3,7 @@
 import glob
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +25,26 @@ def index(spark, corpus, tmp_path_factory):
     return build_index(
         spark, corpus, out, num_buckets=4, salt_threshold=100, num_salts=4
     )
+
+
+#: the config of `pos_index`: blocks and positions
+POS_KW = dict(
+    num_buckets=4, salt_threshold=100, num_salts=4, build_blocks=True,
+    build_positions=True,
+)
+
+
+@pytest.fixture(scope="module")
+def pos_index(spark, corpus, tmp_path_factory):
+    """A blocks + positions index; the deletes tests mutate copies."""
+    out = str(tmp_path_factory.mktemp("pos_idx") / "index")
+    return build_index(spark, corpus, out, **POS_KW)
+
+
+def _copy(idx, dst):
+    """An independent copy of a built index, for tests that mutate it."""
+    shutil.copytree(idx.paths.root, dst)
+    return Index.load(idx.spark, dst)
 
 
 def test_corpus_deterministic(spark, corpus):
@@ -302,7 +323,7 @@ def test_bm25_batch_matches_single(spark, index):
             assert got.get(qid, []) == want, (mode, qid)
 
 
-def test_delete_by_query_and_expunge(spark, corpus, tmp_path):
+def test_delete_by_query_and_expunge(spark, corpus, pos_index, tmp_path):
     """liveDocs contract: delete_by_query removes docs from every query
     path (flat, WAND-guarded, phrase) while keeping build-time stats;
     expunge_deletes compacts the segments, re-encodes blocks, clears the
@@ -313,11 +334,7 @@ def test_delete_by_query_and_expunge(spark, corpus, tmp_path):
     from solr_spark.query.engine import bm25_topk
     from solr_spark.query.wand import bm25_topk_wand
 
-    out = str(tmp_path / "delidx")
-    idx = build_index(
-        spark, corpus, out, num_buckets=4, salt_threshold=100,
-        num_salts=4, build_blocks=True, build_positions=True,
-    )
+    idx = _copy(pos_index, str(tmp_path / "delidx"))
     before = [r["docid"] for r in bm25_topk(idx, "return import", k=10).collect()]
     assert before
     victims = before[:3]
@@ -365,6 +382,90 @@ def test_delete_by_query_and_expunge(spark, corpus, tmp_path):
           for r in bm25_topk(idx, "return import", k=10).collect()]
     assert dbg2.get("path") != "flat_deletes" and w2 == f2
     assert w2 and not {d for d, _ in w2} & deleted_all
+
+
+def test_delete_unknown_ids_is_a_noop(index, tmp_path):
+    """Docids the index does not hold never reach the deletes sidecar:
+    numDocs, WAND's threshold seed and expunge see no phantom deletes."""
+    from solr_spark.index.maintenance import delete_by_ids, expunge_deletes
+
+    idx = _copy(index, str(tmp_path / "unknown"))
+    assert delete_by_ids(idx, [10**9, 10**9 + 1]) == 0
+    assert not idx.has_deletes()
+    assert expunge_deletes(idx) == {"expunged": 0}
+    # a mixed batch deletes only the held id, and expunge removes one doc
+    assert delete_by_ids(idx, [0, 10**9]) == 1
+    assert expunge_deletes(idx)["expunged"] == 1
+    assert idx.meta["n_docs"] == idx.docs().count() == N_DOCS - 1
+
+
+def test_expunge_equals_fresh_build(spark, corpus, pos_index, tmp_path):
+    """expunge_deletes(delete(build(C), D)) == build(C minus D): top-k
+    (flat and WAND) mapped through the (repo, path, commit) keys,
+    phrase hits, n_docs, avgdl and the dictionary's df/cttf. D holds
+    every doc of one term, which then leaves the dictionary, so WAND
+    serves a query naming it on the driver with its metadata seed."""
+    from solr_spark.index.builder import DOC_KEY
+    from solr_spark.index.maintenance import delete_by_ids, expunge_deletes
+    from solr_spark.query.engine import bm25_scores, bm25_topk
+    from solr_spark.query.positions import phrase_docids
+    from solr_spark.query.wand import bm25_topk_wand
+
+    idx = _copy(pos_index, str(tmp_path / "x"))
+    term = idx.term_stats().orderBy("df", "term").first()["term"]
+    gone = {r["docid"] for r in bm25_scores(idx, term).select("docid").collect()}
+    gone |= set(range(0, N_DOCS, 9))
+    key_of = {
+        r["docid"]: tuple(r[k] for k in DOC_KEY)
+        for r in idx.docs().select("docid", *DOC_KEY).collect()
+    }
+    assert delete_by_ids(idx, sorted(gone)) == len(gone)
+    assert expunge_deletes(idx)["expunged"] == len(gone)
+
+    gone_keys = spark.createDataFrame(
+        [key_of[d] for d in gone], ", ".join(f"{k} string" for k in DOC_KEY)
+    )
+    fresh = build_index(
+        spark, corpus.join(gone_keys, list(DOC_KEY), "left_anti"),
+        str(tmp_path / "fresh"), **POS_KW,
+    )
+    fresh_key = {
+        r["docid"]: tuple(r[k] for k in DOC_KEY)
+        for r in fresh.docs().select("docid", *DOC_KEY).collect()
+    }
+
+    assert idx.meta["n_docs"] == fresh.meta["n_docs"] == N_DOCS - len(gone)
+    assert idx.meta["avgdl"] == fresh.meta["avgdl"]
+
+    def dictionary(i):
+        return sorted(
+            (r["term"], r["df"], r["cttf"])
+            for r in i.term_stats().select("term", "df", "cttf").collect()
+        )
+
+    assert dictionary(idx) == dictionary(fresh)
+    assert idx.term_stats_for([term]) == {}
+
+    def topk(fn, i, keys, q, **kw):
+        return [(keys[r["docid"]], round(r["score"], 9))
+                for r in fn(i, q, k=12, **kw).collect()]
+
+    for q in ("return import", "jsonParser bufferSize", "return",
+              f"return {term}"):
+        want = topk(bm25_topk, fresh, fresh_key, q)
+        assert want and topk(bm25_topk, idx, key_of, q) == want, q
+        dbg = {}
+        assert topk(bm25_topk_wand, idx, key_of, q, debug=dbg) == want, q
+        assert dbg["path"] == "driver", (q, dbg)
+
+    def phrase(i, keys):
+        return sorted(
+            (keys[r["docid"]], r["phrase_freq"])
+            for r in phrase_docids(i, ["json", "parser"]).collect()
+        )
+
+    want = phrase(fresh, fresh_key)
+    assert want and phrase(idx, key_of) == want
 
 
 def test_merge_indexes_equals_whole_build(spark, tmp_path):
